@@ -16,12 +16,14 @@ In this sandbox the same file runs against the synthetic fixture:
     spark-submit --master 'local[8]' --py-files dist/proj_spark.zip \
         jobs/geolocate.py --sf-dir /root/testdata/sf0.001 --out /tmp/geo_out
 
-Pipeline per bucket (all JVM-side until the one Arrow crossing):
+Pipeline (all JVM-side until the one Arrow crossing):
 pages(url, warc_ts, html, text, lang) -> regex coordinate extraction ->
-domain filter -> webmerc tile (z configurable) + S2 L12 cell -> parquet,
-committed per hash-bucket of url through CheckpointedJob (kill-and-rerun
-resumable; per-bucket lineage + metrics in the manifest, the Iceberg
-snapshot-summary analogue — see proj_spark/checkpoint.py).
+domain filter -> webmerc tile (z configurable) + S2 L12 cell -> parquet.
+CheckpointedJob runs it once over every pending hash-bucket of url and
+commits the buckets one by one (kill-and-rerun resumable; per-bucket
+lineage + metrics in the manifest, the Iceberg snapshot-summary analogue —
+see proj_spark/checkpoint.py). The S2 step is a per-row map that keeps
+url, as CheckpointedJob requires.
 
 The job NEVER calls .collect() on data: the driver only reads the manifest.
 """
@@ -78,7 +80,7 @@ def main(argv=None) -> int:
       FROM extracted
       WHERE lat IS NOT NULL AND ABS(lat) <= 85.06D AND ABS(lon) <= 180.0D""")
 
-    def add_s2(bucket_df):
+    def add_s2(df):
         from pyspark.sql import functions as F
         from proj_spark.kernels import s2cell
 
@@ -87,7 +89,7 @@ def main(argv=None) -> int:
             return pd.Series(s2cell.lonlat_to_cell(
                 lon.to_numpy(np.float64), lat.to_numpy(np.float64), 12))
 
-        return bucket_df.withColumn("s2_cell", cell12("lon", "lat"))
+        return df.withColumn("s2_cell", cell12("lon", "lat"))
 
     job = CheckpointedJob("geolocate", args.out, args.buckets, key_col="url",
                           job_desc=f"extract+webmerc z{z}+s2 L12")

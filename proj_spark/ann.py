@@ -46,9 +46,10 @@ def hyperplane_lsh_plan(n_vecs: int, recall_sim: float = 0.95,
     # clamp band_agree into (0, 1): recall_sim=1.0 gives p=1 (log(0)
     # domain error — exact duplicates always collide, a handful of bands
     # suffice), and a loose contract (low recall_sim at large bits)
-    # underflows p**bits toward 0.0 (log(1-0)=0 -> ZeroDivisionError)
+    # underflows p**bits toward 0.0; log1p keeps the denominator nonzero
+    # where 1 - band_agree would round to exactly 1.0
     band_agree = min(max(p ** bits, 1e-300), 1.0 - 1e-12)
-    bands = max(4, math.ceil(math.log(miss) / math.log(1.0 - band_agree)))
+    bands = max(4, math.ceil(math.log(miss) / math.log1p(-band_agree)))
     # the OR-construction cost is bands*N keys, so a contract this bit
     # width cannot honor at sane cost (e.g. recall at near-random cosine,
     # where exact sizing wants millions of bands) fails LOUDLY instead of

@@ -1,24 +1,24 @@
 """Resumable per-partition checkpointing with lineage + metrics.
 
-North-rule requirement: jobs over the pages table must be "resumable from
-per-partition checkpoints with lineage + metrics recorded per Iceberg
-snapshot". This container has no Iceberg catalog, so the same contract is
-implemented over a parquet directory tree with an explicit JSON manifest —
-the manifest entry is exactly what an Iceberg snapshot summary would carry
-(snapshot-per-bucket commit; swap `_commit_bucket` for `df.writeTo(...)
-.append()` + snapshot properties on a real catalog).
+Jobs over the pages table must be "resumable from per-partition checkpoints
+with lineage + metrics recorded per Iceberg snapshot". Without an Iceberg
+catalog the contract is kept over a parquet tree plus a JSON manifest whose
+per-bucket entry is what a snapshot summary would carry (on a real catalog,
+swap the rename in ``run`` for ``df.writeTo(...).append()``).
 
-Model: the input keyspace is split into ``n_buckets`` deterministic hash
-buckets (``pmod(xxhash64(key), n)``). Each bucket is processed
-independently and committed atomically (tmp dir -> rename). A rerun skips
-committed buckets, so kill-and-rerun converges to the single-run output —
-asserted by tests/test_checkpoint.py including an order-independent
-xor-of-row-hashes fingerprint.
+Rows hash to ``n_buckets`` buckets (``pmod(xxhash64(key), n)``). One ``run``
+takes all pending buckets through one scan (an Observation counts input rows
+per bucket), one ``transform``, one bucket-partitioned write to
+``_pending.tmp`` and one read-back for per-bucket output rows and
+xor-of-row-hashes, then commits them one at a time: rename
+``_pending.tmp/_bucket=b`` -> ``bucket=b``, save its manifest entry (rows
+in/out, output hash, wall_s = wall time of the pass that committed it,
+input_path, code_version). A rerun skips committed buckets and clobbers
+leftover uncommitted files, so kill-and-rerun equals a single run.
 
-Manifest entry per bucket (lineage + metrics):
-  bucket, input_rows, output_rows, output_xor_hash, wall_s,
-  input_path, code_version (git-free content hash of the job closure's
-  description), committed_at_monotonic
+``transform`` must be a per-row map (0..n output rows per input row) of
+the DataFrame it is given that keeps ``key_col``; ``run`` raises ValueError
+before writing if its output lacks ``key_col`` or has a ``_bucket`` column.
 """
 
 from __future__ import annotations
@@ -29,7 +29,9 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class CheckpointedJob:
@@ -65,55 +67,53 @@ class CheckpointedJob:
 
     def run(self, input_df: DataFrame, transform, input_path: str = "",
             max_buckets: int | None = None) -> int:
-        """Process every not-yet-committed bucket. ``transform`` maps a
-        bucket DataFrame -> output DataFrame. ``max_buckets`` limits how
-        many buckets to process this invocation (used by the kill-and-rerun
-        test; a real job dying mid-bucket leaves only an uncommitted tmp
-        dir, which the rerun clobbers). Returns #buckets processed."""
-        bucket_col = F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets))
-        keyed = input_df.withColumn("_bucket", bucket_col)
-        done = self.completed_buckets()
-        processed = 0
-        for b in range(self.n_buckets):
-            if b in done:
-                continue
-            if max_buckets is not None and processed >= max_buckets:
-                break
-            self._run_bucket(keyed, transform, b, input_path)
-            processed += 1
-        return processed
-
-    def _run_bucket(self, keyed: DataFrame, transform, b: int, input_path: str):
+        """Process the not-yet-committed buckets (the first ``max_buckets``
+        of them, if given) in one pass. Returns #buckets committed."""
+        pending = sorted(set(range(self.n_buckets))
+                         - self.completed_buckets())[:max_buckets]
+        if not pending:
+            return 0
         t0 = time.monotonic()
-        part = keyed.filter(F.col("_bucket") == b).drop("_bucket")
-        in_rows = part.count()
-        out = transform(part)
-        final_dir = os.path.join(self.out_dir, f"bucket={b}")
-        tmp_dir = final_dir + ".tmp"
-        if os.path.exists(tmp_dir):
-            shutil.rmtree(tmp_dir)  # leftover from a killed run
-        out.write.mode("overwrite").parquet(tmp_dir)
-        # metrics over the committed files (read back => exactly what a
-        # resumed consumer will see)
-        spark = out.sparkSession
-        written = spark.read.parquet(tmp_dir)
-        stats = written.agg(
-            F.count("*").alias("rows"),
-            F.bit_xor(F.xxhash64(*written.columns)).alias("xh")).collect()[0]
-        if os.path.exists(final_dir):
-            shutil.rmtree(final_dir)
-        os.replace(tmp_dir, final_dir)  # atomic commit (Iceberg snapshot analogue)
+        bucket_col = F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets))
+        keyed = (input_df.withColumn("_bucket", bucket_col)
+                 .filter(F.col("_bucket").isin(pending)))
+        in_rows = Observation()
+        out = transform(keyed.observe(in_rows, *[
+            F.count_if(F.col("_bucket") == b).alias(str(b)) for b in pending])
+            .drop("_bucket"))
+        if self.key_col not in out.columns or "_bucket" in out.columns:
+            raise ValueError(f"transform output must keep {self.key_col!r} and "
+                             f"have no '_bucket' column; got {out.columns}")
+        tmp_dir = os.path.join(self.out_dir, "_pending.tmp")
+        shutil.rmtree(tmp_dir, ignore_errors=True)  # leftover from a killed run
+        staged = out.withColumn("_bucket", bucket_col)
+        staged.write.partitionBy("_bucket").parquet(tmp_dir)
+        # hash the files as a resumed consumer reads them; the explicit
+        # schema skips a schema-inference job
+        written = out.sparkSession.read.schema(staged.schema).parquet(tmp_dir)
+        stats = {r[0]: (r[1], r[2]) for r in written.groupBy("_bucket").agg(
+            F.count("*"), F.bit_xor(F.xxhash64(*out.columns))).collect()}
+        counts = in_rows.get
+        wall_s = round(time.monotonic() - t0, 3)
         m = self._load_manifest()
-        m["buckets"][str(b)] = {
-            "bucket": b,
-            "input_rows": in_rows,
-            "output_rows": int(stats["rows"]),
-            "output_xor_hash": int(stats["xh"]) if stats["xh"] is not None else 0,
-            "wall_s": round(time.monotonic() - t0, 3),
-            "input_path": input_path,
-            "code_version": self.code_version,
-        }
-        self._save_manifest(m)
+        for b in pending:
+            part_dir = os.path.join(tmp_dir, f"_bucket={b}")
+            if b not in stats:  # no output rows: commit an empty file
+                os.makedirs(part_dir)
+                pq.write_table(to_arrow_schema(out.schema).empty_table(),
+                               os.path.join(part_dir, "part-00000-empty.parquet"))
+            final_dir = os.path.join(self.out_dir, f"bucket={b}")
+            shutil.rmtree(final_dir, ignore_errors=True)
+            os.replace(part_dir, final_dir)  # atomic commit (Iceberg snapshot analogue)
+            rows, xh = stats.get(b, (0, 0))
+            m["buckets"][str(b)] = {
+                "bucket": b, "input_rows": int(counts[str(b)]),
+                "output_rows": int(rows), "output_xor_hash": int(xh),
+                "wall_s": wall_s, "input_path": input_path,
+                "code_version": self.code_version}
+            self._save_manifest(m)
+        shutil.rmtree(tmp_dir)
+        return len(pending)
 
     # -- read -------------------------------------------------------------
 

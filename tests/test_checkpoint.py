@@ -85,3 +85,85 @@ def test_rerun_is_noop_when_complete(spark, tmp_path):
                           job_desc="v1")
     assert job.run(pages, _transform) == 2
     assert job.run(pages, _transform) == 0
+
+
+def test_empty_bucket_commits(spark, tmp_path):
+    """A pending bucket whose rows the transform all drops still commits:
+    an empty parquet with the output schema, output_rows 0, hash 0."""
+    pages = _pages(spark)
+
+    def drop_bucket_1(df):
+        return _transform(df.filter(F.pmod(F.xxhash64("url"), F.lit(3)) != 1))
+
+    job = CheckpointedJob("e", str(tmp_path / "e"), n_buckets=3, key_col="url",
+                          job_desc="v1")
+    assert job.run(pages, drop_bucket_1) == 3
+    b1 = job.metrics()["buckets"]["1"]
+    assert b1["input_rows"] > 0
+    assert (b1["output_rows"], b1["output_xor_hash"]) == (0, 0)
+    assert spark.read.parquet(str(tmp_path / "e" / "bucket=1")).count() == 0
+    got = job.read_output(spark)
+    assert got.columns == ["url", "h", "feat"]
+    assert _fingerprint(got) == _fingerprint(drop_bucket_1(pages))
+
+
+def test_rerun_clobbers_crash_leftovers(spark, tmp_path):
+    """State a kill leaves behind: a half-written _pending.tmp, and a
+    bucket dir renamed into place whose manifest entry was never saved."""
+    pages = _pages(spark)
+    ref = CheckpointedJob("ref", str(tmp_path / "ref"), n_buckets=6,
+                          key_col="url", job_desc="v1")
+    ref.run(pages, _transform)
+    want = _fingerprint(ref.read_output(spark))
+
+    out = tmp_path / "crashed"
+    job = CheckpointedJob("c", str(out), n_buckets=6, key_col="url",
+                          job_desc="v1")
+    assert job.run(pages, _transform, max_buckets=2) == 2
+    pending = sorted(set(range(6)) - job.completed_buckets())
+    # a valid parquet of the wrong rows: counted if it were not clobbered
+    shutil.copytree(out / f"bucket={min(job.completed_buckets())}",
+                    out / f"bucket={pending[0]}")
+    junk = out / "_pending.tmp" / f"_bucket={pending[1]}"
+    junk.mkdir(parents=True)
+    (junk / "part-00000.parquet").write_bytes(b"not parquet")
+    (out / "_pending.tmp" / "_SUCCESS").write_bytes(b"")
+
+    rerun = CheckpointedJob("c", str(out), n_buckets=6, key_col="url",
+                            job_desc="v1")
+    assert rerun.run(pages, _transform) == 4
+    assert not (out / "_pending.tmp").exists()
+    assert _fingerprint(rerun.read_output(spark)) == want
+
+
+def test_one_pass_job_count_independent_of_buckets(spark, tmp_path):
+    """All pending buckets share one scan, one write and one read-back, so
+    the number of Spark jobs does not grow with n_buckets."""
+    pages = _pages(spark)
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for n in (2, 6):
+            group = f"ckpt_jobs_{n}"
+            sc.setJobGroup(group, "checkpoint job count")
+            job = CheckpointedJob("j", str(tmp_path / f"j{n}"), n_buckets=n,
+                                  key_col="url", job_desc="v1")
+            assert job.run(pages, _transform) == n
+            jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs[2] == jobs[6] > 0
+
+
+@pytest.mark.parametrize("bad", [
+    lambda df: _transform(df).drop("url"),
+    lambda df: _transform(df).withColumn("_bucket", F.lit(0)),
+], ids=["drops_key_col", "has_bucket_col"])
+def test_transform_contract_violation_commits_nothing(spark, tmp_path, bad):
+    out = tmp_path / "bad"
+    job = CheckpointedJob("b", str(out), n_buckets=2, key_col="url",
+                          job_desc="v1")
+    with pytest.raises(ValueError, match="url"):
+        job.run(_pages(spark), bad)
+    assert job.completed_buckets() == set()
+    assert list(out.iterdir()) == []

@@ -155,6 +155,10 @@ def test_plan_boundary_contracts():
     assert bands == 4 and bits >= 14
     with pytest.raises(ValueError, match="unachievable"):
         hyperplane_lsh_plan(10**9, recall_sim=0.1)
+    # p**bits below ~1e-16: 1 - band_agree rounds to 1.0, so the band
+    # count must come from log1p, not log(1 - x) = 0
+    with pytest.raises(ValueError, match="unachievable"):
+        hyperplane_lsh_plan(1_000, recall_sim=-0.99)
     # default contract at the 100 TB corpus scale stays achievable
     bands, bits = hyperplane_lsh_plan(10**12)
     assert bands <= 10_000 and bits == 44
