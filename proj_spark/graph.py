@@ -13,8 +13,9 @@ component map (every node points at its component's minimum id).
 Scale notes (100 TB): each round shuffles the current edge set keyed by
 node — no broadcast, no driver-side state besides the convergence
 checksum (2 longs). Lineage is truncated every round with an eager
-localCheckpoint; without it the plan doubles per iteration and the
-convergence-check actions re-execute the whole history. Duplicate
+localCheckpoint; without it the plan doubles per iteration. The checksum
+is observed (an unnamed Observation after the round's final distinct)
+inside that checkpoint action, so a round is ONE Spark action. Duplicate
 clusters shrink the edge set monotonically toward one edge per non-root
 node, so later rounds are cheaper than earlier ones. Skew: a mega-cluster
 (boilerplate page duplicated everywhere) turns into a hot root key; the
@@ -24,45 +25,39 @@ to one row per partition before the shuffle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def _canon(edges: DataFrame) -> DataFrame:
     """Drop self-loops, order every edge (hi, lo), dedup."""
-    return (edges.select(F.greatest("u", "v").alias("u"),
-                         F.least("u", "v").alias("v"))
-                 .filter(F.col("u") != F.col("v"))
-                 .distinct())
+    return (edges.selectExpr("greatest(u, v) AS u", "least(u, v) AS v")
+                 .where("u != v").distinct())
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """(v, m) for every neighbor v > u, where m = min(N(u) + {u})."""
-    sym = edges.unionByName(edges.select(F.col("v").alias("u"),
-                                         F.col("u").alias("v")))
-    mins = (sym.groupBy("u")
-               .agg(F.least(F.min("v"), F.first("u")).alias("m")))
-    return (sym.join(mins, "u")
-               .filter(F.col("v") > F.col("u"))
-               .select(F.col("v").alias("u"), F.col("m").alias("v")))
+    sym = edges.unionByName(edges.selectExpr("v AS u", "u AS v"))
+    mins = sym.groupBy("u").agg(F.expr("least(min(v), first(u)) AS m"))
+    return sym.join(mins, "u").where("v > u").selectExpr("v AS u", "m AS v")
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
     """(v, m) for every neighbor v <= u plus (u, m), m = min(N<=(u) + {u})."""
     ordered = _canon(edges)  # (u, v) with v < u
-    mins = ordered.groupBy("u").agg(F.min("v").alias("m"))
-    moved = (ordered.join(mins, "u")
-                    .select(F.col("v").alias("u"), F.col("m").alias("v")))
-    roots = mins.select(F.col("u"), F.col("m").alias("v"))
-    return moved.unionByName(roots)
+    mins = ordered.groupBy("u").agg(F.expr("min(v) AS m"))
+    moved = ordered.join(mins, "u").selectExpr("v AS u", "m AS v")
+    return moved.unionByName(mins.selectExpr("u", "m AS v"))
 
 
-def _checksum(edges: DataFrame) -> tuple:
-    """Order-insensitive fingerprint of the edge set (one tiny action)."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
+def _checkpoint(edges: DataFrame) -> tuple:
+    """Materialize the canonical edge set; its order-insensitive
+    fingerprint (count, xxhash64 sum) is observed in the same action."""
+    obs = Observation()
+    cur = _canon(edges).observe(
+        obs, F.expr("count(1) AS n"),
+        F.expr("sum(CAST(xxhash64(u, v) AS DECIMAL(38,0))) AS h"),
+    ).localCheckpoint(eager=True)
+    return cur, tuple(obs.get.values())
 
 
 def connected_components(nodes: DataFrame, edges: DataFrame,
@@ -71,19 +66,19 @@ def connected_components(nodes: DataFrame, edges: DataFrame,
 
     nodes: one column ``id`` (long) — every vertex, including isolated ones.
     edges: columns ``u``, ``v`` (long) — undirected pair list.
-    Returns (id, component); isolated nodes map to themselves.
+    Returns (id, component); isolated nodes map to themselves. Raises
+    RuntimeError if the edge set has not converged after ``max_rounds``.
     """
-    cur = _canon(edges).localCheckpoint(eager=True)
-    prev_sum = _checksum(cur)
+    cur, prev_sum = _checkpoint(edges)
     for _ in range(max_rounds):
-        cur = _canon(_small_star(_large_star(cur))).localCheckpoint(eager=True)
-        cur_sum = _checksum(cur)
+        cur, cur_sum = _checkpoint(_small_star(_large_star(cur)))
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_rounds={max_rounds}")
     # at convergence every edge is (member, root); roots map to themselves
-    membership = cur.select(F.col("u").alias("id"),
-                            F.col("v").alias("component"))
+    membership = cur.selectExpr("u AS id", "v AS component")
     return (nodes.join(membership, "id", "left")
-                 .select("id",
-                         F.coalesce("component", "id").alias("component")))
+                 .selectExpr("id", "coalesce(component, id) AS component"))

@@ -99,8 +99,8 @@ _sh_sets_cached: dict = {}
 
 def ensure_sh_sets_view(spark, sf_dir: str | None = None) -> None:
     """Materialize the distinct (doc_id, shingle) set behind a cache
-    barrier. One minhash query references the shingle relation FOUR times
-    (minhash agg, sizes, both sides of the exact-verify join); with the
+    barrier. One minhash query references the shingle relation THREE times
+    (minhash agg, both sides of the exact-verify join); with the
     CTE inlined, Catalyst recomputes the explode + distinct per reference.
     The cached InMemoryRelation computes it once per session — the same
     role a materialized shingle table plays in a production pipeline.
@@ -142,6 +142,20 @@ MINHASH_AB = (
 )
 
 
+# SQL text shared by minhash_pairs_df and minhash_lsh_sql, so the DataFrame
+# and SQL spellings cannot drift apart: the 16 permutation minimums, the 4
+# band keys (4 consecutive minimums each) and the 60-bit base hash (first
+# 15 md5 hex chars as BIGINT, the parse spelling the only dialect
+# difference) reduced mod P once.
+_MINHASH_MINS = [f"MIN(({a} * v + {b}) % {MINHASH_P}) AS mh{p}"
+                 for p, (a, b) in enumerate(MINHASH_AB)]
+_BAND_KEYS = ["concat_ws('|', " + ", ".join(f"mh{4 * b + r}" for r in range(4))
+              + ")" for b in range(4)]
+_HASHED_V = {
+    "spark": f"CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P} AS v",
+    "duck": f"CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % {MINHASH_P} AS v"}
+
+
 def minhash_pairs_df(spark):
     """ENGINE-side MinHash->LSH->verify as a DataFrame chain over the
     cached shingle view (ensure_sh_sets_view first). Same logical
@@ -152,40 +166,32 @@ def minhash_pairs_df(spark):
     from inside a CTE recomputes the full shingle pipeline from parquet
     (measured: 0 InMemoryTableScan, 18 raw scans, ~2x the wall).
     DataFrame references to spark.table(view) substitute correctly —
-    the four consumers (minhash agg, sizes, both verify sides) all read
-    the one InMemoryRelation."""
+    the three consumers (minhash agg, both verify sides) all read the one
+    InMemoryRelation. Each document's distinct-shingle count n is a
+    COUNT(*) inside the MinHash aggregate and rides the band rows into the
+    candidates as _n1/_n2 (no separate sizes aggregate). Expressions are
+    SQL text: one Py4J call each instead of one per Column operation."""
     from pyspark.sql import functions as F
 
     sh = spark.table(SH_SETS_VIEW)
-    v = (F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("long")
-         % MINHASH_P).alias("v")
-    hashed = sh.select("doc_id", v)
-    minhash = hashed.groupBy("doc_id").agg(*[
-        F.min((F.lit(a) * F.col("v") + F.lit(b)) % MINHASH_P).alias(f"mh{p}")
-        for p, (a, b) in enumerate(MINHASH_AB)])
-    bkeys = [F.concat_ws("|", *[F.col(f"mh{4 * b + r}").cast("string")
-                                for r in range(4)])
-             for b in range(4)]
-    bands = minhash.select(
-        "doc_id", F.posexplode(F.array(*bkeys)).alias("band", "bkey"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bkey") == F.col("b.bkey"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("id1"),
-                     F.col("b.doc_id").alias("id2"))
-             .distinct())
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    s1 = sh.select(F.col("doc_id").alias("id1"), "sh")
-    s2 = sh.select(F.col("doc_id").alias("id2"), "sh")
-    inter = (cand.join(s1, "id1").join(s2, ["id2", "sh"])
-                 .groupBy("id1", "id2").agg(F.count("*").alias("ni")))
-    n1 = sizes.select(F.col("doc_id").alias("id1"), F.col("n").alias("_n1"))
-    n2 = sizes.select(F.col("doc_id").alias("id2"), F.col("n").alias("_n2"))
-    jac = F.col("ni") / (F.col("_n1") + F.col("_n2") - F.col("ni"))
-    return (inter.join(n1, "id1").join(n2, "id2")
-                 .filter(jac >= 0.5)
-                 .select("id1", "id2", F.round(jac, 6).alias("jaccard")))
+    minhash = (sh.selectExpr("doc_id", _HASHED_V["spark"]).groupBy("doc_id")
+                 .agg(*[F.expr(e) for e in _MINHASH_MINS + ["COUNT(*) AS n"]]))
+    bands = minhash.selectExpr(
+        "doc_id", "n", f"posexplode(array({', '.join(_BAND_KEYS)})) AS (band, bkey)")
+    cand = (bands.alias("a")
+                 .join(bands.alias("b"), F.expr(
+                     "a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id"))
+                 .selectExpr("a.doc_id AS id1", "b.doc_id AS id2",
+                             "a.n AS _n1", "b.n AS _n2")
+                 .distinct())
+    s1 = sh.selectExpr("doc_id AS id1", "sh")
+    s2 = sh.selectExpr("doc_id AS id2", "sh")
+    jac = "ni / (_n1 + _n2 - ni)"
+    return (cand.join(s1, "id1").join(s2, ["id2", "sh"])
+                .groupBy("id1", "id2", "_n1", "_n2")
+                .agg(F.expr("COUNT(*) AS ni"))
+                .where(f"{jac} >= 0.5")
+                .selectExpr("id1", "id2", f"ROUND({jac}, 6) AS jaccard"))
 
 
 def minhash_lsh_sql(dialect: str, cached_view: str | None = None) -> str:
@@ -220,37 +226,23 @@ def minhash_lsh_sql(dialect: str, cached_view: str | None = None) -> str:
     else:
         shingle_with = f"{DUP_DOCS_CTE}, {WORDS_DUCK}, {SHINGLES_CTE}"
         sh_tbl, set_tbl = "shingles", "sh_sets"
-    # 60-bit base hash of the shingle: first 15 hex chars of md5, parsed
-    # to BIGINT (both engines produce identical lowercase md5 hex; the
-    # parse spelling is the only dialect difference), reduced mod P once
-    if dialect == "spark":
-        base = "CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)"
-    else:
-        base = "CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT)"
-    mins = ", ".join(
-        f"MIN(({a} * v + {b}) % {MINHASH_P}) AS mh{p}"
-        for p, (a, b) in enumerate(MINHASH_AB))
-    hashed = (f"hashed AS (SELECT doc_id, {base} % {MINHASH_P} AS v "
-              f"FROM {sh_tbl})")
-    bkeys = [
-        "concat_ws('|', " + ", ".join(f"mh{4 * b + r}" for r in range(4)) + ")"
-        for b in range(4)]
+    hashed = f"hashed AS (SELECT doc_id, {_HASHED_V[dialect]} FROM {sh_tbl})"
     if dialect == "spark":
         bands = f"""
 bands AS (
   SELECT doc_id, b.band, b.bkey
   FROM minhash
-  LATERAL VIEW posexplode(array({", ".join(bkeys)})) b AS band, bkey
+  LATERAL VIEW posexplode(array({", ".join(_BAND_KEYS)})) b AS band, bkey
 )"""
     else:
         bands = "bands AS (" + "\n  UNION ALL ".join(
             f"SELECT doc_id, {b} AS band, {k} AS bkey FROM minhash"
-            for b, k in enumerate(bkeys)) + ")"
+            for b, k in enumerate(_BAND_KEYS)) + ")"
     with_head = f"WITH {shingle_with},\n" if shingle_with else "WITH "
     return f"""
 {with_head}{hashed},
 minhash AS (
-  SELECT doc_id, {mins}
+  SELECT doc_id, {", ".join(_MINHASH_MINS)}
   FROM hashed
   GROUP BY doc_id
 ),

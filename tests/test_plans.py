@@ -9,6 +9,8 @@ regression here silently turns a map-side plan into a shuffle at scale.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from proj_spark.session import get_spark
@@ -159,23 +161,27 @@ def test_embedding_near_dup_bucket_cap_equivalent(spark, monkeypatch):
 
 
 def test_minhash_single_pass_agg(spark):
-    """All 16 MinHash permutation minimums are one hash aggregation over
-    the raw shingles (Functions [16], with map-side partial_min), band
-    keys are projections, and candidate generation stays an equi-join —
-    the cross-join-with-permutations shape (16x shuffle volume, two
-    aggregations) must not come back."""
+    """All 16 MinHash permutation minimums and the shingle count are one
+    hash aggregation over the raw shingles (Functions [17], with map-side
+    partial_min), band keys are projections, and candidate generation
+    stays an equi-join — the cross-join-with-permutations shape (16x
+    shuffle volume, two aggregations) must not come back."""
     df = querylib.QUERIES["minhash_lsh_pairs"](spark, SF)
     plan = plan_of(df)
-    assert "Functions [16]" in plan
+    assert "Functions [17]" in plan
     assert "partial_min" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     # BIGINT minhash values keep the agg a HashAggregate — min(string)
     # buffers would force SortAggregate (a full sort of every shingle row)
     assert "SortAggregate" not in plan
-    # the four shingle consumers must read the one cached relation, not
+    # the shingle consumers must read the one cached relation, not
     # re-derive shingles from parquet (CTE references defeat the cache)
     assert "InMemoryTableScan" in plan
+    # no separate per-document sizes aggregate (it added one scan for n1
+    # and one for n2): the cached relation is scanned by the MinHash agg
+    # on each side of the band self-join and by the two verify sides
+    assert len(re.findall(r"^\(\d+\) InMemoryTableScan", plan, re.M)) == 4
 
 
 def test_decontam_probe_is_broadcast(spark):
