@@ -1,4 +1,5 @@
-"""Real grid-file readers: NTv2 (.gsb), GTX (.gtx), CTable2 (.ct2).
+"""Real grid-file readers: NTv2 (.gsb), GTX (.gtx), CTable2 (.ct2), GTiff,
+and the engine's own node parquet.
 
 Parses the three classic PROJ datum-shift raster formats with numpy
 ``frombuffer`` — no external libs. Layouts follow the reference's readers
@@ -21,6 +22,17 @@ Parses the three classic PROJ datum-shift raster formats with numpy
   south, resX, resY doubles in RADIANS at offset 96; width/height int32 at
   128); data from offset 160 as float32 (lon shift, lat shift) pairs in
   radians, row-major from the south row, lon positive-west (negated here).
+- **GTiff**: PROJ-convention Geodetic TIFF Grids (see the reader below).
+- **Node parquet** (``PAR1`` magic): one row per node with int64 ``r``
+  (row, 0 = south) and ``c`` (column, 0 = west) and one float64 column per
+  band — ``dlon_as``/``dlat_as`` (arcsec, east-positive), ``dz`` (metres).
+  The header lives in the file's key-value metadata under
+  ``proj_spark.grid`` as JSON: ``lon0``/``lat0`` (degrees of node (0, 0)),
+  ``dlon``/``dlat`` (degrees), ``width``/``height`` (nodes), ``bands``
+  (column -> unit), ``lon_positive`` ("east") and ``row0`` ("south"). The
+  driver queries export their file-backed grids in this form for the
+  DuckDB oracles (``write_node_parquet``); a node parquet with no header
+  is refused, never opened with a guessed one.
 
 All loaded grids expose the same ``interp(lon_deg, lat_deg) ->
 (dlon_arcsec_east_positive, dlat_arcsec, dz_m)`` interface as the
@@ -36,10 +48,13 @@ join form instead (querylib.raster_join_shift).
 
 from __future__ import annotations
 
+import json
 import os
 import struct
 
 import numpy as np
+
+from .errors import INVALID_OP_FILE_NOT_FOUND_OR_INVALID, ProjError
 
 _SEC2DEG = 1.0 / 3600.0
 _RAD2AS = 3600.0 * 180.0 / np.pi
@@ -439,6 +454,74 @@ def parse_ctable2(data: bytes, name: str = "ct2") -> FileGrid:
                     width, height, dlon_as=lon_as, dlat_as=lat_as)
 
 
+# node-parquet band column -> (FileGrid attribute, unit)
+_NODE_BANDS = {"dlon_as": ("dlon_as", "arcsec"),
+               "dlat_as": ("dlat_as", "arcsec"),
+               "dz": ("dz_m", "m")}
+_NODE_HEADER_KEY = b"proj_spark.grid"
+
+
+def write_node_parquet(g: FileGrid, path: str) -> None:
+    """FileGrid -> node parquet (format in the module docstring)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    rr, cc = np.mgrid[0:g.height, 0:g.width]
+    cols = {"r": rr.ravel().astype(np.int64), "c": cc.ravel().astype(np.int64)}
+    units = {}
+    for col, (attr, unit) in _NODE_BANDS.items():
+        band = getattr(g, attr)
+        if band is not None:
+            cols[col] = band.ravel().astype(np.float64)
+            units[col] = unit
+    header = {"lon0": g.lon0, "lat0": g.lat0, "dlon": g.dlon, "dlat": g.dlat,
+              "width": g.width, "height": g.height, "bands": units,
+              "lon_positive": "east", "row0": "south"}
+    table = pa.table(cols).replace_schema_metadata(
+        {_NODE_HEADER_KEY: json.dumps(header)})
+    pq.write_table(table, path)
+
+
+def parse_node_parquet(data: bytes, name: str = "nodes") -> FileGrid:
+    """Node parquet -> FileGrid; the header comes only from the file's
+    metadata, and every node of the width x height raster must be present
+    exactly once."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    pf = pq.ParquetFile(pa.BufferReader(data))
+    raw = (pf.metadata.metadata or {}).get(_NODE_HEADER_KEY)
+    if raw is None:
+        raise ValueError("node parquet has no grid header metadata")
+    try:
+        hdr = json.loads(raw)
+        width, height = int(hdr["width"]), int(hdr["height"])
+        geo = [float(hdr[k]) for k in ("lon0", "lat0", "dlon", "dlat")]
+        bands = dict(hdr["bands"])
+    except (KeyError, TypeError, ValueError) as e:
+        raise ValueError(f"bad node parquet grid header: {e}") from e
+    if hdr.get("lon_positive") != "east" or hdr.get("row0") != "south":
+        raise ValueError("node parquet must be east-positive, row 0 south")
+    for col, unit in bands.items():
+        if _NODE_BANDS.get(col, (None, None))[1] != unit:
+            raise ValueError(f"unsupported node band {col!r} in {unit!r}")
+    t = pf.read(columns=["r", "c", *bands])
+    r = t["r"].to_numpy()
+    c = t["c"].to_numpy()
+    flat = r * width + c
+    if (width <= 0 or height <= 0 or not bands
+            or t.num_rows != width * height
+            or r.min() < 0 or r.max() >= height
+            or c.min() < 0 or c.max() >= width
+            or np.unique(flat).size != flat.size):
+        raise ValueError(f"node parquet does not cover its {width}x{height} "
+                         "raster exactly once")
+    out = {}
+    for col in bands:
+        arr = np.empty(width * height)
+        arr[flat] = t[col].to_numpy()
+        out[_NODE_BANDS[col][0]] = arr.reshape(height, width)
+    return FileGrid(name, *geo, width, height, **out)
+
+
 # ---------------------------------------------------------------------------
 # resolver
 # ---------------------------------------------------------------------------
@@ -458,6 +541,23 @@ def register_grid_file(name: str, path: str) -> None:
     search path)."""
     _REGISTERED_PATHS[name] = path
     _FILE_GRID_CACHE.pop(name, None)
+
+
+def resolve_data_file(name: str) -> str:
+    """Resolve a grid/model file name against registered paths + search
+    path (reference FileManager::open_resource_file)."""
+    path = _REGISTERED_PATHS.get(name)
+    if path is not None and os.path.isfile(path):
+        return path
+    if os.path.isabs(name) and os.path.isfile(name):
+        return name  # explicit absolute path wins over the search path
+    base = os.path.basename(name)
+    for d in grid_search_path():
+        for cand in (os.path.join(d, name), os.path.join(d, base)):
+            if os.path.isfile(cand):
+                return cand
+    raise ProjError(f"cannot open {name!r} (search path {grid_search_path()})",
+                    INVALID_OP_FILE_NOT_FOUND_OR_INVALID)
 
 
 class NullGrid(FileGrid):
@@ -485,24 +585,15 @@ def load_grid_file(name: str):
         return NullGrid()
     if name in _FILE_GRID_CACHE:
         return _FILE_GRID_CACHE[name]
-    path = _REGISTERED_PATHS.get(name)
-    if path is None and os.path.isabs(name) and os.path.isfile(name):
-        path = name  # explicit absolute path wins over the search path
-    if path is None:
-        base = os.path.basename(name)
-        for d in grid_search_path():
-            for cand in (os.path.join(d, name), os.path.join(d, base)):
-                if os.path.isfile(cand):
-                    path = cand
-                    break
-            if path:
-                break
-    if path is None or not os.path.isfile(path):
+    try:
+        path = resolve_data_file(name)
+    except ProjError:
+        # an unresolved name stays a KeyError for the callers that fall
+        # back on it (optional @grids, vertical-CRS geoid candidates)
         raise KeyError(f"grid file {name!r} not found "
-                       f"(search path {grid_search_path()})")
+                       f"(search path {grid_search_path()})") from None
     with open(path, "rb") as f:
         data = f.read()
-    from .errors import ProjError, INVALID_OP_FILE_NOT_FOUND_OR_INVALID
     try:
         if data.startswith(b"CTABLE V2"):
             g = parse_ctable2(data, name)
@@ -512,6 +603,8 @@ def load_grid_file(name: str):
             g = parse_ntv2(data, name)
         elif data[:2] in (b"II", b"MM"):
             g = parse_gtiff(data, name)
+        elif data.startswith(b"PAR1"):
+            g = parse_node_parquet(data, name)
         elif name.endswith(".gtx") or len(data) >= 40 and _looks_gtx(data):
             g = parse_gtx(data, name)
         else:

@@ -11,29 +11,11 @@ PROJ_SPARK_GRID_PATH search (the engine's PROJ_LIB analogue).
 from __future__ import annotations
 
 import json
-import os
 
 import numpy as np
 
 from ..errors import (INVALID_OP_FILE_NOT_FOUND_OR_INVALID, ProjError)
-from ..gridfiles import grid_search_path, _REGISTERED_PATHS
-
-
-def resolve_data_file(name: str) -> str:
-    """Resolve a data-file name against registered paths + search path
-    (reference FileManager::open_resource_file)."""
-    path = _REGISTERED_PATHS.get(name)
-    if path is not None and os.path.isfile(path):
-        return path
-    if os.path.isabs(name) and os.path.isfile(name):
-        return name  # explicit absolute path wins over the search path
-    base = os.path.basename(name)
-    for d in grid_search_path():
-        for cand in (os.path.join(d, name), os.path.join(d, base)):
-            if os.path.isfile(cand):
-                return cand
-    raise ProjError(f"cannot open {name!r} (search path {grid_search_path()})",
-                    INVALID_OP_FILE_NOT_FOUND_OR_INVALID)
+from ..gridfiles import resolve_data_file
 
 
 def _load_json(name: str, want_file_type: str) -> dict:

@@ -1270,21 +1270,17 @@ depoints AS (
 """
 
 
-def _export_grid_parquet(g, path: str, bands: dict) -> None:
-    """Write (r, c, <band>...) node parquet for a FileGrid, atomically,
-    once (driver-side only — never at module import, so executor re-imports
+def _export_grid_parquet(g, path: str) -> None:
+    """Write a FileGrid's node parquet (nodes plus header metadata, the
+    format ``gridfiles.load_grid_file`` also opens), atomically, once
+    (driver-side only — never at module import, so executor re-imports
     stay side-effect free)."""
     if os.path.exists(path):
         return
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    rr, cc = np.mgrid[0:g.height, 0:g.width]
-    cols = {"r": rr.ravel().astype(np.int64), "c": cc.ravel().astype(np.int64)}
-    for name, band in bands.items():
-        cols[name] = band.ravel().astype(np.float64)
+    from .gridfiles import write_node_parquet
     tmp = f"{path}.tmp.{os.getpid()}"
-    pq.write_table(pa.table(cols), tmp)
+    write_node_parquet(g, tmp)
     os.replace(tmp, path)
 
 
@@ -1350,8 +1346,7 @@ FROM wcells
         the operator's shift (see q_hgridshift_fwd note); the grid object
         ships to executors by closure capture — one broadcast per job."""
         from pyspark.sql import functions as F
-        _export_grid_parquet(_BETA, _BETA_NODES,
-                             {"dlon_as": _BETA.dlon_as, "dlat_as": _BETA.dlat_as})
+        _export_grid_parquet(_BETA, _BETA_NODES)
         df = _sql_points(spark, DE_POINTS_CTE, "depoints")
         g = _BETA
 
@@ -1384,7 +1379,7 @@ FROM wcells
         GTXVerticalShiftGrid grids.cpp:242-362): ellipsoidal -> orthometric
         (z - N), default multiplier -1 (vgridshift.cpp)."""
         from pyspark.sql import functions as F
-        _export_grid_parquet(_EGM96, _EGM96_NODES, {"dz": _EGM96.dz_m})
+        _export_grid_parquet(_EGM96, _EGM96_NODES)
         df = _sql_points(spark, DE_POINTS_CTE, "depoints")
         g = _EGM96
 
@@ -1418,7 +1413,7 @@ FROM wcells
         from pyspark.sql import functions as F
         from .crs import create_crs_to_crs
         from .gridfiles import register_grid_file
-        _export_grid_parquet(_EGM96, _EGM96_NODES, {"dz": _EGM96.dz_m})
+        _export_grid_parquet(_EGM96, _EGM96_NODES)
         register_grid_file("egm96_15.gtx", _EGM96_GTX)
         fwd = create_crs_to_crs("EPSG:4326+5773", "EPSG:4979")
         df = _sql_points(spark, DE_POINTS_CTE, "depoints")
@@ -2793,12 +2788,8 @@ UNION ALL
         oracle replays each region against its own parquet-ized CTable2
         nodes — different grids, one query."""
         from pyspark.sql import functions as F
-        _export_grid_parquet(_CONUS, _CONUS_NODES,
-                             {"dlon_as": _CONUS.dlon_as,
-                              "dlat_as": _CONUS.dlat_as})
-        _export_grid_parquet(_ALASKA, _ALASKA_NODES,
-                             {"dlon_as": _ALASKA.dlon_as,
-                              "dlat_as": _ALASKA.dlat_as})
+        _export_grid_parquet(_CONUS, _CONUS_NODES)
+        _export_grid_parquet(_ALASKA, _ALASKA_NODES)
         gset = gs.get_grid("@conus,@alaska")
         df = _sql_points(spark, NA_POINTS_CTE, "napoints")
 
@@ -3085,12 +3076,8 @@ UNION ALL
         (a point retries iff it is outside the CAwest subgrid's true
         extent) and replays each winner's bilinear from node parquet."""
         from pyspark.sql import functions as F
-        _export_grid_parquet(_CAWEST, _CAWEST_NODES,
-                             {"dlon_as": _CAWEST.dlon_as,
-                              "dlat_as": _CAWEST.dlat_as})
-        _export_grid_parquet(_CONUS, _CONUS_NODES,
-                             {"dlon_as": _CONUS.dlon_as,
-                              "dlat_as": _CONUS.dlat_as})
+        _export_grid_parquet(_CAWEST, _CAWEST_NODES)
+        _export_grid_parquet(_CONUS, _CONUS_NODES)
         d = _nad27_retry_dispatcher()
         df = _sql_points(spark, RETRY_PTS_CTE, "rpts")
 

@@ -5,6 +5,11 @@ Mirrors the reference's own test harness, which stages select grids from
 (reference data/CMakeLists.txt:77-105 — e.g. ``egm96_15_downsampled.gtx``
 is installed as ``egm96_15.gtx`` and ``ntv2_0_downsampled.gsb`` as
 ``ntv2_0.gsb`` in the ``for_tests`` directory).
+
+Without the reference tree, ``BETA2007.gsb`` (the grid of
+``+datum=potsdam``) is served from the in-repo node parquet
+``testgrids/beta2007_nodes.parquet``, which holds the same nodes and
+header; the real file wins whenever it is present.
 """
 
 import os
@@ -22,3 +27,9 @@ for _name, _file in (("egm96_15.gtx", "egm96_15_downsampled.gtx"),
     _p = os.path.join(_REF_DATA, "tests", _file)
     if os.path.isfile(_p):
         register_grid_file(_name, _p)
+
+_BETA_GSB = os.path.join(_REF_DATA, "tests", "BETA2007.gsb")
+if not os.path.isfile(_BETA_GSB):
+    register_grid_file("BETA2007.gsb", os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "testgrids", "beta2007_nodes.parquet"))
