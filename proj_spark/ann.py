@@ -6,7 +6,8 @@ the rule exactly. This module supplies the production path on top of the
 same plan shape: spherical k-means centroids trained on a BOUNDED sample
 (driver-side Lloyd iterations over at most `max_sample` vectors — at
 100 TB the sample, not the table, bounds driver memory), then the usual
-broadcast-centroids / one-shuffle-on-bucket / n-probe / exact-rerank IVF.
+closure-shipped centroids / one-shuffle-on-bucket / n-probe /
+exact-rerank IVF.
 
 Everything is deterministic: sampling is `vec_id % m == 0`, init is the
 first k sample vectors, ties in assignment break on lowest centroid id —
@@ -19,6 +20,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
+
+from .session import local_df
 
 
 def hyperplane_lsh_plan(n_vecs: int, recall_sim: float = 0.95,
@@ -111,9 +114,10 @@ def train_centroids(emb: DataFrame, k: int, iters: int = 8,
 
 
 def centroid_df(spark, cents: np.ndarray) -> DataFrame:
-    """Centroids as a broadcast-able (cid, cv, cnorm) DataFrame."""
+    """Centroids as a JVM-local (cid, cv, cnorm) DataFrame
+    (``LocalTableScan``), small enough to broadcast."""
     rows = [(int(i), [float(v) for v in c]) for i, c in enumerate(cents)]
-    df = spark.createDataFrame(rows, "cid long, cv array<double>")
+    df = local_df(spark, rows, "cid long, cv array<double>")
     return df.withColumn("cnorm", F.sqrt(F.aggregate(
         "cv", F.lit(0.0), lambda a, x: a + x * x)))
 
@@ -136,31 +140,31 @@ def ivf_topk(spark, emb: DataFrame, cents, k: int = 5,
              vec_col: str = "embedding",
              sim_round: int | None = None,
              query_cap: int = 51200) -> DataFrame:
-    """IVF top-k: centroids broadcast as a numpy matrix -> nearest-centroid
-    bucket per vector computed MAP-SIDE (vectorized pandas UDF: one matmul
-    per Arrow batch, no shuffle, bucket carried with v/norm so no join-back)
-    -> queries probe their `nprobe` nearest buckets -> one shuffle on cid
-    (AQE splits hot buckets) -> exact cosine rerank over candidates only.
-    Returns (qid, nid, sim, rank). Ties break on lowest cid (stable argsort
-    over cid-ordered rows), matching train_centroids' determinism."""
+    """IVF top-k: centroids ride the UDF closures as a numpy matrix ->
+    nearest-centroid bucket per vector computed MAP-SIDE (vectorized
+    pandas UDF: one matmul per Arrow batch, no shuffle, bucket carried
+    with v/norm so no join-back) -> queries probe their `nprobe` nearest
+    buckets -> one shuffle on cid (AQE splits hot buckets) -> exact cosine
+    rerank over candidates only. Returns (qid, nid, sim, rank). Ties break
+    on lowest cid (stable argsort over cid-ordered rows), matching
+    train_centroids' determinism."""
     from pyspark.sql.functions import pandas_udf
 
-    cmat = _unit_matrix(cents)
-    bc = spark.sparkContext.broadcast(cmat)
+    cmat = _unit_matrix(cents)  # (k, dim), rides the UDF closures
 
     @pandas_udf("long")
     def assign_cid(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=np.int64)
         x = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        return pd.Series(np.argmax(x @ bc.value.T, axis=1).astype(np.int64))
+        return pd.Series(np.argmax(x @ cmat.T, axis=1).astype(np.int64))
 
     @pandas_udf("array<long>")
     def probe_cids(vs: pd.Series) -> pd.Series:
         if len(vs) == 0:
             return pd.Series([], dtype=object)
         x = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        order = np.argsort(-(x @ bc.value.T), axis=1, kind="stable")
+        order = np.argsort(-(x @ cmat.T), axis=1, kind="stable")
         return pd.Series(list(order[:, :nprobe].astype(np.int64)))
 
     e = _normalized(emb, vec_col)

@@ -1,12 +1,14 @@
 """Spatial joins: point-in-polygon and kNN, Spark-native.
 
 PIP (north rule): a **cell-prefix hash join** — polygons are exploded to
-their grid-cell cover (driver-side, build side is small: admin boundaries),
-points get the same cell key with pure JVM expressions, the equi-join runs
-as a broadcast hash join, and candidates are refined by the vectorized
-crossing-number kernel (reference pnpoly semantics,
-src/projections/healpix.cpp:132-165) in ONE Arrow-batched pandas UDF with
-the edge arrays broadcast to executors.
+their grid-cell cover (driver-side, build side is small: admin boundaries)
+and enter the plan as a JVM-local relation (``session.local_df``, a
+``LocalTableScan``: no Python task scans it), points get the same cell key
+with pure JVM expressions, the equi-join runs as a broadcast hash join, and
+candidates are refined by the vectorized crossing-number kernel (reference
+pnpoly semantics, src/projections/healpix.cpp:132-165) in ONE Arrow-batched
+pandas UDF whose closure carries the edge arrays (~13 KB; pyspark itself
+broadcasts a pickled UDF once it passes 1 MB).
 
 kNN: grid-cell **neighbor expansion** with an exactness guarantee — each
 query probes its 3×3 cell block; if the k-th candidate distance exceeds the
@@ -23,12 +25,15 @@ bounded by the cell size chosen vs data density.
 
 from __future__ import annotations
 
+from functools import lru_cache
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from . import geo_fixtures
 from .kernels import pip as pipk
+from .session import local_df
 
 PIP_CELL_I = 1_000_000   # 10° cells for polygon cover join
 KNN_CELL_I = 1_000_000   # 10° cells for kNN neighbor expansion
@@ -40,9 +45,10 @@ def polygons_df(spark, cell_i: int = PIP_CELL_I) -> DataFrame:
     for p in geo_fixtures.polygons():
         for cx, cy in geo_fixtures.cover_cells(p, cell_i):
             rows.append((p["polygon_id"], cx, cy))
-    return spark.createDataFrame(rows, "polygon_id string, cell_x long, cell_y long")
+    return local_df(spark, rows, "polygon_id string, cell_x long, cell_y long")
 
 
+@lru_cache(maxsize=1)
 def _edge_arrays():
     """polygon_id -> (x1, y1, x2, y2) int64 arrays, all rings."""
     by_pid: dict[str, list] = {}
@@ -58,8 +64,7 @@ def pip_join(spark, points: DataFrame, lon_col: str = "lon_i",
              lat_col: str = "lat_i", cell_i: int = PIP_CELL_I) -> DataFrame:
     """points (with int64 scaled coords) -> rows (point cols..., polygon_id)
     for every containing polygon. Exact even-odd semantics incl. holes."""
-    sc = spark.sparkContext
-    edges_bc = sc.broadcast(_edge_arrays())
+    edges = _edge_arrays()
 
     cell = float(cell_i)
     pts = (points
@@ -70,14 +75,13 @@ def pip_join(spark, points: DataFrame, lon_col: str = "lon_i",
 
     @F.pandas_udf("boolean")
     def inside(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        ed = edges_bc.value
         px = lon.to_numpy(np.int64)
         py = lat.to_numpy(np.int64)
         out = np.zeros(len(px), dtype=bool)
         codes, uniques = pd.factorize(pid)
         for gi, gpid in enumerate(uniques):
             m = codes == gi
-            out[m] = pipk.points_in_polygon(px[m], py[m], ed[gpid])
+            out[m] = pipk.points_in_polygon(px[m], py[m], edges[gpid])
         return pd.Series(out)
 
     return (cand.filter(inside(F.col(lon_col), F.col(lat_col), F.col("polygon_id")))

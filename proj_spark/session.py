@@ -4,13 +4,19 @@ Local-mode defaults mirror what we'd set per-executor on a real cluster:
 Arrow batches for the pandas-UDF kernels (the engine's SoA execution path,
 SURVEY.md §1.2-1.3), AQE + skew-join handling on (north rule: explicit skew
 handling), UTC session timezone for DuckDB oracle parity.
+
+``local_df`` is the one way the engine turns small driver-built rows into
+a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 
 def get_spark(app_name: str = "proj_spark", cpus: int | None = None,
@@ -39,3 +45,15 @@ def get_spark(app_name: str = "proj_spark", cpus: int | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Small driver-built rows (tuples in ``ddl`` column order) as a
+    JVM-local relation, planned as ``LocalTableScan``. Unlike
+    ``createDataFrame(list, ddl)``, which parallelizes the rows as a Python
+    RDD and so scans them in Python workers, no task touches Python; this
+    holds with Arrow on or off."""
+    schema = to_arrow_schema(_parse_datatype_string(ddl))
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema))

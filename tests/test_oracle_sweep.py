@@ -7,6 +7,8 @@ sweep part of every round's pytest green signal).
 
 Comparison semantics mirror tools/check_oracle.py / the driver gate:
 columns sorted by name, values rounded to 9 dp, rows sorted, atol 1e-9.
+A file-gated query (``querylib.FILE_GATED``) whose reference input is
+absent is skipped with the missing files named.
 
 Run at sf0.01 (the driver's gate scale) with
     SPARK_GRAFT_SWEEP_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle_sweep.py
@@ -26,7 +28,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from __spark_entry__ import queries, oracle_sql  # noqa: E402
 from proj_spark.session import get_spark  # noqa: E402
-from proj_spark.querylib import TABLES  # noqa: E402
+from proj_spark.querylib import FILE_GATED, TABLES  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SWEEP_SF", "/root/testdata/sf0.001")
 
@@ -59,8 +61,15 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 @pytest.mark.spark
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize("name", sorted(set(QUERIES) | set(FILE_GATED)))
 def test_query_matches_oracle(name, spark, duck):
+    if name not in QUERIES:
+        # a file-gated query whose input is absent is a counted skip, so
+        # the registry cannot shrink without a report
+        missing = [p for p in FILE_GATED[name] if not os.path.isfile(p)]
+        if missing:
+            pytest.skip(f"input file missing: {', '.join(missing)}")
+        pytest.fail(f"{name}: input files present but not registered")
     if name not in ORACLES:
         # All 82 registered queries carry oracles (judge-verified r4), so
         # this invariant is self-enforcing: a query added without one

@@ -55,18 +55,66 @@ def test_filter_pushdown_to_parquet(spark):
     assert pushed and "lang" in pushed[0]
 
 
+def _pip_points(spark):
+    return spark.sql(
+        "SELECT doc_id AS pid, (doc_id * 7 % 36000000) - 18000000 AS lon_i, "
+        "(doc_id * 13 % 17000000) - 8500000 AS lat_i FROM documents")
+
+
+def _assert_local_build_side(df):
+    """Driver-built rows must enter the plan as a JVM-local relation: a
+    Python-RDD scan (ExistingRDD / LogicalRDD) runs Python tasks just to
+    unpickle them."""
+    assert "LocalTableScan" in plan_of(df)
+    p = plan_of(df, "extended")
+    assert "ExistingRDD" not in p
+    assert "LogicalRDD" not in p
+
+
 def test_pip_join_is_broadcast(spark):
     """The PIP cell-prefix join must broadcast the polygon cover side —
     the points side (10^12 rows at scale) must NOT shuffle."""
-    from pyspark.sql import functions as F
     from proj_spark import joins
-    pts = spark.sql(
-        "SELECT doc_id AS pid, (doc_id * 7 % 36000000) - 18000000 AS lon_i, "
-        "(doc_id * 13 % 17000000) - 8500000 AS lat_i FROM documents")
-    hits = joins.pip_join(spark, pts)
+    hits = joins.pip_join(spark, _pip_points(spark))
     p = plan_of(hits)
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
+    _assert_local_build_side(hits)
+
+
+def test_centroids_are_local_relation(spark):
+    import numpy as np
+    from proj_spark import ann
+    cents = np.arange(3 * 8, dtype=np.float64).reshape(3, 8)
+    _assert_local_build_side(ann.centroid_df(spark, cents))
+
+
+def test_ed50_candidates_are_local_relation(spark):
+    _assert_local_build_side(
+        querylib.QUERIES["ed50_regional_dispatch"](spark, SF))
+
+
+def test_repeated_calls_leave_no_temp_files(spark):
+    """pip_join and ivf_topk ship their driver-side arrays in the UDF
+    closure: a call must leave no file in the driver's temp dir (a
+    per-call broadcast would, with a JVM broadcast nothing destroys)."""
+    import os
+    import numpy as np
+    from proj_spark import ann, joins
+    temp_dir = spark.sparkContext._temp_dir
+    pts = _pip_points(spark)
+    emb = spark.table("embeddings")
+    cents = ann.centroid_df(spark, np.eye(4, 8))
+
+    def calls():
+        joins.pip_join(spark, pts)
+        ann.ivf_topk(spark, emb, cents)
+
+    calls()
+    before = set(os.listdir(temp_dir))
+    for _ in range(3):
+        calls()
+    assert set(os.listdir(temp_dir)) == before
 
 
 def test_knn_probe_side_broadcast(spark):
