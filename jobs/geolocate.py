@@ -34,9 +34,6 @@ import argparse
 import sys
 import time
 
-import numpy as np
-import pandas as pd
-
 
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
@@ -81,15 +78,10 @@ def main(argv=None) -> int:
       WHERE lat IS NOT NULL AND ABS(lat) <= 85.06D AND ABS(lon) <= 180.0D""")
 
     def add_s2(df):
-        from pyspark.sql import functions as F
         from proj_spark.kernels import s2cell
-
-        @F.pandas_udf("long")
-        def cell12(lon: pd.Series, lat: pd.Series) -> pd.Series:
-            return pd.Series(s2cell.lonlat_to_cell(
-                lon.to_numpy(np.float64), lat.to_numpy(np.float64), 12))
-
-        return df.withColumn("s2_cell", cell12("lon", "lat"))
+        from proj_spark.stages import numpy_udf
+        return df.withColumn("s2_cell",
+                             numpy_udf("long")(s2cell.cell12)("lon", "lat"))
 
     job = CheckpointedJob("geolocate", args.out, args.buckets, key_col="url",
                           job_desc=f"extract+webmerc z{z}+s2 L12")

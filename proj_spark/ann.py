@@ -17,11 +17,11 @@ so results are reproducible across runs and cluster sizes.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from .session import local_df
+from .stages import numpy_udf
 
 
 def hyperplane_lsh_plan(n_vecs: int, recall_sim: float = 0.95,
@@ -141,31 +141,22 @@ def ivf_topk(spark, emb: DataFrame, cents, k: int = 5,
              sim_round: int | None = None,
              query_cap: int = 51200) -> DataFrame:
     """IVF top-k: centroids ride the UDF closures as a numpy matrix ->
-    nearest-centroid bucket per vector computed MAP-SIDE (vectorized
-    pandas UDF: one matmul per Arrow batch, no shuffle, bucket carried
+    nearest-centroid bucket per vector computed MAP-SIDE (one matmul per
+    Arrow batch through stages.numpy_udf, no shuffle, bucket carried
     with v/norm so no join-back) -> queries probe their `nprobe` nearest
     buckets -> one shuffle on cid (AQE splits hot buckets) -> exact cosine
     rerank over candidates only. Returns (qid, nid, sim, rank). Ties break
     on lowest cid (stable argsort over cid-ordered rows), matching
     train_centroids' determinism."""
-    from pyspark.sql.functions import pandas_udf
-
     cmat = _unit_matrix(cents)  # (k, dim), rides the UDF closures
 
-    @pandas_udf("long")
-    def assign_cid(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=np.int64)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        return pd.Series(np.argmax(x @ cmat.T, axis=1).astype(np.int64))
+    @numpy_udf("long")
+    def assign_cid(x):
+        return np.argmax(x @ cmat.T, axis=1)
 
-    @pandas_udf("array<long>")
-    def probe_cids(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
-        x = np.stack([np.asarray(v, dtype=np.float64) for v in vs])
-        order = np.argsort(-(x @ cmat.T), axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype(np.int64)))
+    @numpy_udf("array<long>")
+    def probe_cids(x):
+        return np.argsort(-(x @ cmat.T), axis=1, kind="stable")[:, :nprobe]
 
     e = _normalized(emb, vec_col)
     eb = e.withColumn("cid", assign_cid("v"))   # narrow: no exchange

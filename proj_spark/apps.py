@@ -12,7 +12,7 @@ composable line-filter functions (SURVEY.md §2.1):
 
 Each filter takes an iterable of text lines and yields output lines, so
 ``proj_filter(op, sys.stdin)`` behaves like ``echo ... | proj ...``. On
-Spark the same operators run as fused pandas-UDF stages (stages.py); these
+Spark the same operators run as fused Arrow-UDF stages (stages.py); these
 filters exist for CLI parity and tiny driver-side jobs.
 """
 

@@ -147,85 +147,6 @@ def polyline_length(ell: Ellipsoid, lon, lat) -> float:
     return float(np.sum(s12))
 
 
-def _rings_perimeter_area_quadrature(ell: Ellipsoid, lons, lats, panels: int | None = None):
-    """Batched fixed-arity rings: ``lons``/``lats`` shape (n_rings, k)
-    in RADIANS. Returns (perimeter[n], signed_area[n]) with the same
-    semantics as :func:`polygon_perimeter_area`, fully vectorized across
-    rings (one inverse solve for all edges, one direct solve for all
-    quadrature nodes) — the engine's Spark aggregation path (pandas_udf
-    over one-ring-per-row frames, no per-row Python).
-    """
-    if panels is None:
-        gl_t, gl_wt = _GL_T, _GL_WT
-    else:
-        # small rings (sub-degree edges) saturate double precision with a
-        # single order-24 panel; the composite default is for the
-        # pole-hugging planimeter extremes
-        gl_t = np.concatenate([(pp + 0.5 * (_gx + 1.0)) / panels
-                               for pp in range(panels)])
-        gl_wt = np.concatenate([0.5 * _gw / panels] * panels)
-    n_nodes = gl_t.size
-    lons = np.asarray(lons, dtype=np.float64)
-    lats = np.clip(np.asarray(lats, dtype=np.float64),
-                   -0.5 * np.pi, 0.5 * np.pi)
-    nr, k = lons.shape
-    lon1 = lons.ravel()
-    lat1 = lats.ravel()
-    lon2 = np.roll(lons, -1, axis=1).ravel()
-    lat2 = np.roll(lats, -1, axis=1).ravel()
-
-    solver = geod.solver(ell)
-    s12, azi1, _ = solver.inverse(lon1, lat1, lon2, lat2)
-    perimeter = s12.reshape(nr, k).sum(axis=1)
-
-    ne = nr * k
-    s_nodes = (s12[:, None] * gl_t[None, :]).ravel()
-    _, phi_n, azi_n = solver.direct(np.repeat(lon1, n_nodes),
-                                    np.repeat(lat1, n_nodes),
-                                    np.repeat(azi1, n_nodes), s_nodes)
-    sinphi = np.sin(phi_n)
-    cosphi = np.cos(phi_n)
-    nu = ell.a / np.sqrt(1.0 - ell.es * sinphi * sinphi)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        dlam_ds = np.sin(azi_n) / (nu * cosphi)
-    a_ref = _area_fn(ell, np.sin(np.mean(lats, axis=1)))       # (nr,)
-    a_ref_e = np.repeat(a_ref, k)                              # (ne,)
-    integ = (_area_fn(ell, sinphi)
-             - np.repeat(a_ref_e, n_nodes)) * dlam_ds
-    integ = np.where(np.isfinite(integ), integ, 0.0)
-    edge_int = (integ.reshape(ne, n_nodes) * gl_wt[None, :]).sum(axis=1) \
-        * s12
-    dlam_quad = (dlam_ds.reshape(ne, n_nodes)
-                 * gl_wt[None, :]).sum(axis=1) * s12
-    dlam = adjlon(lon2 - lon1)
-    resid = dlam - dlam_quad
-    phi_grid = phi_n.reshape(ne, n_nodes)
-    ext_idx = np.argmax(np.abs(phi_grid), axis=1)
-    phi_ext = phi_grid[np.arange(ne), ext_idx]
-    f = 1.0 - ell.b / ell.a
-    cb1 = np.cos(np.arctan((1.0 - f) * np.tan(lat1)))
-    salp0 = np.abs(np.sin(azi1) * cb1)
-    with np.errstate(divide="ignore"):
-        phi_v = np.arctan(np.sqrt(np.clip(1.0 - salp0 * salp0, 0.0, None))
-                          / np.maximum(salp0, 1e-300) / (1.0 - f))
-    ext_abs = np.maximum.reduce([np.abs(phi_ext), np.abs(lat1),
-                                 np.abs(lat2)])
-    interior = np.abs(phi_ext) > np.maximum(np.abs(lat1),
-                                            np.abs(lat2)) - 1e-9
-    ext_abs = np.where(interior, np.maximum(ext_abs, phi_v), ext_abs)
-    phi_use = np.where(phi_ext < 0, -ext_abs, ext_abs)
-    edge_int = edge_int + (_area_fn(ell, np.sin(phi_use)) - a_ref_e) * resid
-
-    oint = edge_int.reshape(nr, k).sum(axis=1)
-    winding = np.round(dlam.reshape(nr, k).sum(axis=1)
-                       / (2.0 * np.pi))
-    c2_4pi = ellipsoid_area(ell)
-    area = winding * 2.0 * np.pi * (c2_4pi / (4.0 * np.pi) - a_ref) - oint
-    area = np.where(area > c2_4pi / 2.0, area - c2_4pi, area)
-    area = np.where(area <= -c2_4pi / 2.0, area + c2_4pi, area)
-    return perimeter, area
-
-
 # ---------------------------------------------------------------------------
 # C4-series area path (the reference's own formulation: per-edge S12 from
 # geod_geninverse GEOD_AREA, geodesic.c:958-1014 + transit crossing count
@@ -276,13 +197,11 @@ def polygon_perimeter_area(ell: Ellipsoid, lon, lat):
     return perimeter, float(area)
 
 
-def rings_perimeter_area(ell: Ellipsoid, lons, lats, panels: int | None = None):
+def rings_perimeter_area(ell: Ellipsoid, lons, lats):
     """Batched fixed-arity rings via the C4 area series: ``lons``/``lats``
     shape (n_rings, k) RADIANS -> (perimeter[n], signed_area[n]), same
     semantics as :func:`polygon_perimeter_area`. One vectorized inverse
-    solve for ALL edges of all rings — the Spark aggregation path.
-    ``panels`` is accepted for back-compat with the quadrature signature
-    and ignored (the series needs no quadrature nodes)."""
+    solve for ALL edges of all rings — the Spark aggregation path."""
     lons = np.asarray(lons, dtype=np.float64)
     lats = np.clip(np.asarray(lats, dtype=np.float64),
                    -0.5 * np.pi, 0.5 * np.pi)

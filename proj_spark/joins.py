@@ -7,8 +7,8 @@ and enter the plan as a JVM-local relation (``session.local_df``, a
 with pure JVM expressions, the equi-join runs as a broadcast hash join, and
 candidates are refined by the vectorized crossing-number kernel (reference
 pnpoly semantics, src/projections/healpix.cpp:132-165) in ONE Arrow-batched
-pandas UDF whose closure carries the edge arrays (~13 KB; pyspark itself
-broadcasts a pickled UDF once it passes 1 MB).
+UDF (``stages.numpy_udf``) whose closure carries the edge arrays (~13 KB;
+pyspark itself broadcasts a pickled UDF once it passes 1 MB).
 
 kNN: grid-cell **neighbor expansion** with an exactness guarantee — each
 query probes its 3×3 cell block; if the k-th candidate distance exceeds the
@@ -28,12 +28,12 @@ from __future__ import annotations
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from . import geo_fixtures
 from .kernels import pip as pipk
 from .session import local_df
+from .stages import numpy_udf
 
 PIP_CELL_I = 1_000_000   # 10° cells for polygon cover join
 KNN_CELL_I = 1_000_000   # 10° cells for kNN neighbor expansion
@@ -73,18 +73,17 @@ def pip_join(spark, points: DataFrame, lon_col: str = "lon_i",
     cand = pts.join(F.broadcast(polygons_df(spark, cell_i)),
                     on=["cell_x", "cell_y"])
 
-    @F.pandas_udf("boolean")
-    def inside(lon: pd.Series, lat: pd.Series, pid: pd.Series) -> pd.Series:
-        px = lon.to_numpy(np.int64)
-        py = lat.to_numpy(np.int64)
+    @numpy_udf("boolean")
+    def inside(px, py, pid):
         out = np.zeros(len(px), dtype=bool)
-        codes, uniques = pd.factorize(pid)
+        uniques, codes = np.unique(pid, return_inverse=True)
         for gi, gpid in enumerate(uniques):
             m = codes == gi
             out[m] = pipk.points_in_polygon(px[m], py[m], edges[gpid])
-        return pd.Series(out)
+        return out
 
-    return (cand.filter(inside(F.col(lon_col), F.col(lat_col), F.col("polygon_id")))
+    return (cand.filter(inside(F.col(lon_col).cast("long"),
+                               F.col(lat_col).cast("long"), "polygon_id"))
                 .drop("cell_x", "cell_y"))
 
 

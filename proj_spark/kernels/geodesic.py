@@ -350,7 +350,7 @@ class GeodSolver:
     def __getstate__(self):
         # threading.local is not picklable; drop the scratch (it is a pure
         # cache) so operators embedding a solver (ellipsoidal aeqd/gnom)
-        # survive Spark's cloudpickle of pandas-UDF closures
+        # survive Spark's cloudpickle of UDF closures
         state = self.__dict__.copy()
         state.pop("_ws_tls", None)
         return state

@@ -188,6 +188,12 @@ def lonlat_to_cell(lon_deg, lat_deg, level: int = MAX_LEVEL):
     return np.where(bad, 0, out)
 
 
+def cell12(lon_deg, lat_deg):
+    """Level-12 cell ids (~2 km cells), the grain at which the geolocate job
+    and the ``s2_cell_counts`` query bin points."""
+    return lonlat_to_cell(lon_deg, lat_deg, 12)
+
+
 def lsb_for_level(level: int) -> int:
     return 1 << (2 * (MAX_LEVEL - level))
 

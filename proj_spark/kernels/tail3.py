@@ -20,19 +20,6 @@ _TOL = 1e-10
 TWO_D_PI = 2.0 / np.pi
 
 
-def _clamped_newton(phi0, f, fprime, n_iter, tol=1e-7):
-    """Per-point Newton with convergence mask; returns (phi, converged)."""
-    phi = phi0.copy()
-    conv = np.zeros(phi.shape, dtype=bool)
-    for _ in range(n_iter):
-        V = f(phi) / fprime(phi)
-        phi = np.where(conv, phi, phi - V)
-        conv |= np.abs(V) < tol
-        if np.all(conv):
-            break
-    return phi, conv
-
-
 @register
 class MbtFps(Operator):
     """McBryde-Thomas Flat-Pole Sine No. 2 (reference mbt_fps.cpp)."""

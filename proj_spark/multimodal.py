@@ -97,6 +97,8 @@ def image_features(media: DataFrame, fake: bool = True) -> DataFrame:
 
     return (media.filter(media.kind == "image")
             .select("media_id", "content")
+            # Python-boundary allowlist: binary batch decode (bytes per row,
+            # not numeric columns; see tests/test_stages.py)
             .mapInPandas(batches, IMAGE_FEATURES_SCHEMA))
 
 
@@ -119,6 +121,8 @@ def sample_frames(media: DataFrame, every_n: int = 10, fake: bool = True) -> Dat
 
     return (media.filter(media.kind == "video")
             .select("media_id", "content")
+            # Python-boundary allowlist: binary batch decode (bytes per row,
+            # not numeric columns; see tests/test_stages.py)
             .mapInPandas(batches, FRAME_SCHEMA))
 
 

@@ -1,12 +1,12 @@
 """Driver-contract query library: Spark queries + DuckDB oracle SQL pairs.
 
 Each entry runs the engine's Spark-side implementation (DataFrame API +
-vectorized pandas-UDF kernels) and carries an equivalent ANSI-SQL oracle that
-DuckDB executes over the same parquet tables. Numeric outputs are rounded
-coarsely (integer metres / 1e-4..1e-7 deg) so cross-engine libm ulp noise
-cannot flip the driver's value hash — the *precision* bars (0.5 mm gie, 1e-9
-deg roundtrip) are asserted in pytest against reference vectors instead
-(tests/test_gie.py).
+numpy kernels behind stages.py's Arrow UDFs) and carries an equivalent
+ANSI-SQL oracle that DuckDB executes over the same parquet tables. Numeric
+outputs are rounded coarsely (integer metres / 1e-4..1e-7 deg) so
+cross-engine libm ulp noise cannot flip the driver's value hash — the
+*precision* bars (0.5 mm gie, 1e-9 deg roundtrip) are asserted in pytest
+against reference vectors instead (tests/test_gie.py).
 
 Synthetic coordinates are derived from the testdata tables with pure integer
 arithmetic (exact in both engines) so Spark and DuckDB see bit-identical
@@ -16,11 +16,10 @@ inputs.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from .kernels.cyl import _KrugerConstants
 from .crs import create
-from .stages import apply_transform
+from .stages import apply_transform, numpy_udf
 from .ops import Pipeline
 
 def C(v) -> str:
@@ -569,12 +568,7 @@ def q_s2_cell_counts(spark, sf_dir):
     from .kernels import s2cell
 
     df = _sql_points(spark, POINTS_CTE, "points")
-
-    @F.pandas_udf("long")
-    def cell12(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(s2cell.lonlat_to_cell(
-            lon.to_numpy(np.float64), lat.to_numpy(np.float64), 12))
-
+    cell12 = numpy_udf("long")(s2cell.cell12)
     return (df.withColumn("cell", cell12("lon", "lat"))
               .groupBy("cell").agg(F.count("*").alias("n_docs"))
               .orderBy(F.desc("n_docs"), "cell"))
@@ -1011,12 +1005,10 @@ def q_geod_inverse_sphere(spark, sf_dir):
 
     sph = Ellipsoid(_SPHERE_R, _SPHERE_R)
 
-    @F.pandas_udf("double")
-    def s12(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series) -> pd.Series:
+    @numpy_udf("double")
+    def s12(lon1, lat1, lon2, lat2):
         r = np.pi / 180.0
-        s, _, _ = geod.geod_inverse(sph, lon1.to_numpy(np.float64) * r, lat1.to_numpy(np.float64) * r,
-                                    lon2.to_numpy(np.float64) * r, lat2.to_numpy(np.float64) * r)
-        return pd.Series(s)
+        return geod.geod_inverse(sph, lon1 * r, lat1 * r, lon2 * r, lat2 * r)[0]
 
     return pairs.select("pid", "qid",
                         F.round(s12("lon1", "lat1", "lon2", "lat2"), 2).alias("s12_m"))
@@ -1057,12 +1049,11 @@ def q_geod_direct_sphere(spark, sf_dir):
 
     sph = Ellipsoid(_SPHERE_R, _SPHERE_R)
 
-    @F.pandas_udf("struct<lon2:double, lat2:double>")
-    def dest(lon1: pd.Series, lat1: pd.Series, azi: pd.Series, s: pd.Series) -> pd.DataFrame:
+    @numpy_udf("struct<lon2:double, lat2:double>")
+    def dest(lon1, lat1, azi, s):
         r = np.pi / 180.0
-        lo2, la2, _ = geod.geod_direct(sph, lon1.to_numpy(np.float64) * r, lat1.to_numpy(np.float64) * r,
-                                       azi.to_numpy(np.float64) * r, s.to_numpy(np.float64))
-        return pd.DataFrame({"lon2": lo2 / r, "lat2": la2 / r})
+        lo2, la2, _ = geod.geod_direct(sph, lon1 * r, lat1 * r, azi * r, s)
+        return lo2 / r, la2 / r
 
     df = df.withColumn("_d", dest("lon1", "lat1", "azi_deg", "s_m"))
     return df.select("qid", F.round("_d.lat2", 6).alias("lat2"),
@@ -1106,6 +1097,37 @@ gcells AS (
 """
 
 
+def _deg_shift(g, lon, lat):
+    """Degree-domain mirror of a grid shift, in the oracles' fp-op order
+    (lon + dlon_as / 3600): (lon_out, lat_out, dz). The radians-path
+    operators are checked by the roundtrip queries instead (the
+    deg->rad->deg boundary wobbles the 15th digit, which can flip a ROUND
+    at quantized-grid values)."""
+    dlon_as, dlat_as, dz = g.interp(lon, lat)
+    return lon + dlon_as / 3600.0, lat + dlat_as / 3600.0, dz
+
+
+def _hgridshift_deg(df, g, *keep):
+    """df(lon, lat, ...) -> (keep..., lon_out, lat_out) shifted over grid
+    ``g``, which ships to executors in the UDF closure."""
+    @numpy_udf("struct<lon_out:double, lat_out:double>")
+    def shift(lon, lat):
+        return _deg_shift(g, lon, lat)[:2]
+
+    return (df.withColumn("_s", shift("lon", "lat"))
+              .select(*keep, "_s.lon_out", "_s.lat_out"))
+
+
+def _vgridshift_deg(g):
+    """z_out = h - dz over grid ``g`` (default multiplier -1, reference
+    vgridshift.cpp:201)."""
+    @numpy_udf("double")
+    def zshift(lon, lat, h):
+        return h - g.interp(lon, lat)[2]
+
+    return zshift("lon", "lat", "h").alias("z_out")
+
+
 @q("hgridshift_fwd", f"""
 WITH {POINTS_CTE}, {_GRID_CELL_CTE}
 SELECT pid,
@@ -1114,26 +1136,8 @@ SELECT pid,
 FROM gcells
 """)
 def q_hgridshift_fwd(spark, sf_dir):
-    # degree-domain interpolation UDF: identical operation order to the
-    # oracle (lon + bilinear/3600), so outputs match bit-for-bit. The
-    # radians-path operator is exercised by hgridshift_roundtrip instead
-    # (the deg->rad->deg boundary wobbles the 15th digit, which can flip a
-    # ROUND at quantized-grid values).
-    from pyspark.sql import functions as F
     df = _sql_points(spark, POINTS_CTE, "points")
-
-    @F.pandas_udf("struct<lon_out:double, lat_out:double>")
-    def shift(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        g = gs.get_grid("synthetic_world")
-        lo = lon.to_numpy(np.float64)
-        la = lat.to_numpy(np.float64)
-        dlon_as, dlat_as, _ = g.interp(lo, la)
-        return pd.DataFrame({"lon_out": lo + dlon_as / 3600.0,
-                             "lat_out": la + dlat_as / 3600.0})
-
-    df = df.withColumn("_s", shift("lon", "lat"))
-    return df.select("pid", F.col("_s.lon_out").alias("lon_out"),
-                     F.col("_s.lat_out").alias("lat_out"))
+    return _hgridshift_deg(df, gs.get_grid("synthetic_world"), "pid")
 
 
 @q("hgridshift_roundtrip", f"""
@@ -1168,17 +1172,8 @@ SELECT pid, h - {_bilinear_sql(2)} AS z_out
 FROM gcells
 """)
 def q_vgridshift_fwd(spark, sf_dir):
-    from pyspark.sql import functions as F
     df = _sql_points(spark, POINTS_CTE, "points")
-
-    @F.pandas_udf("double")
-    def zshift(lon: pd.Series, lat: pd.Series, h: pd.Series) -> pd.Series:
-        # default multiplier -1 (reference vgridshift.cpp:201)
-        g = gs.get_grid("synthetic_world")
-        _, _, dz = g.interp(lon.to_numpy(np.float64), lat.to_numpy(np.float64))
-        return pd.Series(h.to_numpy(np.float64) - dz)
-
-    return df.select("pid", zshift("lon", "lat", "h").alias("z_out"))
+    return df.select("pid", _vgridshift_deg(gs.get_grid("synthetic_world")))
 
 
 @q("raster_join_shift", f"""
@@ -1343,24 +1338,10 @@ FROM wcells
     def q_hgridshift_ntv2_fwd(spark, sf_dir):
         """hgridshift over the real BETA2007 NTv2 grid (DHDN->ETRS89;
         reference NTv2Grid grids.cpp:2112-2165). Degree-domain mirror of
-        the operator's shift (see q_hgridshift_fwd note); the grid object
-        ships to executors by closure capture — one broadcast per job."""
-        from pyspark.sql import functions as F
+        the operator's shift (see _deg_shift)."""
         _export_grid_parquet(_BETA, _BETA_NODES)
         df = _sql_points(spark, DE_POINTS_CTE, "depoints")
-        g = _BETA
-
-        @F.pandas_udf("struct<lon_out:double, lat_out:double>")
-        def shift(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-            lo = lon.to_numpy(np.float64)
-            la = lat.to_numpy(np.float64)
-            dlon_as, dlat_as, _ = g.interp(lo, la)
-            return pd.DataFrame({"lon_out": lo + dlon_as / 3600.0,
-                                 "lat_out": la + dlat_as / 3600.0})
-
-        df = df.withColumn("_s", shift("lon", "lat"))
-        return df.select("pid", F.col("_s.lon_out").alias("lon_out"),
-                         F.col("_s.lat_out").alias("lat_out"))
+        return _hgridshift_deg(df, _BETA, "pid")
 
 if os.path.isfile(_EGM96_GTX):
     from .gridfiles import parse_gtx
@@ -1378,18 +1359,9 @@ FROM wcells
         """vgridshift over the real egm96 GTX geoid (reference
         GTXVerticalShiftGrid grids.cpp:242-362): ellipsoidal -> orthometric
         (z - N), default multiplier -1 (vgridshift.cpp)."""
-        from pyspark.sql import functions as F
         _export_grid_parquet(_EGM96, _EGM96_NODES)
         df = _sql_points(spark, DE_POINTS_CTE, "depoints")
-        g = _EGM96
-
-        @F.pandas_udf("double")
-        def zshift(lon: pd.Series, lat: pd.Series, h: pd.Series) -> pd.Series:
-            _, _, dz = g.interp(lon.to_numpy(np.float64),
-                                lat.to_numpy(np.float64))
-            return pd.Series(h.to_numpy(np.float64) + (-1.0) * dz)
-
-        return df.select("pid", zshift("lon", "lat", "h").alias("z_out"))
+        return df.select("pid", _vgridshift_deg(_EGM96))
 
     @q("compound_geoid_height", f"""
 WITH {DE_POINTS_CTE}, {_file_cell_cte(_EGM96)}
@@ -1410,7 +1382,6 @@ FROM wcells
         compoundCRS_to_compoundCRS_WGS84_EGM96...). z_back roundtrips
         through the inverse plan; the oracle replays bilinear N from node
         parquet with the identical (h + N) - N fp-op order."""
-        from pyspark.sql import functions as F
         from .crs import create_crs_to_crs
         from .gridfiles import register_grid_file
         _export_grid_parquet(_EGM96, _EGM96_NODES)
@@ -1419,19 +1390,16 @@ FROM wcells
         df = _sql_points(spark, DE_POINTS_CTE, "depoints")
         d2r = np.pi / 180.0
 
-        @F.pandas_udf("struct<z_ell:double, z_back:double>")
-        def plan(lon: pd.Series, lat: pd.Series, h: pd.Series) -> pd.DataFrame:
-            lo = lon.to_numpy(np.float64) * d2r
-            la = lat.to_numpy(np.float64) * d2r
-            hh = h.to_numpy(np.float64)
-            t = np.zeros_like(hh)
-            _, _, z_ell, _ = fwd.apply("forward", lo, la, hh, t)
+        @numpy_udf("struct<z_ell:double, z_back:double>")
+        def plan(lon, lat, h):
+            lo, la = lon * d2r, lat * d2r
+            t = np.zeros_like(h)
+            _, _, z_ell, _ = fwd.apply("forward", lo, la, h, t)
             _, _, z_back, _ = fwd.apply("inverse", lo, la, z_ell, t)
-            return pd.DataFrame({"z_ell": z_ell, "z_back": z_back})
+            return z_ell, z_back
 
         df = df.withColumn("_p", plan("lon", "lat", "h"))
-        return df.select("pid", F.col("_p.z_ell").alias("z_ell"),
-                         F.col("_p.z_back").alias("z_back"))
+        return df.select("pid", "_p.z_ell", "_p.z_back")
 
 
 # ===========================================================================
@@ -1538,7 +1506,6 @@ def q_embedding_near_dup(spark, sf_dir):
     both hand constants; the contract note above the EMB_* constants
     records the [0.8, 0.95) sharpness trade-off."""
     from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType, LongType
     from . import ann
     base = spark.table("embeddings").select(
         "vec_id",
@@ -1562,12 +1529,10 @@ def q_embedding_near_dup(spark, sf_dir):
         (dim, n_bands * n_rows))
     pack = (np.int64(1) << np.arange(n_rows - 1, -1, -1, dtype=np.int64))
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def band_keys(v: pd.Series) -> pd.Series:
-        mat = np.stack(v.to_numpy())            # (n, dim)
-        bits = (mat @ hyper) > 0                # (n, bands*rows)
-        keys = bits.reshape(-1, n_bands, n_rows).astype(np.int64) @ pack
-        return pd.Series(list(keys))
+    @numpy_udf("array<long>")
+    def band_keys(v):                           # v: (n, dim)
+        bits = (v @ hyper) > 0                  # (n, bands*rows)
+        return bits.reshape(-1, n_bands, n_rows).astype(np.int64) @ pack
 
     sig = (e.withColumn("keys", band_keys("v"))
              .select("vec_id", F.posexplode("keys").alias("band", "bk")))
@@ -1650,6 +1615,17 @@ def _hav(l1, p1, l2, p2):
     return _HAV.format(R=C(_SPHERE_R), l1=l1, p1=p1, l2=l2, p2=p2)
 
 
+def _ring_radians(lonlat):
+    """(lon1, lat1, lon2, lat2, lon3, lat3) degree arrays -> (n, 3) ring
+    lon and lat arrays in radians."""
+    r = np.pi / 180.0
+    return (np.stack(lonlat[0::2], axis=1) * r,
+            np.stack(lonlat[1::2], axis=1) * r)
+
+
+_TRI_COLS = ("lon1", "lat1", "lon2", "lat2", "lon3", "lat3")
+
+
 @q("geod_triangle_area", f"""
 WITH {TRI_CTE},
 sides AS (
@@ -1675,27 +1651,18 @@ def q_geod_triangle_area(spark, sf_dir):
     exact l'Huilier spherical-excess formula over haversine side lengths.
     The engine path runs the general ellipsoid machinery
     (proj_spark.geodesy.rings_perimeter_area) with f = 0."""
-    from pyspark.sql import functions as F
     from .kernels.core import Ellipsoid
     from .geodesy import rings_perimeter_area
 
     df = spark.sql(f"WITH {TRI_CTE} SELECT * FROM tri_pts")
     sph = Ellipsoid(_SPHERE_R, _SPHERE_R)
 
-    @F.pandas_udf("struct<perim_m:double, area_km:double>")
-    def ring_agg(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series,
-                 lat2: pd.Series, lon3: pd.Series, lat3: pd.Series) -> pd.DataFrame:
-        r = np.pi / 180.0
-        lons = np.stack([lon1.to_numpy(np.float64), lon2.to_numpy(np.float64),
-                         lon3.to_numpy(np.float64)], axis=1) * r
-        lats = np.stack([lat1.to_numpy(np.float64), lat2.to_numpy(np.float64),
-                         lat3.to_numpy(np.float64)], axis=1) * r
-        p, a = rings_perimeter_area(sph, lons, lats, panels=1)
-        return pd.DataFrame({"perim_m": np.round(p, 3),
-                             "area_km": np.round(np.abs(a) / 1000.0, 0)})
+    @numpy_udf("struct<perim_m:double, area_km:double>")
+    def ring_agg(*lonlat):
+        p, a = rings_perimeter_area(sph, *_ring_radians(lonlat))
+        return np.round(p, 3), np.round(np.abs(a) / 1000.0, 0)
 
-    res = df.select("tid", ring_agg("lon1", "lat1", "lon2", "lat2",
-                                    "lon3", "lat3").alias("pa"))
+    res = df.select("tid", ring_agg(*_TRI_COLS).alias("pa"))
     return res.select("tid", "pa.perim_m", "pa.area_km")
 
 
@@ -1760,7 +1727,6 @@ def q_geod_polygon_area_wgs84(spark, sf_dir):
     geodesic-vs-mapped-edge sliver, ~0.1% for these sub-3-degree rings).
     Raw ellipsoidal values are asserted against the reference's
     planimeter fixtures in tests/test_geodesy.py."""
-    from pyspark.sql import functions as F
     from .kernels.core import Ellipsoid, qsfn
     from .geodesy import rings_perimeter_area
 
@@ -1768,26 +1734,19 @@ def q_geod_polygon_area_wgs84(spark, sf_dir):
     wgs84 = Ellipsoid(6378137.0, 6378137.0 * (1 - 1 / 298.257223563))
     sph_auth = Ellipsoid(_R_AUTH, _R_AUTH)
 
-    @F.pandas_udf("struct<auth_km2:double, ok:int>")
-    def ring_agg(lon1: pd.Series, lat1: pd.Series, lon2: pd.Series,
-                 lat2: pd.Series, lon3: pd.Series, lat3: pd.Series) -> pd.DataFrame:
-        r = np.pi / 180.0
-        lons = np.stack([lon1.to_numpy(np.float64), lon2.to_numpy(np.float64),
-                         lon3.to_numpy(np.float64)], axis=1) * r
-        lats = np.stack([lat1.to_numpy(np.float64), lat2.to_numpy(np.float64),
-                         lat3.to_numpy(np.float64)], axis=1) * r
+    @numpy_udf("struct<auth_km2:double, ok:int>")
+    def ring_agg(*lonlat):
+        lons, lats = _ring_radians(lonlat)
         _, a_ell = rings_perimeter_area(wgs84, lons, lats)
         lats_auth = np.arcsin(np.clip(
             qsfn(np.sin(lats), _WGS_E, _WGS_ONE_ES) / _WGS_QP, -1.0, 1.0))
         _, a_auth = rings_perimeter_area(sph_auth, lons, lats_auth)
         ok = (np.abs(np.abs(a_ell) - np.abs(a_auth))
               <= 0.01 * np.abs(a_auth) + 1e4).astype(np.int32)
-        return pd.DataFrame({"auth_km2": np.round(np.abs(a_auth) / 1e6, 0),
-                             "ok": ok})
+        return np.round(np.abs(a_auth) / 1e6, 0), ok
 
-    res = df.select("tid", ring_agg("lon1", "lat1", "lon2", "lat2",
-                                    "lon3", "lat3").alias("pa"))
-    return res.select("tid", "pa.auth_km2", F.col("pa.ok").alias("ok"))
+    res = df.select("tid", ring_agg(*_TRI_COLS).alias("pa"))
+    return res.select("tid", "pa.auth_km2", "pa.ok")
 
 
 # --- distortion factors (P5_FACTORS / `proj -S`, reference factors.cpp) ------
@@ -1833,21 +1792,17 @@ def q_factors_merc(spark, sf_dir):
     same finite-difference stencil in SQL (for merc the lam-derivatives
     are exact: x_l = 1, y_l = x_p = 0), so both engines evaluate the same
     algorithm, not just the same closed form."""
-    from pyspark.sql import functions as F
     from .factors import factors as compute_factors
 
     df = spark.sql(f"WITH {POINTS_CTE} SELECT pid, lon, lat FROM points "
                    "WHERE ABS(lat) <= 84.0 AND pid % 8 = 1")
 
-    @F.pandas_udf("struct<k_scale:double, h_scale:double, s_areal:double, conv_rad:double>")
-    def fac(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
+    @numpy_udf("struct<k_scale:double, h_scale:double, s_areal:double, conv_rad:double>")
+    def fac(lon, lat):
         r = np.pi / 180.0
-        f = compute_factors(_MERC_ELL, lon.to_numpy(np.float64) * r,
-                            lat.to_numpy(np.float64) * r)
-        return pd.DataFrame({"k_scale": np.round(f["k"], 5),
-                             "h_scale": np.round(f["h"], 5),
-                             "s_areal": np.round(f["s"], 5),
-                             "conv_rad": np.round(np.abs(f["conv"]), 15) * 0.0})
+        f = compute_factors(_MERC_ELL, lon * r, lat * r)
+        return (np.round(f["k"], 5), np.round(f["h"], 5), np.round(f["s"], 5),
+                np.round(np.abs(f["conv"]), 15) * 0.0)
 
     res = df.select("pid", fac("lon", "lat").alias("f"))
     return res.select("pid", "f.k_scale", "f.h_scale", "f.s_areal",
@@ -1980,7 +1935,7 @@ def q_ann_ivf_trained_top5(spark, sf_dir):
     """PRODUCTION trained-IVF path, driver-certified (r2 VERDICT item 7):
     spherical k-means centroids trained on a bounded driver sample
     (ann.train_centroids), MAP-SIDE bucket assignment via a vectorized
-    pandas UDF over broadcast centroids (no shuffle), probe + exact
+    Arrow UDF over closure-shipped centroids (no shuffle), probe + exact
     rerank (ann.ivf_topk). The probe budget here is ALL buckets, where
     IVF's only loss — bucket pruning — is provably zero, so the result
     must EQUAL exact brute-force cosine top-5: that equality gives the
@@ -2490,24 +2445,19 @@ def q_gridshift_unified(spark, sf_dir):
     gridshift.cpp:601) to < 1e-8 deg."""
     from pyspark.sql import functions as F
     df = _sql_points(spark, POINTS_CTE, "points")
+    g = gs.get_grid("synthetic_world")
 
-    @F.pandas_udf("struct<lon_out:double, lat_out:double, z_out:double>")
-    def shift(lon: pd.Series, lat: pd.Series, h: pd.Series) -> pd.DataFrame:
-        g = gs.get_grid("synthetic_world")
-        lo = lon.to_numpy(np.float64)
-        la = lat.to_numpy(np.float64)
-        dlon_as, dlat_as, dz = g.interp(lo, la)
-        return pd.DataFrame({"lon_out": lo + dlon_as / 3600.0,
-                             "lat_out": la + dlat_as / 3600.0,
-                             "z_out": h.to_numpy(np.float64) + dz})
+    @numpy_udf("struct<lon_out:double, lat_out:double, z_out:double>")
+    def shift(lon, lat, h):
+        lon_out, lat_out, dz = _deg_shift(g, lon, lat)
+        return lon_out, lat_out, h + dz
 
     df = df.withColumn("_s", shift("lon", "lat", "h"))
     rt = Pipeline([(_GRIDU, "forward"), (_GRIDU, "inverse")])
     df = apply_transform(df, rt, "lon", "lat", z_col="h",
                          out_cols=("lon2", "lat2"))
     return df.select(
-        "pid", F.col("_s.lon_out").alias("lon_out"),
-        F.col("_s.lat_out").alias("lat_out"), F.col("_s.z_out").alias("z_out"),
+        "pid", "_s.lon_out", "_s.lat_out", "_s.z_out",
         ((F.abs(F.col("lon2") - F.col("lon")) < 1e-8)
          & (F.abs(F.col("lat2") - F.col("lat")) < 1e-8)).cast("int").alias("ok"))
 
@@ -2644,22 +2594,16 @@ def q_tinshift_fwd(spark, sf_dir):
     first-containing-triangle barycentric interpolation of vertex offsets.
     Degree-domain mirror (same constants, same op order) — bit-exact vs
     the oracle's CASE chain."""
-    from pyspark.sql import functions as F
     op = _TINSHIFT
     df = _sql_points(spark, TIN_POINTS_CTE, "tinpoints")
 
-    @F.pandas_udf("struct<lon_out:double, lat_out:double, z_out:double>")
-    def shift(lon: pd.Series, lat: pd.Series, h: pd.Series) -> pd.DataFrame:
-        lo = lon.to_numpy(np.float64)
-        la = lat.to_numpy(np.float64)
-        dlon, dlat, dz = op._interp(lo, la)
-        return pd.DataFrame({"lon_out": lo + dlon, "lat_out": la + dlat,
-                             "z_out": h.to_numpy(np.float64) + dz})
+    @numpy_udf("struct<lon_out:double, lat_out:double, z_out:double>")
+    def shift(lon, lat, h):
+        dlon, dlat, dz = op._interp(lon, lat)
+        return lon + dlon, lat + dlat, h + dz
 
     df = df.withColumn("_s", shift("lon", "lat", "h"))
-    return df.select("pid", F.col("_s.lon_out").alias("lon_out"),
-                     F.col("_s.lat_out").alias("lat_out"),
-                     F.col("_s.z_out").alias("z_out"))
+    return df.select("pid", "_s.lon_out", "_s.lat_out", "_s.z_out")
 
 
 # deg-2 horner instance over projected-like coordinates derived from points
@@ -2787,24 +2731,11 @@ UNION ALL
         entry, datums.cpp; grid iteration hgridshift.cpp:39-56). The
         oracle replays each region against its own parquet-ized CTable2
         nodes — different grids, one query."""
-        from pyspark.sql import functions as F
         _export_grid_parquet(_CONUS, _CONUS_NODES)
         _export_grid_parquet(_ALASKA, _ALASKA_NODES)
-        gset = gs.get_grid("@conus,@alaska")
         df = _sql_points(spark, NA_POINTS_CTE, "napoints")
-
-        @F.pandas_udf("struct<lon_out:double, lat_out:double>")
-        def shift(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-            lo = lon.to_numpy(np.float64)
-            la = lat.to_numpy(np.float64)
-            dlon_as, dlat_as, _ = gset.interp(lo, la)
-            return pd.DataFrame({"lon_out": lo + dlon_as / 3600.0,
-                                 "lat_out": la + dlat_as / 3600.0})
-
-        df = df.withColumn("_s", shift("lon", "lat"))
-        return df.select("pid", "region",
-                         F.col("_s.lon_out").alias("lon_out"),
-                         F.col("_s.lat_out").alias("lat_out"))
+        return _hgridshift_deg(df, gs.get_grid("@conus,@alaska"),
+                               "pid", "region")
 
 
 # ===========================================================================
@@ -3095,17 +3026,14 @@ UNION ALL
         d = _nad27_retry_dispatcher()
         df = _sql_points(spark, RETRY_PTS_CTE, "rpts")
 
-        @F.pandas_udf("struct<code:long, lon_out:double, lat_out:double>")
-        def route(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-            lo = lon.to_numpy(np.float64)
-            la = lat.to_numpy(np.float64)
-            ox, oy, _, _, code = d.apply("forward", lo, la)
-            return pd.DataFrame({"code": code, "lon_out": ox,
-                                 "lat_out": oy})
+        @numpy_udf("struct<code:long, lon_out:double, lat_out:double>")
+        def route(lon, lat):
+            ox, oy, _, _, code = d.apply("forward", lon, lat)
+            return code, ox, oy
 
         df = df.withColumn("_r", route("lon", "lat"))
         return df.select(
-            "pid", F.col("_r.code").alias("code"),
+            "pid", "_r.code",
             F.round(F.col("_r.lon_out") * 1e6, 0).cast("long")
             .alias("lon_e6"),
             F.round(F.col("_r.lat_out") * 1e6, 0).cast("long")
@@ -3199,18 +3127,9 @@ def q_tinshift_kkj_fwd(spark, sf_dir):
 
     df = _sql_points(spark, _KKJ_PTS_CTE, "kkj_src")
 
-    @F.pandas_udf("struct<x_out:double, y_out:double>")
-    def shift(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        xs = x.to_numpy(np.float64)
-        ys = y.to_numpy(np.float64)
-        ox, oy, _, _ = op.apply("forward", xs, ys,
-                                np.zeros_like(xs), np.zeros_like(xs))
-        return pd.DataFrame({"x_out": ox, "y_out": oy})
-
-    df = df.withColumn("_s", shift("x", "y"))
-    return df.select("pid",
-                     F.round(F.col("_s.x_out"), 4).alias("x_out"),
-                     F.round(F.col("_s.y_out"), 4).alias("y_out"))
+    df = apply_transform(df, op, "x", "y", out_cols=("x_out", "y_out"))
+    return df.select("pid", F.round("x_out", 4).alias("x_out"),
+                     F.round("y_out", 4).alias("y_out"))
 
 
 # ===========================================================================
@@ -3315,18 +3234,11 @@ def q_defmodel_vertical_fwd(spark, sf_dir):
     from pyspark.sql import functions as F
 
     op = create(f"+proj=defmodel +model={_defm_files()}")
-    df = _sql_points(spark, _DEFM_PTS_CTE, "defm_pts")
-
-    @F.pandas_udf("double")
-    def dz_of(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        lo = np.radians(lon.to_numpy(np.float64))
-        la = np.radians(lat.to_numpy(np.float64))
-        z = np.zeros_like(lo)
-        t = np.full_like(lo, 2020.0)
-        _, _, zz, _ = op.apply("forward", lo, la, z, t)
-        return pd.Series(zz)
-
-    return df.select("pid", F.round(dz_of("lon", "lat"), 6).alias("dz"))
+    df = _sql_points(spark, _DEFM_PTS_CTE, "defm_pts").withColumn(
+        "t", F.lit(2020.0))
+    df = apply_transform(df, op, "lon", "lat", t_col="t",
+                         out_cols=("lon_o", "lat_o", "dz"))
+    return df.select("pid", F.round("dz", 6).alias("dz"))
 
 
 # ===========================================================================
@@ -3759,7 +3671,7 @@ def q_hex_parent_counts(spark, sf_dir):
 # --- icosahedral hex hierarchy: the same aperture-7 algebra on the ISEA
 # plane (VERDICT r4 #7 — hexgrid.py's docstring promises "pair with
 # kernels/dgg.py isea, no code change"; this query proves it). The engine
-# side runs the real Isea kernel (pandas-UDF, gie-covered); the oracle
+# side runs the real Isea kernel (apply_transform, gie-covered); the oracle
 # mirrors the Snyder forward in SQL (closed-form: ctran rotation -> 20-way
 # face pick -> equal-area triangle transform, reference isea.cpp:302-467)
 # with every scalar the kernel computes at runtime embedded as a constant

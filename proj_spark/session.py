@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the engine.
 
 Local-mode defaults mirror what we'd set per-executor on a real cluster:
-Arrow batches for the pandas-UDF kernels (the engine's SoA execution path,
+Arrow batches for the UDF kernels (the engine's SoA execution path,
 SURVEY.md §1.2-1.3), AQE + skew-join handling on (north rule: explicit skew
 handling), UTC session timezone for DuckDB oracle parity.
 

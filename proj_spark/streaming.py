@@ -156,6 +156,8 @@ def sessionize(events: DataFrame, gap_minutes: int = 30,
     return (events
             .withWatermark("ts", watermark)
             .groupBy("user_id")
+            # Python-boundary allowlist: stateful (per-key state across
+            # micro-batches; see tests/test_stages.py)
             .applyInPandasWithState(fn, out_schema, state_schema,
                                     "append",
                                     GroupStateTimeout.EventTimeTimeout))
@@ -245,6 +247,8 @@ def streaming_minhash_pairs(docs: DataFrame, id_col: str = "doc_id",
             yield pd.DataFrame(columns=["id1", "id2"])
 
     return (sig.groupBy("band", "bkey")
+               # Python-boundary allowlist: stateful (per-key state across
+               # micro-batches; see tests/test_stages.py)
                .applyInPandasWithState(fn, out_schema, state_schema,
                                        "append",
                                        GroupStateTimeout.EventTimeTimeout))

@@ -90,9 +90,6 @@ sh_sets AS (SELECT DISTINCT doc_id, sh FROM shingles)
 """
 
 
-def shingles_cte(dialect: str) -> str:
-    return SHINGLES_SPARK if dialect == "spark" else SHINGLES_CTE
-
 SH_SETS_VIEW = "sh_sets_cached"
 _sh_sets_cached: dict = {}
 

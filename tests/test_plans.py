@@ -157,6 +157,26 @@ def test_kernels_run_arrow_not_row_python(spark):
     assert "BatchEvalPython" not in p
 
 
+def test_2d_transform_ships_two_columns(spark):
+    """A 2-D transform sends exactly its two coordinate columns to Python:
+    z = 0 and t = NaN are made in the worker, not shipped as literal
+    columns."""
+    from proj_spark.stages import apply_transform
+    from proj_spark.crs import create
+    df = spark.sql("SELECT CAST(doc_id % 360 - 180 AS DOUBLE) AS lon, "
+                   "CAST(doc_id % 160 / 2.0 - 40 AS DOUBLE) AS lat "
+                   "FROM documents")
+    out = apply_transform(df, create("+proj=utm +zone=32 +ellps=GRS80"),
+                          "lon", "lat")
+    p = plan_of(out)
+    assert "ArrowEvalPython" in p
+    calls = re.findall(r"\b_udf\(([^)]*)\)", p)
+    assert calls
+    for args in calls:
+        args = [a.strip() for a in args.split(",")]
+        assert [a.split("#")[0] for a in args] == ["lon", "lat"], args
+
+
 def test_dedup_is_partial_agg(spark):
     """Exact dedup must plan a partial (map-side) aggregate before the
     exchange, so the shuffle carries pre-combined rows."""
