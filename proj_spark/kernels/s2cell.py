@@ -190,8 +190,10 @@ def lonlat_to_cell(lon_deg, lat_deg, level: int = MAX_LEVEL):
 
 def cell12(lon_deg, lat_deg):
     """Level-12 cell ids (~2 km cells), the grain at which the geolocate job
-    and the ``s2_cell_counts`` query bin points."""
-    return lonlat_to_cell(lon_deg, lat_deg, 12)
+    and the ``s2_cell_counts`` query bin points. A point with no cell (NaN
+    or infinite input, id 0) is masked, which the Spark boundary
+    (``stages.numpy_udf``) returns as NULL."""
+    return np.ma.masked_equal(lonlat_to_cell(lon_deg, lat_deg, 12), 0)
 
 
 def lsb_for_level(level: int) -> int:

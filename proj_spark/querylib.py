@@ -19,6 +19,7 @@ import numpy as np
 
 from .kernels.cyl import _KrugerConstants
 from .crs import create
+from . import ann
 from .stages import apply_transform, numpy_udf
 from .ops import Pipeline
 
@@ -724,13 +725,8 @@ def q_events_hourly(spark, sf_dir):
 
 
 # --- ANN: brute-force cosine top-5 (oracle-checked baseline) ------------------
-# Query set: vec_id % 50 = 0 AND vec_id < 51200 — a FIXED query budget
-# (<= 1024 qids however large the corpus). The sf0.1 -> sf1 suite run
-# (BENCH/SF1.md) showed the uncapped batch (count ~ N/50) turning every ANN
-# query quadratic in corpus size (31-52x wall growth for 10x data); with the
-# cap, brute force is one linear scan per batch and IVF is sub-linear. At
-# sf <= 0.1 (max vec_id 1999) the cap never binds, so correctness-gate and
-# round-over-round bench numbers are unchanged.
+# Query set: vec_id % 50 = 0 AND vec_id < 51200, ann.QUERY_MOD/QUERY_CAP (a
+# fixed query budget; the ann module docstring says why).
 
 @q("ann_cosine_top5", """
 WITH e AS (
@@ -755,28 +751,8 @@ FROM ranked WHERE rank <= 5
 """)
 def q_ann_cosine_top5(spark, sf_dir):
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    e = spark.table("embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    e = e.withColumn(
-        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)))
-    qs = (e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 51200))
-            .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
-                    F.col("norm").alias("qnorm")))
-    # broadcast the small query side; candidates stream (scale path: the big
-    # side never shuffles for the join itself)
-    pairs = e.join(F.broadcast(qs), F.col("vec_id") != F.col("qid"))
-    dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    pairs = pairs.select(
-        "qid", F.col("vec_id").alias("nid"),
-        F.round(dot / (F.col("norm") * F.col("qnorm")), 9).alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    ranked = pairs.withColumn("rank", F.row_number().over(w))
-    return (ranked.filter(F.col("rank") <= 5)
-                  .select("qid", "rank", "nid", F.round("sim", 6).alias("sim")))
+    return (ann.brute_topk(spark.table("embeddings"))
+            .select("qid", "rank", "nid", F.round("sim", 6).alias("sim")))
 
 
 # ===========================================================================
@@ -1447,27 +1423,8 @@ def q_token_counts(spark, sf_dir):
 
 
 # --- embedding near-dup (cosine >= threshold pairs) --------------------------
-
-# Operator contract (r4 advice): candidates are generated by banded LSH and
-# then EXACTLY verified, so every emitted pair truly has sim >= the verify
-# threshold; the RECALL guarantee (miss <= EMB_LSH_MISS) holds for pairs at
-# sim >= EMB_NEAR_DUP_RECALL_SIM — the near-duplicate regime this operator
-# targets. Pairs in [verify, recall) may be missed by candidate generation
-# (guaranteeing miss<=1e-6 at sim=0.8 needs ~500+ 16-bit bands — quadratic
-# candidate volume; see ann.hyperplane_lsh_plan). tests/test_embedding_lsh.py
-# asserts the gate fixtures have NO true pair inside that unrecallable band,
-# so the exhaustive DuckDB oracle comparison is honest, and asserts the
-# recall + linear-candidate properties on real fixture corpora.
-EMB_NEAR_DUP_VERIFY_SIM = 0.8
-EMB_NEAR_DUP_RECALL_SIM = 0.95
-EMB_LSH_MISS = 1e-6
-EMB_LSH_SEED = 0x5EED
-# in-bucket pairs materialize as ONE array value per (band, key) bucket;
-# above this many members the bucket switches to a spillable self-join
-# (same pair set, row-shaped). 1024 members = ~524k structs ~ 8 MB per
-# array value — comfortably inside a task, far from the 2^31 element cap.
-EMB_LSH_BUCKET_CAP = 1024
-
+# The operator contract (verify at 0.8, recall guaranteed from 0.95) is
+# noted above ann's EMB_* constants.
 
 @q("embedding_near_dup", """
 WITH base AS (
@@ -1491,94 +1448,19 @@ SELECT id1, id2, ROUND(sim, 6) AS sim
 FROM pairs WHERE sim >= 0.8
 """)
 def q_embedding_near_dup(spark, sf_dir):
-    """Cosine >= 0.8 pairs via banded random-hyperplane LSH with DERIVED
-    band constants: (n_bands, n_bits) come from ann.hyperplane_lsh_plan —
-    bits from the corpus size (keeps random-pair band collisions ~2^-bits
-    so total candidates stay O(bands*N) at ANY scale), bands from the
-    recall contract (miss <= EMB_LSH_MISS at sim >= EMB_NEAR_DUP_RECALL_SIM).
-    Candidates come from an EQUI-join on (band, key) and are verified with
-    the exact cosine, so emitted pairs exactly satisfy the 0.8 filter.
-
-    History: the r3 24x3-bit scheme HUNG at sf1 (192 buckets -> disguised
-    cartesian); the r4 fix hand-tuned 8x16 bits, which bounded candidates
-    only to N~1e7 and guaranteed recall only at the fixture's sim~0.9997
-    (r4 advice: ~19% recall at sim exactly 0.8). The derived plan removes
-    both hand constants; the contract note above the EMB_* constants
-    records the [0.8, 0.95) sharpness trade-off."""
+    """Cosine >= 0.8 pairs (ann.near_dup_pairs: banded LSH + exact
+    verification) over the embeddings plus a near-dup variant of every
+    tenth vector."""
     from pyspark.sql import functions as F
-    from . import ann
-    base = spark.table("embeddings").select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    base = spark.table("embeddings").select("vec_id", "embedding")
+    # a float element is widened to double before the arithmetic (as the
+    # oracle's CAST does), and the union widens the base side to match
     var = (base.filter(F.col("vec_id") % 10 == 0)
                .select((F.col("vec_id") + 100000).alias("vec_id"),
-                       F.transform("v", lambda x: x * 1.01 + 0.003).alias("v")))
-    e = base.unionByName(var)
-    e = e.withColumn(
-        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)))
-
-    # corpus size drives the plan: one cheap count job over the ACTUAL
-    # corpus (base + variants) — an estimate like n_base * 1.1 would
-    # undersize bits for id sets that are not uniform mod 10, doubling
-    # the per-band random-collision rate the derivation promises
-    n_total = e.count()
-    n_bands, n_rows = ann.hyperplane_lsh_plan(
-        n_total, EMB_NEAR_DUP_RECALL_SIM, EMB_LSH_MISS)
-    dim = 64
-    hyper = np.random.default_rng(EMB_LSH_SEED).standard_normal(
-        (dim, n_bands * n_rows))
-    pack = (np.int64(1) << np.arange(n_rows - 1, -1, -1, dtype=np.int64))
-
-    @numpy_udf("array<long>")
-    def band_keys(v):                           # v: (n, dim)
-        bits = (v @ hyper) > 0                  # (n, bands*rows)
-        return bits.reshape(-1, n_bands, n_rows).astype(np.int64) @ pack
-
-    sig = (e.withColumn("keys", band_keys("v"))
-             .select("vec_id", F.posexplode("keys").alias("band", "bk")))
-    # candidates: group each (band, key) bucket and expand in-bucket pairs
-    # — computes the signature relation ONCE (the former sig-self-join
-    # recomputed the UDF + explode on both sides: measured 11.5 s -> 9.0 s
-    # at sf1, identical output). Expected bucket size is ~1 + the true
-    # near-dup cluster size (bits = log2 N + 4 keeps random co-bucketing
-    # at ~N/32 per band), so collect_list stays tiny. Buckets ABOVE
-    # EMB_LSH_BUCKET_CAP (a mega-cluster of near-identical vectors — the
-    # operator's target domain at dirty-corpus scale) are routed to a
-    # spillable equi-self-join instead: the K(K-1)/2 pairs arrive as join
-    # ROWS, not as one array value, so no bucket can hit Spark's 2^31
-    # array-element limit or a single-row memory spike. Same pair set
-    # either way; the cap only picks the physical shape.
-    bucket = (sig.groupBy("band", "bk")
-                 .agg(F.collect_list("vec_id").alias("ids"))
-                 .filter(F.size("ids") >= 2))
-    pair_expr = F.expr(
-        "flatten(transform(ids, (x, i) -> "
-        "transform(slice(ids, i + 2, size(ids)), "
-        "y -> struct(least(x, y) AS id1, greatest(x, y) AS id2))))")
-    small = bucket.filter(F.size("ids") <= EMB_LSH_BUCKET_CAP)
-    small_pairs = (small.select(F.explode(pair_expr).alias("p"))
-                        .select("p.id1", "p.id2"))
-    big_members = (bucket.filter(F.size("ids") > EMB_LSH_BUCKET_CAP)
-                         .select("band", "bk",
-                                 F.explode("ids").alias("vec_id")))
-    m1 = big_members.select("band", "bk", F.col("vec_id").alias("ida"))
-    m2 = big_members.select("band", "bk", F.col("vec_id").alias("idb"))
-    big_pairs = (m1.join(m2, ["band", "bk"])
-                   .filter(F.col("ida") < F.col("idb"))
-                   .select(F.col("ida").alias("id1"),
-                           F.col("idb").alias("id2")))
-    cand = small_pairs.unionByName(big_pairs).distinct()
-    e1 = e.select(F.col("vec_id").alias("id1"), F.col("v").alias("v1"),
-                  F.col("norm").alias("n1"))
-    e2 = e.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"),
-                  F.col("norm").alias("n2"))
-    pairs = cand.join(e1, "id1").join(e2, "id2")
-    dot = F.aggregate(F.zip_with("v1", "v2", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    pairs = pairs.select("id1", "id2",
-                         (dot / (F.col("n1") * F.col("n2"))).alias("sim"))
-    return (pairs.filter(F.col("sim") >= EMB_NEAR_DUP_VERIFY_SIM)
-                 .select("id1", "id2", F.round("sim", 6).alias("sim")))
+                       F.transform("embedding", lambda x: x * 1.01 + 0.003)
+                       .alias("embedding")))
+    return (ann.near_dup_pairs(base.unionByName(var))
+            .select("id1", "id2", F.round("sim", 6).alias("sim")))
 
 
 # --- geodesic polygon perimeter + area (the reference's only aggregate:
@@ -1851,63 +1733,17 @@ FROM scored QUALIFY rank <= 5
 """)
 def q_ann_ivf_top5(spark, sf_dir):
     """IVF-style bucketed ANN — the deterministic scale path for ANN over
-    100 TB: centroids are a fixed subsample (broadcast), every vector is
-    assigned to its nearest centroid (one shuffle on the bucket id), each
-    query probes its 2 nearest buckets and reranks exactly. The DuckDB
+    100 TB: the centroids are a fixed subsample, every vector is assigned
+    to its nearest centroid map-side, each query probes its 2 nearest
+    buckets and reranks exactly (ann.ivf_topk). The nlist is bounded
+    (<= 256 centroids): with a centroid count ~ N/37 the assignment alone
+    is O(N^2/37), the sf1 run's 52x blowup (BENCH/SF1.md). The DuckDB
     oracle runs the identical rule, so the approximation itself is
     value-checked, not just row counts."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    e = spark.table("embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
-    e = e.withColumn(
-        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)))
-    # bounded nlist (<= 256 centroids): with centroid count ~ N/37 the
-    # assignment step alone is O(N^2/37) — the sf1 run's 52x blowup
-    # (BENCH/SF1.md); a fixed nlist keeps assignment one linear pass
-    cents = (e.filter((F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 9472))
-              .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"),
-                      F.col("norm").alias("cnorm")))
-
-    def cos(v1, n1, v2, n2):
-        dot = F.aggregate(F.zip_with(v1, v2, lambda a, b: a * b),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        return dot / (n1 * n2)
-
-    # assignment: centroids broadcast -> map-side; no shuffle of the big side
-    asg = e.join(F.broadcast(cents))
-    asg = asg.select("vec_id", "cid",
-                     F.round(cos(F.col("v"), F.col("norm"),
-                                 F.col("cv"), F.col("cnorm")), 6).alias("csim"))
-    w_a = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.col("cid"))
-    buckets = (asg.withColumn("rn", F.row_number().over(w_a))
-                  .filter("rn = 1").select("vec_id", "cid"))
-
-    qs = (e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 51200))
-           .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
-                   F.col("norm").alias("qnorm")))
-    qp = qs.join(F.broadcast(cents))
-    qp = qp.select("qid", "qv", "qnorm", "cid",
-                   F.round(cos(F.col("qv"), F.col("qnorm"),
-                               F.col("cv"), F.col("cnorm")), 6).alias("csim"))
-    w_q = Window.partitionBy("qid").orderBy(F.desc("csim"), F.col("cid"))
-    qprobe = (qp.withColumn("rn", F.row_number().over(w_q))
-                .filter("rn <= 2").select("qid", "qv", "qnorm", "cid"))
-
-    # bucket join: shuffles on cid only (hot buckets split by AQE at scale)
-    cand = (qprobe.join(buckets, on="cid")
-                  .filter(F.col("vec_id") != F.col("qid")))
-    cand = cand.join(e.select(F.col("vec_id"), F.col("v"), F.col("norm")),
-                     on="vec_id")
-    scored = cand.select(
-        "qid", F.col("vec_id").alias("nid"),
-        F.round(cos(F.col("qv"), F.col("qnorm"),
-                    F.col("v"), F.col("norm")), 9).alias("sim"))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-                  .filter(F.col("rank") <= 5)
-                  .select("qid", "nid", F.round("sim", 6).alias("sim"), "rank"))
+    emb = spark.table("embeddings")
+    out = ann.ivf_topk(emb, ann.sample_centroids(emb, 37, 9472), nprobe=2)
+    return out.select("qid", "nid", F.round("sim", 6).alias("sim"), "rank")
 
 
 @q("ann_ivf_trained_top5", """
@@ -1944,13 +1780,9 @@ def q_ann_ivf_trained_top5(spark, sf_dir):
     (0.44 @ 2-probe -> 1.0 full probe) is asserted in tests/test_ann.py.
     """
     from pyspark.sql import functions as F
-
-    from . import ann
-
     emb = spark.table("embeddings")
     cents = ann.train_centroids(emb, k=14)
-    out = ann.ivf_topk(spark, emb, cents, k=5, nprobe=len(cents),
-                       sim_round=9)
+    out = ann.ivf_topk(emb, cents, nprobe=len(cents))
     return out.select("qid", "nid", F.round("sim", 6).alias("sim"), "rank")
 
 
@@ -2042,11 +1874,9 @@ def q_ann_ivf_probe_recall(spark, sf_dir):
     reference's operation plan sort encodes
     (src/iso19111/coordinateoperation.cpp grid/accuracy sort).
 
-    Scale shape: candidates are generated ONCE at the max probe budget
-    with each candidate carrying its bucket's probe rank, then the three
-    nprobe results are filters over the same scored relation — no
-    re-probing per budget. Exact top-5 (the denominator) is the audited
-    broadcast-query brute-force scan.
+    Scale shape: ann.recall_by_nprobe generates candidates ONCE at the
+    max probe budget and filters them per budget; the exact top-5 (the
+    denominator) is ann.brute_topk.
 
     Corpus design: the raw fixture embeddings are structureless random
     vectors, where probe recall is information-theoretically bounded by
@@ -2058,87 +1888,18 @@ def q_ann_ivf_probe_recall(spark, sf_dir):
     and the curve measures exactly what nprobe buys: the cluster mass at
     probe 1, the unclustered tail as coverage grows."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    base = spark.table("embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v"))
+    base = spark.table("embeddings").select("vec_id", "embedding")
+    j = F.col("j")
     var = (base.filter(F.col("vec_id") % 10 == 0)
-               .withColumn("j", F.explode(F.array(*[F.lit(j) for j in (1, 2, 3, 4)])))
-               .select((F.col("vec_id") + 100000 * F.col("j")).alias("vec_id"),
-                       F.transform("v", lambda x: x * (F.lit(1.0) + F.lit(0.002) * F.col("j"))
-                                   + F.lit(0.0005) * F.col("j")).alias("v")))
+               .withColumn("j", F.explode(F.array(*map(F.lit, (1, 2, 3, 4)))))
+               .select((F.col("vec_id") + 100000 * j).alias("vec_id"),
+                       F.transform("embedding", lambda x: x * (1.0 + 0.002 * j)
+                                   + 0.0005 * j).alias("embedding")))
     e = base.unionByName(var)
-    e = e.withColumn(
-        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda a, x: a + x * x)))
-    cents = (e.filter((F.col("vec_id") % 37 == 0) & (F.col("vec_id") < 1184))
-              .select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"),
-                      F.col("norm").alias("cnorm")))
-    qs = (e.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 51200))
-           .select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"),
-                   F.col("norm").alias("qnorm")))
-
-    def cos(v1, n1, v2, n2):
-        dot = F.aggregate(F.zip_with(v1, v2, lambda a, b: a * b),
-                          F.lit(0.0), lambda acc, x: acc + x)
-        return dot / (n1 * n2)
-
-    probes_col = F.explode(F.array(F.lit(1), F.lit(4), F.lit(8)))
-
-    # exact top-5: the recall denominator (broadcast queries, linear scan)
-    ex_pairs = e.join(F.broadcast(qs), F.col("vec_id") != F.col("qid"))
-    w_e = Window.partitionBy("qid").orderBy(F.desc("sim"), F.col("nid"))
-    exact = (ex_pairs.select(
-                 "qid", F.col("vec_id").alias("nid"),
-                 F.round(cos(F.col("qv"), F.col("qnorm"),
-                             F.col("v"), F.col("norm")), 9).alias("sim"))
-             .withColumn("rank", F.row_number().over(w_e))
-             .filter("rank <= 5").select("qid", "nid"))
-
-    # bucket assignment: broadcast centroids, map-side argmax (no shuffle
-    # of the big side) — identical rule to ann_ivf_top5
-    asg = e.join(F.broadcast(cents))
-    asg = asg.select("vec_id", "cid",
-                     F.round(cos(F.col("v"), F.col("norm"),
-                                 F.col("cv"), F.col("cnorm")), 6).alias("csim"))
-    w_a = Window.partitionBy("vec_id").orderBy(F.desc("csim"), F.col("cid"))
-    buckets = (asg.withColumn("rn", F.row_number().over(w_a))
-                  .filter("rn = 1").select("vec_id", "cid"))
-
-    # per-query centroid probe ranks, up to the max budget (8)
-    qp = qs.join(F.broadcast(cents))
-    qp = qp.select("qid", "qv", "qnorm", "cid",
-                   F.round(cos(F.col("qv"), F.col("qnorm"),
-                               F.col("cv"), F.col("cnorm")), 6).alias("csim"))
-    w_q = Window.partitionBy("qid").orderBy(F.desc("csim"), F.col("cid"))
-    qprobe = (qp.withColumn("prank", F.row_number().over(w_q))
-                .filter("prank <= 8")
-                .select("qid", "qv", "qnorm", "cid", "prank"))
-
-    cand = (qprobe.join(buckets, on="cid")
-                  .filter(F.col("vec_id") != F.col("qid"))
-                  .join(e.select("vec_id", "v", "norm"), on="vec_id"))
-    scored = cand.select(
-        "qid", "prank", F.col("vec_id").alias("nid"),
-        F.round(cos(F.col("qv"), F.col("qnorm"),
-                    F.col("v"), F.col("norm")), 9).alias("sim"))
-
-    sc = (scored.withColumn("nprobe", probes_col)
-                .filter(F.col("prank") <= F.col("nprobe")))
-    w_r = Window.partitionBy("nprobe", "qid").orderBy(F.desc("sim"), F.col("nid"))
-    approx = (sc.withColumn("rank", F.row_number().over(w_r))
-                .filter("rank <= 5").select("nprobe", "qid", "nid"))
-
-    hit = (approx.join(exact, on=["qid", "nid"])
-                 .groupBy("nprobe", "qid").agg(F.count("*").alias("h")))
-    allq = qs.select("qid").withColumn("nprobe", probes_col)
-    percq = (allq.join(hit, on=["nprobe", "qid"], how="left")
-                 .select("nprobe", "qid",
-                         F.coalesce("h", F.lit(0)).alias("hits")))
-    return (percq.groupBy("nprobe")
-                 .agg(F.count("*").alias("n_queries"),
-                      F.sum("hits").alias("n_hits"),
-                      F.round(F.sum("hits") / (F.lit(5.0) * F.count("*")),
-                              6).alias("recall_at_5")))
+    curve = ann.recall_by_nprobe(e, ann.sample_centroids(e, 37, 1184),
+                                 (1, 4, 8))
+    return curve.select("nprobe", "n_queries", "n_hits",
+                        F.round("recall", 6).alias("recall_at_5"))
 
 
 # ===========================================================================

@@ -10,8 +10,9 @@ lives here and nowhere else:
   (an ``array<...>`` column as a 2-D array, one row per value);
 - the function returns one array, a tuple of arrays in the order of a
   struct's fields, or a 2-D integer array for ``array<long>``;
-- NaN in the output becomes SQL NULL (reference HUGE_VAL poison semantics,
-  src/fwd.cpp:41-44), so bad data never fails a task;
+- NaN in the output, or a masked value of a numpy masked array, becomes
+  SQL NULL (reference HUGE_VAL poison semantics, src/fwd.cpp:41-44), so
+  bad data never fails a task;
 - an empty batch yields an empty result without calling the function.
 
 :func:`apply_transform` compiles one :class:`~proj_spark.ops.Pipeline` (or
@@ -50,7 +51,7 @@ def _to_numpy(a: pa.Array) -> np.ndarray:
 
 
 def _to_arrow(v, atype: pa.DataType) -> pa.Array:
-    """Kernel output -> Arrow array of ``atype``, NaN -> NULL."""
+    """Kernel output -> Arrow array of ``atype``, NaN and masked -> NULL."""
     if pa.types.is_struct(atype):
         return pa.StructArray.from_arrays(
             [_to_arrow(c, f.type) for c, f in zip(v, atype)],
@@ -61,7 +62,7 @@ def _to_arrow(v, atype: pa.DataType) -> pa.Array:
         return pa.ListArray.from_arrays(
             pa.array(np.arange(0, n * k + 1, k, dtype=np.int32)),
             _to_arrow(v.ravel(), atype.value_type), type=atype)
-    return pa.array(np.asarray(v), type=atype, from_pandas=True)
+    return pa.array(np.asanyarray(v), type=atype, from_pandas=True)
 
 
 def _run_batch(fn, atype: pa.DataType, arrays) -> pa.Array:

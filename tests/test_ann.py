@@ -14,7 +14,6 @@ init, id-ordered tie-breaks.
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from proj_spark import ann
 
@@ -35,30 +34,26 @@ def emb(spark):
 
 @pytest.fixture(scope="module")
 def exact(spark, emb):
-    df = ann.brute_topk(spark, emb).cache()
+    df = ann.brute_topk(emb).cache()
     df.count()
     return df
 
 
 def test_trained_centroids_beat_subsample(spark, emb, exact):
-    sub = np.asarray(
-        [r[0] for r in emb.filter(F.col("vec_id") % 37 == 0)
-                          .select("embedding").collect()], dtype=np.float64)
-    r_sub = ann.recall_at_k(
-        ann.ivf_topk(spark, emb, ann.centroid_df(spark, sub)), exact)
-    cents = ann.centroid_df(spark, ann.train_centroids(emb, k=K_CENTS))
-    r_tr = ann.recall_at_k(ann.ivf_topk(spark, emb, cents), exact)
+    sub = ann.sample_centroids(emb, 37, 9472)  # ann_ivf_top5's rule
+    r_sub = ann.recall_at_k(ann.ivf_topk(emb, sub), exact)
+    cents = ann.train_centroids(emb, k=K_CENTS)
+    r_tr = ann.recall_at_k(ann.ivf_topk(emb, cents), exact)
     # measured: subsample 0.28, trained 0.44 at nprobe=2
     assert r_tr > r_sub
     assert r_tr >= 0.40
 
 
 def test_recall_monotone_in_nprobe_and_exact_at_full(spark, emb, exact):
-    cents = ann.centroid_df(spark, ann.train_centroids(emb, k=K_CENTS))
-    r2 = ann.recall_at_k(ann.ivf_topk(spark, emb, cents, nprobe=2), exact)
-    r8 = ann.recall_at_k(ann.ivf_topk(spark, emb, cents, nprobe=8), exact)
-    rall = ann.recall_at_k(
-        ann.ivf_topk(spark, emb, cents, nprobe=K_CENTS), exact)
+    cents = ann.train_centroids(emb, k=K_CENTS)
+    r2 = ann.recall_at_k(ann.ivf_topk(emb, cents, nprobe=2), exact)
+    r8 = ann.recall_at_k(ann.ivf_topk(emb, cents, nprobe=8), exact)
+    rall = ann.recall_at_k(ann.ivf_topk(emb, cents, nprobe=K_CENTS), exact)
     assert r2 <= r8 <= rall
     assert r8 >= 0.85          # measured 0.88
     assert rall == 1.0         # bucket pruning is IVF's ONLY loss

@@ -12,7 +12,7 @@ these tests pin the three claims that derivation makes —
    unrecallable [verify, recall) similarity band, so the exhaustive
    DuckDB oracle comparison in the sweep/driver gate is honest (the r4
    advice: a corpus with pairs at sim in [0.8, ~0.95) would silently miss
-   them — the contract note in querylib.py documents that trade-off).
+   them — the contract note in ann.py documents that trade-off).
 
 All numpy — the banding math is reproduced bit-for-bit from the query
 (same seed, same packing), so no Spark session is needed.
@@ -29,10 +29,9 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from proj_spark.ann import hyperplane_lsh_plan  # noqa: E402
-from proj_spark.querylib import (  # noqa: E402
+from proj_spark.ann import (  # noqa: E402
     EMB_LSH_SEED, EMB_LSH_MISS,
-    EMB_NEAR_DUP_RECALL_SIM, EMB_NEAR_DUP_VERIFY_SIM)
+    EMB_NEAR_DUP_RECALL_SIM, EMB_NEAR_DUP_VERIFY_SIM, hyperplane_lsh_plan)
 
 _SF1 = Path(__file__).resolve().parent.parent / "testdata_sf" / "sf1"
 FIXTURES = [

@@ -82,13 +82,6 @@ def test_pip_join_is_broadcast(spark):
     _assert_local_build_side(hits)
 
 
-def test_centroids_are_local_relation(spark):
-    import numpy as np
-    from proj_spark import ann
-    cents = np.arange(3 * 8, dtype=np.float64).reshape(3, 8)
-    _assert_local_build_side(ann.centroid_df(spark, cents))
-
-
 def test_ed50_candidates_are_local_relation(spark):
     _assert_local_build_side(
         querylib.QUERIES["ed50_regional_dispatch"](spark, SF))
@@ -104,11 +97,11 @@ def test_repeated_calls_leave_no_temp_files(spark):
     temp_dir = spark.sparkContext._temp_dir
     pts = _pip_points(spark)
     emb = spark.table("embeddings")
-    cents = ann.centroid_df(spark, np.eye(4, 8))
+    cents = np.eye(4, 8)
 
     def calls():
         joins.pip_join(spark, pts)
-        ann.ivf_topk(spark, emb, cents)
+        ann.ivf_topk(emb, cents)
 
     calls()
     before = set(os.listdir(temp_dir))
@@ -218,14 +211,44 @@ def test_embedding_near_dup_bucket_cap_equivalent(spark, monkeypatch):
     """Buckets above EMB_LSH_BUCKET_CAP route through the spillable
     self-join instead of the single-array expansion (a mega-cluster must
     not materialize K(K-1)/2 pairs in one array value). Forcing the cap
-    to 2 sends every real bucket through the join path — the emitted
-    pair set must be IDENTICAL to the default (array-expansion) path."""
+    to 1 sends every real bucket (two or more members) through the join
+    path — the emitted pair set must be IDENTICAL to the default
+    (array-expansion) path. A cap of 2 would leave the fixture's
+    two-member buckets on the array path, which finds every pair."""
+    from proj_spark import ann
     base = {tuple(r) for r in
             querylib.QUERIES["embedding_near_dup"](spark, SF).collect()}
-    monkeypatch.setattr(querylib, "EMB_LSH_BUCKET_CAP", 2)
+    monkeypatch.setattr(ann, "EMB_LSH_BUCKET_CAP", 1)
     capped = {tuple(r) for r in
               querylib.QUERIES["embedding_near_dup"](spark, SF).collect()}
     assert capped == base and len(base) > 0
+
+
+# numpy UDF -> ArrowEvalPython nodes in the executed plan: one per branch
+# of the UDF's input (the probe_recall and near_dup corpora are a union of
+# two branches; the query-side probe_cids runs above that union)
+UDF_NODES = {
+    "ann_ivf_top5": {"assign_cid": 1, "probe_cids": 1},
+    "ann_ivf_trained_top5": {"assign_cid": 1, "probe_cids": 1},
+    "ann_ivf_probe_recall": {"assign_cid": 2, "probe_cids": 1},
+    "embedding_near_dup": {"band_keys": 2},
+}
+
+
+@pytest.mark.parametrize("name", sorted(UDF_NODES))
+def test_numpy_udfs_cross_once_per_row(spark, name):
+    """Each numpy UDF crosses the Python boundary once per row. A filter
+    Catalyst infers from a consumer (size(keys) > 0 from posexplode,
+    isnotnull(cid) from the join on cid) and pushes below the projection
+    makes ExtractPythonUDFs evaluate the UDF a second time for the
+    filter."""
+    from collections import Counter
+    df = querylib.QUERIES[name](spark, SF)
+    df.collect()  # the adaptive plan is final (and reuses exchanges)
+    final = plan_of(df, "simple").split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    nodes = Counter(re.findall(r"ArrowEvalPython \[(\w+)\(", final))
+    assert dict(nodes) == UDF_NODES[name]
 
 
 def test_minhash_single_pass_agg(spark):

@@ -92,6 +92,18 @@ def test_entry_point_maps_poison_to_null(spark, points):
     assert points.filter("id < 0").select(utm_cell("lon", "lat")).collect() == []
 
 
+def test_s2_cell_of_poison_point_is_null(spark, points):
+    """s2cell.cell12 masks the invalid id 0 of a NaN or infinite point, and
+    the boundary keeps the mask as NULL (not as cell 0)."""
+    from proj_spark.kernels import s2cell
+    out = {r["id"]: r["cell"] for r in points.select(
+        "id", numpy_udf("long")(s2cell.cell12)("lon", "lat").alias("cell"))
+        .collect()}
+    assert out[1] == int(s2cell.cell12(np.array([9.0]), np.array([50.0]))[0])
+    for rid in (2, 3, 4, 5, 6):
+        assert out[rid] is None, rid
+
+
 def test_apply_transform_maps_poison_to_null(spark, points):
     out = {r["id"]: r for r in apply_transform(
         points, UTM, "lon", "lat").collect()}
