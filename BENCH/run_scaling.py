@@ -8,7 +8,7 @@ efficiency = (R_32 / R_8) / 4.
 
 The job is the engine's flagship composite: pages (documents-derived
 fixture, amplified deterministically) -> regex coordinate extraction
-(JVM-side) -> webmerc transform (fused Arrow pandas-UDF kernel) -> S2
+(JVM-side) -> webmerc transform (fused Arrow UDF kernel) -> S2
 level-12 cell assignment -> tile aggregation, PLUS the PIP cell-prefix
 spatial join on the scaled point set. Each parallelism level runs in its
 own subprocess (fresh JVM) so the levels can't share warmed state.
@@ -31,11 +31,10 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import numpy as np
-import pandas as pd
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SCALE = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE", "9600"))  # pages amplification
-# N vs 4N levels: 4 and 16, NOT 8 and 32. Every pandas-UDF task pairs a
+# N vs 4N levels: 4 and 16, NOT 8 and 32. Every Arrow-UDF task pairs a
 # JVM task thread with a Python worker process, so local[32] on the 32-vCPU
 # host schedules ~64 runnable threads — that measures host oversubscription,
 # not the plan. At 4/16 both levels fit the machine (16 JVM + 16 Python =
@@ -113,49 +112,11 @@ def shutil_rmtree(p):
     shutil.rmtree(p, ignore_errors=True)
 
 
-_UDF_CACHE: dict = {}
-
-
-def _get_udfs(F):
-    """One FUSED pandas UDF per pipeline (SURVEY.md §1.3): all four kernel
-    stages (webmerc, Krueger UTM, Karney distance, S2 cell) execute in a
-    single Arrow crossing — separate withColumn UDFs would serialize each
-    batch JVM->Python->JVM four times. Defined once per process so the
-    steady-state plan/codegen is reused."""
-    if _UDF_CACHE:
-        return _UDF_CACHE["fused"]
-    from proj_spark.kernels import s2cell
-    from proj_spark.kernels import geodesic as geod
-    from proj_spark.kernels.core import Ellipsoid
-    from proj_spark.crs import create
-
-    wgs84 = Ellipsoid(6378137.0, 6378137.0 * (1 - 1 / 298.257223563))
-    webmerc = create("+proj=webmerc +ellps=WGS84")
-    utm32 = create("+proj=utm +zone=32 +ellps=GRS80")
-
-    @F.pandas_udf("struct<x:double,y:double,ux:double,uy:double,"
-                  "dist:double,cell:long>")
-    def fused(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        r = np.pi / 180.0
-        lo = lon.to_numpy(np.float64) * r
-        la = lat.to_numpy(np.float64) * r
-        x, y, _, _ = webmerc.fwd(lo, la)
-        ux, uy, _, _ = utm32.fwd(lo, la)
-        s, _, _ = geod.solver(wgs84).inverse(
-            np.zeros_like(lo), np.zeros_like(la), lo, la)
-        cell = s2cell.lonlat_to_cell(lon.to_numpy(np.float64),
-                                     lat.to_numpy(np.float64), 12)
-        return pd.DataFrame({"x": x, "y": y, "ux": ux, "uy": uy,
-                             "dist": s, "cell": cell})
-
-    _UDF_CACHE["fused"] = fused
-    return fused
-
-
 def _run_pipeline(spark, joins, apply_transform, create, F):
     from proj_spark.pagesgen import extract_from_table_cte
+    from bench import fused_kernels
     EXTRACT_CTE = extract_from_table_cte("pages_tbl")
-    fused = _get_udfs(F)
+    fused = fused_kernels()
 
     # 0. extraction runs ONCE: both downstream jobs (tile aggregation and
     # the PIP join) consume the persisted narrow (url, lat, lon) relation
@@ -357,11 +318,11 @@ def _write_md(s: dict, fname: str = "BASELINE.md"):
     md = f"""# BENCH/BASELINE — scaling evidence (north rule)
 
 Job: pages table on storage (documents x{s['scale']}, materialized untimed)
--> regex coordinate extraction (JVM) -> fused pandas-UDF kernels (webmerc +
+-> regex coordinate extraction (JVM) -> fused Arrow-UDF kernels (webmerc +
 Krueger UTM + Karney geodesic distance) -> S2 L12 cells -> tile aggregation,
 plus the PIP cell-prefix spatial join; identical code and input at both
 parallelism levels, each level in a fresh JVM. Levels are N=4 vs 4N=16:
-each pandas-UDF task pairs a JVM task thread with a Python worker process,
+each Arrow-UDF task pairs a JVM task thread with a Python worker process,
 so local[32] on this 32-vCPU host runs ~64 runnable threads and measures
 host oversubscription rather than the plan (raw 8->32 speedup 2.36x at
 1.61M docs/s absolute); at 4/16 both levels fit the machine the way real

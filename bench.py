@@ -24,7 +24,6 @@ from pathlib import Path
 os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
 
 import numpy as np
-import pandas as pd
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
@@ -135,38 +134,44 @@ def _kernel_microbench(n: int = 2_000_000) -> dict:
     return out
 
 
-def _scaled_transform(spark, n: int = 12_000_000) -> dict:
-    """Compute-dominant throughput (VERDICT r1: per-query walls at sf0.1
-    are fixed-overhead-dominated — bench at a scale where compute
-    dominates): n points through ONE fused Arrow crossing running all
-    four kernels (webmerc fwd + Krueger UTM fwd + Karney inverse distance
-    + S2 level-12 cell), the same kernel stack as the BENCH/ scaling
-    harness. Points are synthesized JVM-side (spark.range), so the scan
-    costs nothing and the wall is kernel + Arrow transfer."""
-    from pyspark.sql import functions as F
-    from proj_spark.kernels import s2cell
-    from proj_spark.kernels import geodesic as geod
-    from proj_spark.kernels.core import Ellipsoid
+def fused_kernels():
+    """One fused Arrow UDF per pipeline (SURVEY.md §1.3): webmerc fwd +
+    Krueger UTM fwd + Karney inverse distance + S2 level-12 cell in a single
+    crossing — separate UDFs would ship each batch JVM->Python->JVM four
+    times. Returns ``(lon, lat) -> struct<x, y, ux, uy, dist, cell>``, lon/lat
+    in degrees; shared by ``_scaled_transform`` and BENCH/run_scaling.py."""
     from proj_spark.crs import create
+    from proj_spark.kernels import geodesic as geod
+    from proj_spark.kernels import s2cell
+    from proj_spark.kernels.core import DEG_TO_RAD, Ellipsoid
+    from proj_spark.stages import numpy_udf
 
     wgs84 = Ellipsoid(6378137.0, 6378137.0 * (1 - 1 / 298.257223563))
     webmerc = create("+proj=webmerc +ellps=WGS84")
     utm32 = create("+proj=utm +zone=32 +ellps=GRS80")
 
-    @F.pandas_udf("struct<x:double,y:double,ux:double,uy:double,"
-                  "dist:double,cell:long>")
-    def fused(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        r = np.pi / 180.0
-        lo = lon.to_numpy(np.float64) * r
-        la = lat.to_numpy(np.float64) * r
+    @numpy_udf("struct<x:double,y:double,ux:double,uy:double,"
+               "dist:double,cell:long>")
+    def fused(lon, lat):
+        lo, la = lon * DEG_TO_RAD, lat * DEG_TO_RAD
         x, y, _, _ = webmerc.fwd(lo, la)
         ux, uy, _, _ = utm32.fwd(lo, la)
         s, _, _ = geod.solver(wgs84).inverse(
             np.zeros_like(lo), np.zeros_like(la), lo, la)
-        cell = s2cell.lonlat_to_cell(lon.to_numpy(np.float64),
-                                     lat.to_numpy(np.float64), 12)
-        return pd.DataFrame({"x": x, "y": y, "ux": ux, "uy": uy,
-                             "dist": s, "cell": cell})
+        return x, y, ux, uy, s, s2cell.lonlat_to_cell(lon, lat, 12)
+
+    return fused
+
+
+def _scaled_transform(spark, n: int = 12_000_000) -> dict:
+    """Compute-dominant throughput (VERDICT r1: per-query walls at sf0.1
+    are fixed-overhead-dominated — bench at a scale where compute
+    dominates): n points through ``fused_kernels``' one Arrow crossing.
+    Points are synthesized JVM-side (spark.range), so the scan costs
+    nothing and the wall is kernel + Arrow transfer."""
+    from pyspark.sql import functions as F
+
+    fused = fused_kernels()
 
     def plan():
         df = spark.range(n).select(

@@ -1,4 +1,7 @@
-"""Spatial joins: point-in-polygon and kNN, Spark-native.
+"""Spatial and temporal join operators, Spark-native.
+
+Each operator is a DataFrame -> DataFrame function; querylib's entries call
+them and keep only their DuckDB oracles.
 
 PIP (north rule): a **cell-prefix hash join** — polygons are exploded to
 their grid-cell cover (driver-side, build side is small: admin boundaries)
@@ -10,11 +13,26 @@ pnpoly semantics, src/projections/healpix.cpp:132-165) in ONE Arrow-batched
 UDF (``stages.numpy_udf``) whose closure carries the edge arrays (~13 KB;
 pyspark itself broadcasts a pickled UDF once it passes 1 MB).
 
-kNN: grid-cell **neighbor expansion** with an exactness guarantee — each
-query probes its 3×3 cell block; if the k-th candidate distance exceeds the
-certified radius (distance from the query to the block boundary), the query
-escalates to a brute-force pass. All distance math is exact int64 (scaled
-1e-5-deg fixed point), so results match the SQL oracle bit-for-bit.
+Within-radius (``within_radius``): the same cover pattern for a distance
+predicate — centers explode to the cells their great-circle radius covers
+(1/cos(lat) longitude widening, antimeridian wrap), one equi-join on the
+cell, broadcast or shuffle-hash by the caller's hint, exact verify on
+candidates only. This is the one range-join entry point.
+
+Raster lookup (``raster_lookup``): bilinear interpolation as a join —
+points explode to their 4 corner nodes, equi-join the grid table and pivot
+back in the SQL expression's operation order.
+
+As-of (``asof_join``): union-tag plus a running last-non-null window per
+key; one exchange and one sort.
+
+kNN: grid-cell **ring expansion** with an exactness guarantee — one ring
+round probes each query's (2R+1)^2 cell block and certifies a query when
+its k-th distance is within the block boundary. Round 1 runs R = 1 for
+every query, round 2 a data-driven R for the uncertified; the residue
+falls to an observed brute-force pass. All distance math is exact int64
+(scaled 1e-5-deg fixed point), so results match the SQL oracle
+bit-for-bit.
 
 Scale notes (100 TB): the points side never shuffles for PIP (broadcast
 join + mapPartitions-style UDF); skew from huge polygons ("ocean") only
@@ -29,6 +47,7 @@ from functools import lru_cache
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.window import Window
 
 from . import geo_fixtures
 from .kernels import pip as pipk
@@ -87,6 +106,113 @@ def pip_join(spark, points: DataFrame, lon_col: str = "lon_i",
                 .drop("cell_x", "cell_y"))
 
 
+SPHERE_R = 6371000.0      # mean earth radius (m) of the great-circle verify
+RADIUS_CELL_DEG = 3.0     # within_radius cover cells, degrees
+_RADIUS_LON_CELLS = int(360 / RADIUS_CELL_DEG)
+
+
+def within_radius(points: DataFrame, centers: DataFrame, radius_m: float,
+                  hint: str) -> DataFrame:
+    """Every (center, point) pair within ``radius_m`` great-circle metres.
+
+    points: (pid, lon, lat), centers: (cid, clon, clat), degrees. Returns
+    (cid, pid, dist_m). The centers explode to the grid cells their radius
+    covers: latitude +-1 cell, longitude widened by 1/cos(lat) at the cap's
+    poleward edge, cells wrapped across the antimeridian with pmod. Points
+    take their cell key map-side, candidates come from an equi-join on the
+    cell, and the exact great-circle test runs only on candidates. ``hint``
+    is the join strategy hint on the cover side: ``"broadcast"`` (the
+    points side never shuffles) or ``"shuffle_hash"`` (both sides exchange
+    once on the cell, for a cover too large to broadcast). Cover rows are
+    distinct per (cid, cell) and each point has one cell, so a pair forms
+    once. The cover is sound while |clat| + radius < 89 deg."""
+    span = float(np.degrees(radius_m / SPHERE_R))
+    if not span <= RADIUS_CELL_DEG:
+        # the +-1 latitude-cell cover would miss pairs
+        raise ValueError(f"radius {radius_m} m spans {span:.3f} deg, wider "
+                         f"than the {RADIUS_CELL_DEG} deg cover cell")
+    half = _RADIUS_LON_CELLS // 2
+    # SQL text, not Column expressions: each Column operator is a py4j
+    # round trip, which tripled this operator's plan-building time
+
+    def cell(deg):
+        return f"CAST(floor({deg} / {RADIUS_CELL_DEG!r}D) AS BIGINT)"
+
+    def wrap(cx):
+        return f"pmod({cx} + {half}, {_RADIUS_LON_CELLS}) - {half}"
+
+    nx = (f"CAST(ceil({span!r}D / ({RADIUS_CELL_DEG!r}D * cos(radians("
+          f"LEAST(ABS(clat) + {span!r}D, 89.0D))))) AS INT)")
+    cover = (centers.selectExpr(
+                 "cid", "clon", "clat",
+                 f"explode(transform(sequence(-{nx}, {nx}),"
+                 f" dx -> {wrap(cell('clon') + ' + dx')})) AS cell_x")
+             .selectExpr(
+                 "cid", "clon", "clat", "cell_x",
+                 f"explode(transform(sequence(-1, 1),"
+                 f" dy -> {cell('clat')} + dy)) AS cell_y"))
+    pcells = points.selectExpr("pid", "lon", "lat",
+                               f"{wrap(cell('lon'))} AS cell_x",
+                               f"{cell('lat')} AS cell_y")
+    dist = (f"{SPHERE_R!r}D * acos(LEAST(1.0D, GREATEST(-1.0D,"
+            " sin(radians(clat)) * sin(radians(lat))"
+            " + cos(radians(clat)) * cos(radians(lat))"
+            " * cos(radians(lon) - radians(clon)))))")
+    return (pcells.join(cover.hint(hint), on=["cell_x", "cell_y"])
+                  .selectExpr("cid", "pid", f"{dist} AS dist_m")
+                  .filter(f"dist_m <= {float(radius_m)!r}D"))
+
+
+# bilinear corner order (dx, dy): the v00 + v10 + v01 + v11 addition order
+# of the SQL bilinear expression, so both engines round alike
+_CORNERS = ((0, 0), (1, 0), (0, 1), (1, 1))
+
+
+def raster_lookup(points: DataFrame, grid: DataFrame, bands: list,
+                  keys: list) -> DataFrame:
+    """Bilinear raster lookup as a join.
+
+    points: ``keys`` + (c0, r0, wx, wy), the lower-left grid node of each
+    point and its fractional offsets; grid: (grow, gcol, *bands), one row
+    per node. Each point explodes to its 4 corner nodes, equi-joins the
+    grid (broadcast: a raster is small next to the points; at continent
+    scale the same plan shuffles on the node id) and groups back per point.
+    Returns ``keys`` + one interpolated column per band, each corner
+    weighted as value * fx * fy and summed in ``_CORNERS`` order: a
+    conditional max picks each corner's term, because a SUM's
+    shuffle-order-dependent addition would wobble the last ulp."""
+    corners = ", ".join(f"struct({dx}L AS dx, {dy}L AS dy)"
+                        for dx, dy in _CORNERS)
+    cand = (points.selectExpr(*keys, "c0", "r0", "wx", "wy",
+                              f"inline(array({corners}))")
+                  .selectExpr("*", "r0 + dy AS grow", "c0 + dx AS gcol",
+                              "CASE WHEN dx = 0 THEN 1.0D - wx ELSE wx END AS fx",
+                              "CASE WHEN dy = 0 THEN 1.0D - wy ELSE wy END AS fy")
+                  .join(F.broadcast(grid), on=["grow", "gcol"]))
+    return cand.groupBy(*keys).agg(*[F.expr(" + ".join(
+        f"max(CASE WHEN dx = {dx} AND dy = {dy} THEN {b} * fx * fy END)"
+        for dx, dy in _CORNERS)).alias(b) for b in bands])
+
+
+def asof_join(events: DataFrame, states: DataFrame, key: str, ts: str,
+              value: str) -> DataFrame:
+    """Left as-of join: each ``events`` row gains ``value`` from the latest
+    ``states`` row of the same ``key`` at or before its ``ts`` (NULL when
+    none). Both sides tag-union into one relation, which shuffles once on
+    ``key``; a running last-non-null window per key carries the latest
+    state forward (state rows sort before events at equal ``ts``, so
+    at-or-before is inclusive). One exchange and one sort, no Python."""
+    tagged = (events.selectExpr("*", "0 AS _state")
+                    .unionByName(states.selectExpr(key, ts, value,
+                                                   "1 AS _state"),
+                                 allowMissingColumns=True))
+    last = (f"last({value}, true) OVER (PARTITION BY {key} ORDER BY {ts}, "
+            "_state DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)")
+    return (tagged.withColumn(value, F.expr(last))
+                  .filter("_state = 0")
+                  .drop("_state"))
+
+
 # persisted intermediates of recent knn_join calls. Each call caches two
 # output-sized DataFrames that its returned lazy plan consumes several
 # times; they must stay cached while that plan is alive, so the function
@@ -117,111 +243,86 @@ def knn_join(spark, queries: DataFrame, points: DataFrame, k: int = 5,
     Returns (qid, rank, pid, dist_sq) with deterministic (dist_sq, pid)
     tie-break — identical to the brute-force oracle.
     """
-    from pyspark.sql.window import Window
-
     release_knn_cache(keep=_KNN_CACHE_KEEP - 2)
 
     cell = float(cell_i)
     pts = (points
            .withColumn("cell_x", F.floor(F.col("px") / cell).cast("long"))
            .withColumn("cell_y", F.floor(F.col("py") / cell).cast("long")))
-
-    # probe side: explode each query to its 3x3 neighbor cells
-    offs = spark.range(9).select(
-        (F.col("id") % 3 - 1).cast("long").alias("ox"),
-        (F.floor(F.col("id") / 3) - 1).cast("long").alias("oy"))
-    q = (queries
-         .withColumn("qcx", F.floor(F.col("qx") / cell).cast("long"))
-         .withColumn("qcy", F.floor(F.col("qy") / cell).cast("long"))
-         .crossJoin(F.broadcast(offs))
-         .select("qid", "qx", "qy", "qcx", "qcy",
-                 (F.col("qcx") + F.col("ox")).alias("cell_x"),
-                 (F.col("qcy") + F.col("oy")).alias("cell_y")))
-
     dist = ((F.col("px") - F.col("qx")) * (F.col("px") - F.col("qx"))
             + (F.col("py") - F.col("qy")) * (F.col("py") - F.col("qy")))
     w = Window.partitionBy("qid").orderBy("dist_sq", "pid")
-    # persisted: <= k rows per query (output-sized), and the subtree above
-    # it — the big cell join + per-query window — feeds FOUR consumers
-    # (ok, stats -> esc, certified_any, bad_q); without the persist Spark
-    # recomputes that join once per consumer.
-    cand = (pts.join(F.broadcast(q), on=["cell_x", "cell_y"])
-               .select("qid", "qx", "qy", "qcx", "qcy", "pid",
-                       dist.alias("dist_sq"))
-               .withColumn("rank", F.row_number().over(w))
-               .filter(F.col("rank") <= k)
-               .persist())
-    _knn_persisted.append(cand)
 
-    # certification: k-th distance must not exceed the squared distance from
-    # the query point to the 3x3 block boundary (beyond which unseen points
-    # could exist). gx/gy = distance to nearest block edge in scaled units.
-    gx = F.least(F.col("qx") - (F.col("qcx") - 1) * F.lit(cell_i),
-                 (F.col("qcx") + 2) * F.lit(cell_i) - F.col("qx"))
-    gy = F.least(F.col("qy") - (F.col("qcy") - 1) * F.lit(cell_i),
-                 (F.col("qcy") + 2) * F.lit(cell_i) - F.col("qy"))
-    guar = F.least(gx, gy)
-    stats = (cand.groupBy("qid")
-                 .agg(F.max("dist_sq").alias("kth"), F.count("*").alias("n"),
-                      F.first(guar).alias("g"))
-                 .withColumn("certified",
-                             (F.col("n") >= k) & (F.col("kth") <= F.col("g") * F.col("g"))))
+    def ring_round(qs: DataFrame, R):
+        """Each query of ``qs`` probes the (2R+1)x(2R+1) cell block around
+        its own cell (``R`` a Column over ``qs``). Returns the persisted
+        top-k candidates and their certification stats
+        (qid, kth, n, g, certified)."""
+        q = (qs.select("qid", "qx", "qy", R.cast("long").alias("R"))
+               .withColumn("qcx", F.floor(F.col("qx") / cell).cast("long"))
+               .withColumn("qcy", F.floor(F.col("qy") / cell).cast("long"))
+               .withColumn("ox", F.explode(F.sequence(-F.col("R"), F.col("R"))))
+               .withColumn("oy", F.explode(F.sequence(-F.col("R"), F.col("R"))))
+               .select("qid", "qx", "qy", "qcx", "qcy", "R",
+                       (F.col("qcx") + F.col("ox")).alias("cell_x"),
+                       (F.col("qcy") + F.col("oy")).alias("cell_y")))
+        # persisted: <= k rows per query (output-sized), and the subtree
+        # above it — the big cell join + per-query window — feeds several
+        # consumers (stats, the certified rows, the next round's and the
+        # residue's anti-joins); without the persist Spark recomputes that
+        # join once per consumer.
+        cand = (pts.join(F.broadcast(q), on=["cell_x", "cell_y"])
+                   .select("qid", "qx", "qy", "qcx", "qcy", "R", "pid",
+                           dist.alias("dist_sq"))
+                   .withColumn("rank", F.row_number().over(w))
+                   .filter(F.col("rank") <= k)
+                   .persist())
+        _knn_persisted.append(cand)
+        # certification: the k-th distance must not exceed the squared
+        # distance from the query to the block boundary, beyond which
+        # unseen points could exist. gx/gy = distance to the nearest block
+        # edge in scaled units.
+        r = F.col("R")
+        gx = F.least(F.col("qx") - (F.col("qcx") - r) * F.lit(cell_i),
+                     (F.col("qcx") + r + 1) * F.lit(cell_i) - F.col("qx"))
+        gy = F.least(F.col("qy") - (F.col("qcy") - r) * F.lit(cell_i),
+                     (F.col("qcy") + r + 1) * F.lit(cell_i) - F.col("qy"))
+        stats = (cand.groupBy("qid")
+                     .agg(F.max("dist_sq").alias("kth"),
+                          F.count("*").alias("n"),
+                          F.first(F.least(gx, gy)).alias("g"))
+                     .withColumn("certified",
+                                 (F.col("n") >= k)
+                                 & (F.col("kth") <= F.col("g") * F.col("g"))))
+        return cand, stats
 
-    ok = cand.join(stats.filter("certified").select("qid"), on="qid")
+    # round 1: every query probes its 3x3 block
+    cand1, stats1 = ring_round(queries, F.lit(1))
 
-    # escalation round 2: ADAPTIVE RING EXPANSION, bounded by the measured
-    # k-th distance instead of |points| (r2 VERDICT: the old direct
+    # round 2: ADAPTIVE RING EXPANSION for the uncertified, bounded by the
+    # measured k-th distance instead of |points| (r2 VERDICT: the old direct
     # brute-force tail was unbounded if certification failed en masse).
     # A query that found k candidates needs exactly radius sqrt(kth); one
     # that found fewer widens to a fixed 9x9 super-block first. The ring
     # size is data-driven and per-query, so worst-case work is
     # O(escalations * (2R+1)^2 cell lookups), never O(|points|).
-    esc = (queries.join(stats, on="qid", how="left")
+    esc = (queries.join(stats1, on="qid", how="left")
                   .filter(~F.coalesce(F.col("certified"), F.lit(False)))
-                  .withColumn("R", F.greatest(
-                      F.lit(2),
-                      F.when(F.coalesce(F.col("n"), F.lit(0)) >= k,
-                             F.ceil(F.sqrt(F.col("kth")) / F.lit(cell_i)) + 1)
-                       .otherwise(F.lit(4))).cast("long"))
                   # escalation volume surfaced as a named observed metric
                   # (QueryExecutionListener / observedMetrics sees
                   # {"count": n} after the run, no second action)
-                  .observe("knn_escalations", F.count(F.lit(1)).alias("count"))
-                  .withColumn("qcx", F.floor(F.col("qx") / cell).cast("long"))
-                  .withColumn("qcy", F.floor(F.col("qy") / cell).cast("long")))
-    q2 = (esc.withColumn("ox", F.explode(F.sequence(-F.col("R"), F.col("R"))))
-             .withColumn("oy", F.explode(F.sequence(-F.col("R"), F.col("R"))))
-             .select("qid", "qx", "qy", "qcx", "qcy", "R",
-                     (F.col("qcx") + F.col("ox")).alias("cell_x"),
-                     (F.col("qcy") + F.col("oy")).alias("cell_y")))
-    cand2 = (pts.join(F.broadcast(q2), on=["cell_x", "cell_y"])
-                .select("qid", "qx", "qy", "qcx", "qcy", "R", "pid",
-                        dist.alias("dist_sq"))
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-                .persist())
-    _knn_persisted.append(cand2)
-    gx2 = F.least(F.col("qx") - (F.col("qcx") - F.col("R")) * F.lit(cell_i),
-                  (F.col("qcx") + F.col("R") + 1) * F.lit(cell_i)
-                  - F.col("qx"))
-    gy2 = F.least(F.col("qy") - (F.col("qcy") - F.col("R")) * F.lit(cell_i),
-                  (F.col("qcy") + F.col("R") + 1) * F.lit(cell_i)
-                  - F.col("qy"))
-    guar2 = F.least(gx2, gy2)
-    stats2 = (cand2.groupBy("qid")
-                   .agg(F.max("dist_sq").alias("kth"),
-                        F.count("*").alias("n"),
-                        F.first(guar2).alias("g"))
-                   .withColumn("certified",
-                               (F.col("n") >= k)
-                               & (F.col("kth") <= F.col("g") * F.col("g"))))
-    ok2 = cand2.join(stats2.filter("certified").select("qid"), on="qid")
+                  .observe("knn_escalations", F.count(F.lit(1)).alias("count")))
+    cand2, stats2 = ring_round(esc, F.greatest(
+        F.lit(2),
+        F.when(F.coalesce(F.col("n"), F.lit(0)) >= k,
+               F.ceil(F.sqrt(F.col("kth")) / F.lit(cell_i)) + 1)
+         .otherwise(F.lit(4))))
 
     # residue: only queries whose ring STILL can't certify (near-empty
     # regions) fall back to exact brute force — observed separately
-    certified_any = (stats.filter("certified").select("qid")
-                     .unionByName(stats2.filter("certified").select("qid")))
-    bad_q = (queries.join(certified_any, on="qid", how="left_anti")
+    certified = [s.filter("certified").select("qid") for s in (stats1, stats2)]
+    bad_q = (queries.join(certified[0].unionByName(certified[1]), on="qid",
+                          how="left_anti")
                     .observe("knn_brute_force",
                              F.count(F.lit(1)).alias("count")))
     brute = (points.crossJoin(F.broadcast(bad_q))
@@ -230,6 +331,6 @@ def knn_join(spark, queries: DataFrame, points: DataFrame, k: int = 5,
                    .filter(F.col("rank") <= k))
 
     cols = ["qid", "rank", "pid", "dist_sq"]
-    return (ok.select(*cols)
-              .unionByName(ok2.select(*cols))
-              .unionByName(brute.select(*cols)))
+    ok1, ok2 = (c.join(ids, on="qid").select(*cols)
+                for c, ids in zip((cand1, cand2), certified))
+    return ok1.unionByName(ok2).unionByName(brute.select(*cols))

@@ -13,41 +13,6 @@ from __future__ import annotations
 import numpy as np
 
 
-_MALLOC_TUNED = False
-
-
-def tune_malloc_once():
-    """Raise glibc's M_MMAP_THRESHOLD (default 128 KiB). The kernels'
-    cache-sized chunks (16-32k rows x 8 B) make every numpy temporary a
-    128-256 KiB allocation, so with the default threshold EVERY
-    elementwise temporary was a fresh mmap + munmap round trip — page
-    zeroing, TLB shootdown, no reuse. Keeping temporaries on the heap
-    freelist measured +13% on the Karney inverse (1.37 -> 1.55 M pts/s
-    same-session A/B) and helps every vectorized kernel. No-op on
-    non-glibc platforms.
-
-    This is a PROCESS-WIDE allocator-policy change (it also freezes
-    glibc's dynamic threshold adjustment, so freed blocks up to 16 MiB
-    stay on the freelist instead of returning to the OS — higher
-    steady-state RSS). It therefore runs on FIRST KERNEL USE (operator /
-    GeodSolver construction), not at import: an application that imports
-    the library only for its SQL-side helpers keeps the default
-    allocator. Embedders that never want it can set
-    PROJ_SPARK_NO_MALLOC_TUNE=1."""
-    global _MALLOC_TUNED
-    if _MALLOC_TUNED:
-        return
-    _MALLOC_TUNED = True
-    import ctypes
-    import os
-    if os.environ.get("PROJ_SPARK_NO_MALLOC_TUNE"):
-        return
-    try:
-        libc = ctypes.CDLL("libc.so.6", use_errno=True)
-        libc.mallopt(-3, 1 << 24)  # M_MMAP_THRESHOLD = 16 MiB
-    except Exception:
-        pass
-
 TWO_PI = 2.0 * np.pi
 HALF_PI = 0.5 * np.pi
 FORT_PI = 0.25 * np.pi

@@ -285,8 +285,6 @@ class GeodSolver:
     """Precomputed ellipsoid-level state (reference geod_init analogue)."""
 
     def __init__(self, ell: Ellipsoid):
-        from .core import tune_malloc_once
-        tune_malloc_once()  # first kernel use, not import (see core)
         self.ell = ell
         self._ws_tls = threading.local()
         self.a = ell.a

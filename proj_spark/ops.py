@@ -30,7 +30,6 @@ from .kernels.core import (
     UNITS,
     Ellipsoid,
     adjlon,
-    tune_malloc_once,
     resolve_ellipsoid,
 )
 
@@ -255,7 +254,6 @@ class Operator:
     gate_lat0 = True
 
     def __init__(self, params: dict, invoked_name: str | None = None):
-        tune_malloc_once()  # first kernel use, not import (see core)
         self.params = dict(params)
         self.invoked_name = invoked_name or self.name
         self.ell: Ellipsoid = resolve_ellipsoid(params)

@@ -19,7 +19,7 @@ import numpy as np
 
 from .kernels.cyl import _KrugerConstants
 from .crs import create
-from . import ann
+from . import ann, hexgrid
 from .stages import apply_transform, numpy_udf
 from .ops import Pipeline
 
@@ -956,7 +956,7 @@ def q_aeqd_sphere_fwd(spark, sf_dir):
 
 # --- geodesic inverse on the sphere = great circle ---------------------------
 
-_SPHERE_R = 6371000.0
+_SPHERE_R = joins.SPHERE_R
 
 @q("geod_inverse_sphere", f"""
 WITH {IPOINTS_CTE}, {QPOINTS_CTE}
@@ -1161,9 +1161,9 @@ FROM (SELECT DISTINCT pid, lon, lat, c0, r0, wx, wy FROM gcells) g
 """)
 def q_raster_join_shift(spark, sf_dir):
     """The JOIN form of the raster lookup (north rule raster<->vector):
-    points keyed by grid cell, exploded to 4 corners, equi-joined against
-    the grid *table*, weighted-summed back. Pure DataFrame ops — the grid
-    side broadcasts; at continent scale the same plan shuffles on cell id."""
+    points keyed by grid cell against the grid *table*
+    (``joins.raster_lookup``: corner explode, node equi-join, bilinear
+    pivot)."""
     from pyspark.sql import functions as F
 
     grid = spark.sql("""
@@ -1173,43 +1173,12 @@ def q_raster_join_shift(spark, sf_dir):
       FROM RANGE(0, 2701) t(id)
     """)
     pts = spark.sql(f"WITH {POINTS_CTE}, {_GRID_CELL_CTE} SELECT DISTINCT pid, lon, lat, c0, r0, wx, wy FROM gcells")
-    corners = spark.sql("""
-      SELECT CAST(id % 2 AS BIGINT) AS dx, CAST(id / 2 AS BIGINT) AS dy FROM RANGE(0, 4) t(id)
-    """)
-    one = F.lit(1.0)
-    # weight FACTORS applied as value * fx * fy — the exact multiplication
-    # order of the oracle's bilinear expression
-    fx = F.when(F.col("dx") == 0, one - F.col("wx")).otherwise(F.col("wx"))
-    fy = F.when(F.col("dy") == 0, one - F.col("wy")).otherwise(F.col("wy"))
-    def corner(dx, dy, col):
-        # conditional-max pivot: one value per corner, then an EXPLICIT
-        # v00 + v10 + v01 + v11 addition order identical to the oracle's
-        # bilinear expression (a shuffle-order-dependent SUM would wobble
-        # the last ulp and flip rounding at quantized-grid values)
-        return F.max(F.when((F.col("dx") == dx) & (F.col("dy") == dy),
-                            F.col(col) * F.col("fx") * F.col("fy")))
-
-    joined = (pts.crossJoin(F.broadcast(corners))
-                 .withColumn("grow", F.col("r0") + F.col("dy"))
-                 .withColumn("gcol", F.col("c0") + F.col("dx"))
-                 .withColumn("fx", fx)
-                 .withColumn("fy", fy)
-                 .join(F.broadcast(grid), on=["grow", "gcol"])
-                 .groupBy("pid", "lon", "lat")
-                 .agg(corner(0, 0, "dlon_as").alias("a00"),
-                      corner(1, 0, "dlon_as").alias("a10"),
-                      corner(0, 1, "dlon_as").alias("a01"),
-                      corner(1, 1, "dlon_as").alias("a11"),
-                      corner(0, 0, "dlat_as").alias("b00"),
-                      corner(1, 0, "dlat_as").alias("b10"),
-                      corner(0, 1, "dlat_as").alias("b01"),
-                      corner(1, 1, "dlat_as").alias("b11")))
-    dlon = F.col("a00") + F.col("a10") + F.col("a01") + F.col("a11")
-    dlat = F.col("b00") + F.col("b10") + F.col("b01") + F.col("b11")
-    return joined.select(
+    shift = joins.raster_lookup(pts, grid, ["dlon_as", "dlat_as"],
+                                ["pid", "lon", "lat"])
+    return shift.select(
         "pid",
-        (F.col("lon") + dlon / 3600.0).alias("lon_out"),
-        (F.col("lat") + dlat / 3600.0).alias("lat_out"))
+        (F.col("lon") + F.col("dlon_as") / 3600.0).alias("lon_out"),
+        (F.col("lat") + F.col("dlat_as") / 3600.0).alias("lat_out"))
 
 
 # ===========================================================================
@@ -3270,6 +3239,8 @@ def q_benchmark_decontam(spark, sf_dir):
 # engines run the IDENTICAL SQL: whole-stage-codegen projections + one hash
 # aggregation; no UDF, no shuffle before the count.
 
+_HEX_ROUNDS, _HQ0, _HR0 = hexgrid.cube_round_sql("aq", "ar")
+
 _HEX_SQL = f"""
 WITH {POINTS_CTE},
 mercator AS (
@@ -3290,20 +3261,8 @@ axial AS (
          ROUND((my * 2.0 / 3.0) / 250000.0, 6) AS ar
   FROM mercator
 ),
-cube AS (
-  SELECT pid, aq, ar,
-         ROUND(aq) AS rq, ROUND(-aq - ar) AS ry, ROUND(ar) AS rr
-  FROM axial
-),
-snapped AS (
-  SELECT pid,
-         CASE WHEN ABS(rq - aq) > ABS(ry - (-aq - ar)) AND ABS(rq - aq) > ABS(rr - ar)
-              THEN -ry - rr ELSE rq END AS hq0,
-         CASE WHEN NOT (ABS(rq - aq) > ABS(ry - (-aq - ar)) AND ABS(rq - aq) > ABS(rr - ar))
-                   AND ABS(rr - ar) > ABS(ry - (-aq - ar))
-              THEN -rq - ry ELSE rr END AS hr0
-  FROM cube
-)
+cube AS (SELECT pid, aq, ar, {_HEX_ROUNDS} FROM axial),
+snapped AS (SELECT pid, {_HQ0} AS hq0, {_HR0} AS hr0 FROM cube)
 SELECT CAST(hq0 AS BIGINT) AS hq, CAST(hr0 AS BIGINT) AS hr,
        COUNT(*) AS n_docs
 FROM snapped
@@ -3338,66 +3297,6 @@ def q_hex_tile_counts(spark, sf_dir):
 # agnostic — pair with kernels/dgg.py isea for the icosahedral variant).
 
 
-def _cube_round_sql(aq: str, ar: str) -> tuple[str, str]:
-    """SQL pair snapping fractional axial (aq, ar) to the containing hex
-    (cube rounding; same construction the hex_tile_counts CTEs inline)."""
-    ay = f"(-({aq}) - ({ar}))"
-    rq, ry, rr = f"ROUND({aq})", f"ROUND({ay})", f"ROUND({ar})"
-    dq, dy, dr = (f"ABS({rq} - ({aq}))", f"ABS({ry} - {ay})",
-                  f"ABS({rr} - ({ar}))")
-    fix_q = f"({dq} > {dy} AND {dq} > {dr})"
-    hq = f"(CASE WHEN {fix_q} THEN -{ry} - {rr} ELSE {rq} END)"
-    hr = (f"(CASE WHEN NOT {fix_q} AND {dr} > {dy} "
-          f"THEN -{rq} - {ry} ELSE {rr} END)")
-    return hq, hr
-
-
-def _hex_digit_sql(cq: str, cr: str, pq: str, pr: str) -> str:
-    """SQL for the aperture-7 child digit (0..6) of (cq,cr) under (pq,pr):
-    the residue (dq + 3*dr) mod 7 of the offset z_child - u*z_parent
-    (hexgrid.DIGITS is ordered index == residue, so this is the same digit
-    the library computes). Pure arithmetic keeps the whole query one
-    codegen expression — the previous 14-branch CASE (x2 levels) tripled
-    the sf0.1 wall on codegen compile alone. dq + 3*dr is in [-4, 4], so
-    ((x % 7) + 7) % 7 is the portable nonnegative modulo."""
-    dq = f"CAST({cq} - (2.0*{pq} - {pr}) AS BIGINT)"
-    dr = f"CAST({cr} - ({pq} + 3.0*{pr}) AS BIGINT)"
-    return f"((({dq} + 3*{dr}) % 7 + 7) % 7)"
-
-
-_HP2Q, _HP2R = _cube_round_sql("aq", "ar")
-_HP1Q, _HP1R = _cube_round_sql("(3.0*hq2 + hr2)/7.0", "(2.0*hr2 - hq2)/7.0")
-_HP0Q, _HP0R = _cube_round_sql("(3.0*hq1 + hr1)/7.0", "(2.0*hr1 - hq1)/7.0")
-
-# ancestry tail shared by every hex-hierarchy query: expects an `axial`
-# CTE with quantized fractional axial coords (aq, ar); projection-agnostic
-# by construction (hexgrid.py docstring) — hex_parent_counts feeds it
-# spherical mercator, isea_hex_counts the icosahedral Snyder plane
-_HEX_TAIL_SQL = f"""lvl2 AS (SELECT {_HP2Q} AS hq2, {_HP2R} AS hr2 FROM axial),
--- aggregate to finest cells BEFORE deriving ancestry: (a) the only
--- full-data shuffle is this partial-aggregated count, (b) the Aggregate
--- is a projection-collapse barrier — without it Spark inlines the three
--- chained cube-round layers into one exponentially-expanded expression
--- over every point (measured 3x the wall at sf0.1); parents cost O(cells)
-cells2 AS (SELECT hq2, hr2, COUNT(*) AS n_pts FROM lvl2 GROUP BY hq2, hr2),
-lvl1 AS (SELECT hq2, hr2, n_pts, {_HP1Q} AS hq1, {_HP1R} AS hr1
-         FROM cells2),
-lvl0 AS (SELECT hq2, hr2, n_pts, hq1, hr1, {_HP0Q} AS hq0, {_HP0R} AS hr0
-         FROM lvl1),
-cells AS (
-  SELECT n_pts,
-         CAST(hq0 AS BIGINT) AS hq0, CAST(hr0 AS BIGINT) AS hr0,
-         CAST({_hex_digit_sql('hq1', 'hr1', 'hq0', 'hr0')} AS BIGINT) AS d1,
-         CAST({_hex_digit_sql('hq2', 'hr2', 'hq1', 'hr1')} AS BIGINT) AS d2
-  FROM lvl0
-)
-SELECT ((hq0 + 4096) * 8192 + (hr0 + 4096)) AS base_id,
-       ((hq0 + 4096) * 8192 + (hr0 + 4096)) * 8 + d1 AS parent_id,
-       (((hq0 + 4096) * 8192 + (hr0 + 4096)) * 8 + d1) * 8 + d2 AS cell_id,
-       SUM(n_pts) AS n_pts
-FROM cells
-GROUP BY 1, 2, 3"""
-
 _HEXP_SQL = f"""
 WITH {POINTS_CTE},
 mercator AS (
@@ -3414,7 +3313,7 @@ axial AS (
          ROUND((my * 2.0 / 3.0) / 100000.0, 6) AS ar
   FROM mercator
 ),
-{_HEX_TAIL_SQL}
+{hexgrid.ANCESTRY_SQL}
 """
 
 
@@ -3575,7 +3474,7 @@ _ISEA_HEX_SQL = f"""
 WITH {POINTS_CTE},
 {_isea_plane_ctes()},
 {_ISEA_AXIAL_SQL},
-{_HEX_TAIL_SQL}
+{hexgrid.ANCESTRY_SQL}
 """
 
 _ISEA_PLANE_OP = create("+proj=isea +R=1")
@@ -3594,7 +3493,7 @@ def q_isea_hex_counts(spark, sf_dir):
     df = apply_transform(df, _ISEA_PLANE_OP, "lon", "lat")
     df.select("pid", "x", "y").createOrReplaceTempView("isea_xy")
     return spark.sql(
-        f"WITH {_ISEA_AXIAL_SQL},\n{_HEX_TAIL_SQL}")
+        f"WITH {_ISEA_AXIAL_SQL},\n{hexgrid.ANCESTRY_SQL}")
 
 
 # --- raster <-> vector round trip: rasterize + zonal statistics --------------
@@ -3811,16 +3710,10 @@ def q_ch1903_registry_shift(spark, sf_dir):
 
 
 # --- distance-threshold spatial join (range join) -----------------------------
-# All (point, city) pairs within R on the sphere. The scale shape is the
-# PIP cover pattern applied to a radius predicate: the small side explodes
-# to the grid cells its R-bbox covers (per-row longitude span widened by
-# 1/cos(lat), antimeridian cells wrapped with pmod), the big side computes
-# its cell key map-side, candidates come from a BROADCAST equi-join on the
-# cell, and the exact great-circle test runs only on candidates. The big
-# side never shuffles; a naive theta join would be a cartesian.
+# All (point, city) pairs within R on the sphere: joins.within_radius's cell
+# cover join. The oracle is the definitional brute-force cross join.
 
 _RJ_R = 300000.0        # 300 km
-_RJ_CELL = 3.0          # 3 deg cells (>= R's 2.698 deg latitude half-span)
 
 _RJ_CITIES = """
 cities AS (
@@ -3846,42 +3739,24 @@ FROM (
 WHERE d <= {C(_RJ_R)}
 """
 
-_RJ_SPARK = f"""
-WITH {POINTS_CTE}, {_RJ_CITIES},
-cover AS (
-  SELECT cid, clon, clat,
-         CAST(floor(clat / {_RJ_CELL}D) AS BIGINT) + dy AS cell_y,
-         pmod(CAST(floor(clon / {_RJ_CELL}D) AS BIGINT) + dx + 60, 120) - 60 AS cell_x
-  FROM (SELECT cid, clon, clat,
-               CAST(ceil(2.698D / ({_RJ_CELL}D *
-                    cos(radians(LEAST(ABS(clat) + 2.7D, 89.0D))))) AS INT) AS nx
-        FROM cities)
-  LATERAL VIEW explode(sequence(-nx, nx)) tx AS dx
-  LATERAL VIEW explode(sequence(-1, 1)) ty AS dy
-),
-pcells AS (
-  SELECT pid, lon, lat,
-         CAST(floor(lon / {_RJ_CELL}D) AS BIGINT) AS cell_x,
-         CAST(floor(lat / {_RJ_CELL}D) AS BIGINT) AS cell_y
-  FROM points
-)
-SELECT cid, pid, ROUND(d, 1) AS dist_m
-FROM (
-  SELECT /*+ BROADCAST(c) */ c.cid, p.pid, {_RJ_DIST} AS d
-  FROM pcells p JOIN cover c ON p.cell_x = c.cell_x AND p.cell_y = c.cell_y
-) t
-WHERE d <= {C(_RJ_R)}
-"""
+
+def _within_radius(spark, hint: str):
+    from pyspark.sql import functions as F
+
+    pts = spark.sql(f"WITH {POINTS_CTE} SELECT pid, lon, lat FROM points")
+    cities = spark.sql(f"WITH {_RJ_CITIES} SELECT * FROM cities")
+    return (joins.within_radius(pts, cities, _RJ_R, hint)
+                 .select("cid", "pid", F.round("dist_m", 1).alias("dist_m")))
 
 
 @q("within_radius_join", _RJ_ORACLE)
 def q_within_radius_join(spark, sf_dir):
     """Distance-threshold spatial join: every (point, city) pair within
-    300 km great-circle distance, via broadcast cell-cover equi-join +
-    exact verify (docstring at _RJ_SPARK). The DuckDB oracle is the
-    definitional brute-force cross join — deliberately a different plan,
-    same pairs."""
-    return spark.sql(_RJ_SPARK)
+    300 km great-circle distance, via a broadcast cell-cover equi-join +
+    exact verify; the points side never shuffles. The DuckDB oracle is
+    the definitional brute-force cross join — deliberately a different
+    plan, same pairs."""
+    return _within_radius(spark, "broadcast")
 
 
 @q("within_radius_shuffled", _RJ_ORACLE)
@@ -3891,24 +3766,17 @@ def q_within_radius_shuffled(spark, sf_dir):
     identical cover-cell geometry, but the join is a SHUFFLE_HASH equi-join
     on the cell id — each side exchanges once on (cell_x, cell_y), so at
     10^12 points x 10^8 query disks neither side needs to fit in memory and
-    hot cells are split by AQE's skew-join handling. No dedup pass is
-    needed: cover rows are distinct per (cid, cell) and every point falls
-    in exactly one cell, so a pair can only form once. Same brute-force
+    hot cells are split by AQE's skew-join handling. Same brute-force
     DuckDB oracle — same pairs, different physical plan (asserted in
     tests/test_plans.py: no broadcast, hash exchanges on both sides)."""
-    return spark.sql(_RJ_SPARK.replace("/*+ BROADCAST(c) */",
-                                       "/*+ SHUFFLE_HASH(c) */"))
+    return _within_radius(spark, "shuffle_hash")
 
 
 # --- as-of join ---------------------------------------------------------------
 # Each event matched to the LATEST state row at-or-before its timestamp —
-# the temporal join Spark has no native operator for. Engine shape: tag
-# state + event rows, one shuffle on the key, and a running
-# last-non-null window scan per key (rows unbounded preceding .. current;
-# state rows sort before events at equal ts so "at-or-before" is
-# inclusive). This is the canonical distributed as-of: one exchange +
-# one sort, no per-key merge_asof in Python. The oracle is DuckDB's
-# native ASOF LEFT JOIN — a different algorithm, same matches.
+# the temporal join Spark has no native operator for (joins.asof_join). The
+# oracle is DuckDB's native ASOF LEFT JOIN — a different algorithm, same
+# matches.
 
 _ASOF_RATES = """
 rates AS (
@@ -3917,26 +3785,6 @@ rates AS (
   GROUP BY user_id % 50, ts
 ),
 ev AS (SELECT event_id, user_id % 50 AS k, ts FROM events)
-"""
-
-_ASOF_SPARK = f"""
-WITH {_ASOF_RATES},
-tagged AS (
-  SELECT k, rts AS ts, rate, 1 AS is_rate, CAST(NULL AS BIGINT) AS event_id
-  FROM rates
-  UNION ALL
-  SELECT k, ts, CAST(NULL AS DOUBLE) AS rate, 0 AS is_rate, event_id
-  FROM ev
-),
-matched AS (
-  SELECT k, event_id, is_rate,
-         LAST(rate, true) OVER (
-             PARTITION BY k ORDER BY ts, is_rate DESC
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rate
-  FROM tagged
-)
-SELECT event_id, k, ROUND(rate, 4) AS rate
-FROM matched WHERE is_rate = 0
 """
 
 _ASOF_ORACLE = f"""
@@ -3951,7 +3799,12 @@ def q_asof_join(spark, sf_dir):
     """As-of join: each event takes the latest state (rate) row
     at-or-before its timestamp per key. Union-tag + running
     last-non-null window; one shuffle, no Python."""
-    return spark.sql(_ASOF_SPARK)
+    from pyspark.sql import functions as F
+
+    ev = spark.sql(f"WITH {_ASOF_RATES} SELECT * FROM ev")
+    rates = spark.sql(f"WITH {_ASOF_RATES} SELECT k, rts AS ts, rate FROM rates")
+    return (joins.asof_join(ev, rates, "k", "ts", "rate")
+                 .select("event_id", "k", F.round("rate", 4).alias("rate")))
 
 
 # --- explicit hot-cell salting (north rule: salting/AQE for skewed cells) ----

@@ -18,8 +18,8 @@ from hypothesis import strategies as st
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from proj_spark.hexgrid import (  # noqa: E402
-    DIGITS, child_digit, cube_round, hex_ancestry, hex_children, hex_parent,
-    xy_to_hex)
+    DIGITS, child_digit, cube_round, cube_round_sql, hex_ancestry,
+    hex_children, hex_parent, xy_to_hex)
 
 coord = st.integers(min_value=-10**6, max_value=10**6)
 
@@ -75,23 +75,51 @@ def test_cube_round_at_centers_and_offsets():
     assert (oq == q).all() and (orr == r).all()
 
 
-def test_xy_to_hex_matches_querylib_binning():
-    """xy_to_hex reproduces the SQL axial mapping at the 250 km size used
-    by hex_tile_counts (spot grid over the mercator extent)."""
+def _mercator_grid():
+    """Spot grid over the mercator extent and its quantized fractional
+    axial coords at the 250 km size used by hex_tile_counts; it includes
+    true hexagon-corner points (axial fraction 1/3)."""
     xs = np.linspace(-2.0e7, 2.0e7, 101)
     ys = np.linspace(-1.9e7, 1.9e7, 101)
     X, Y = np.meshgrid(xs, ys)
-    q1, r1 = xy_to_hex(X.ravel(), Y.ravel(), 250000.0)
-    aq = np.round((np.sqrt(3.0) / 3.0 * X.ravel() - Y.ravel() / 3.0)
-                  / 250000.0, 6)
-    ar = np.round((Y.ravel() * 2.0 / 3.0) / 250000.0, 6)
+    x, y = X.ravel(), Y.ravel()
+    aq = np.round((np.sqrt(3.0) / 3.0 * x - y / 3.0) / 250000.0, 6)
+    ar = np.round((y * 2.0 / 3.0) / 250000.0, 6)
+    return x, y, aq, ar
+
+
+def test_xy_to_hex_matches_querylib_binning():
+    """xy_to_hex reproduces the SQL axial mapping at the 250 km size used
+    by hex_tile_counts (spot grid over the mercator extent)."""
+    x, y, aq, ar = _mercator_grid()
+    q1, r1 = xy_to_hex(x, y, 250000.0)
     q2, r2 = cube_round(aq, ar)
     # the grid includes true hexagon-corner points (axial fraction 1/3):
     # the shared round-to-6 quantization is what makes both sides agree
     assert (q1 == q2).all() and (r1 == r2).all()
     # and the raw (unquantized) mapping agrees everywhere off the corners
-    q3, r3 = xy_to_hex(X.ravel(), Y.ravel(), 250000.0, decimals=None)
+    q3, r3 = xy_to_hex(x, y, 250000.0, decimals=None)
     assert ((q1 == q3) & (r1 == r3)).mean() > 0.999
+
+
+def test_cube_round_sql_matches_numpy():
+    """The SQL snap every hex query runs (engine and oracle alike, so the
+    oracle sweep cannot see a change to it) equals cube_round, run in
+    DuckDB over the corner-heavy mercator grid."""
+    import duckdb
+    import pandas as pd
+
+    _, _, aq, ar = _mercator_grid()
+    rounds, hq, hr = cube_round_sql("aq", "ar")
+    axial = pd.DataFrame({"aq": aq, "ar": ar})
+    with duckdb.connect() as con:
+        con.register("axial", axial)
+        got = con.sql(f"WITH cube AS (SELECT aq, ar, {rounds} FROM axial) "
+                      f"SELECT CAST({hq} AS BIGINT) AS hq, "
+                      f"CAST({hr} AS BIGINT) AS hr FROM cube").df()
+    q, r = cube_round(aq, ar)
+    np.testing.assert_array_equal(got["hq"].to_numpy(), q)
+    np.testing.assert_array_equal(got["hr"].to_numpy(), r)
 
 
 def test_packed_id_truncation():

@@ -100,6 +100,15 @@ class TestCover:
                     assert (x // 1_000_000, y // 1_000_000) in cells
 
 
+def test_within_radius_rejects_radius_wider_than_cell():
+    """The cover spans one latitude cell each way, so a radius whose
+    latitude span exceeds the cell would silently miss pairs."""
+    from proj_spark import joins
+    too_wide = np.radians(joins.RADIUS_CELL_DEG) * joins.SPHERE_R * 1.01
+    with pytest.raises(ValueError, match="wider than"):
+        joins.within_radius(None, None, too_wide, "broadcast")
+
+
 @pytest.mark.spark
 class TestSparkJoins:
     @pytest.fixture(scope="class")
@@ -182,3 +191,34 @@ class TestSparkJoins:
                              columns=["qid", "rank", "pid", "dist_sq"])
                 .sort_values(["qid", "rank"]).reset_index(drop=True))
         pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    def test_within_radius_antimeridian_matches_bruteforce(self, spark):
+        """A center within 1 deg of the antimeridian pairs with points on
+        both sides of it: the wrapped cover equals the brute force."""
+        import pandas as pd
+        from proj_spark import joins
+
+        lon, lat = np.meshgrid(np.arange(-180.0, 180.0, 0.25),
+                               np.arange(10.0, 30.0, 0.25))
+        lon, lat = lon.ravel(), lat.ravel()
+        pts = pd.DataFrame({"pid": np.arange(len(lon)), "lon": lon, "lat": lat})
+        ctr = pd.DataFrame({"cid": [0, 1], "clon": [179.4, -179.9],
+                            "clat": [20.1, 14.3]})
+        radius = 300_000.0
+        got = {(r.cid, r.pid) for r in joins.within_radius(
+            spark.createDataFrame(pts), spark.createDataFrame(ctr),
+            radius, "broadcast").collect()}
+
+        want, edge = set(), set()
+        rl, rp = np.radians(lon), np.radians(lat)
+        for c in ctr.itertuples():
+            cl, cp = np.radians(c.clon), np.radians(c.clat)
+            d = joins.SPHERE_R * np.arccos(np.clip(
+                np.sin(cp) * np.sin(rp)
+                + np.cos(cp) * np.cos(rp) * np.cos(rl - cl), -1.0, 1.0))
+            want |= {(c.cid, int(i)) for i in np.flatnonzero(d <= radius)}
+            # libm may differ by an ulp: leave knife-edge pairs out
+            edge |= {(c.cid, int(i))
+                     for i in np.flatnonzero(np.abs(d - radius) < 1e-3)}
+        assert {lon[i] > 0 for c, i in want if c == 0} == {True, False}
+        assert got - edge == want - edge

@@ -165,22 +165,22 @@ _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _crossings():
     """(file, name) -> count of code tokens (not strings or comments)
-    naming a Python-crossing API, outside stages.py."""
-    hits = Counter()
-    for top in ("proj_spark", "jobs"):
+    naming a Python-crossing API, outside stages.py: the engine, the jobs
+    and the benchmark drivers."""
+    paths = [os.path.join(_ROOT, "bench.py")]
+    for top in ("proj_spark", "jobs", "BENCH"):
         for d, _, files in os.walk(os.path.join(_ROOT, top)):
-            for f in files:
-                if not f.endswith(".py"):
-                    continue
-                path = os.path.join(d, f)
-                rel = os.path.relpath(path, _ROOT)
-                if rel == os.path.join("proj_spark", "stages.py"):
-                    continue
-                with open(path, encoding="utf-8") as fh:
-                    src = fh.read()
-                for tok in tokenize.generate_tokens(io.StringIO(src).readline):
-                    if tok.type == tokenize.NAME and tok.string in _CROSSINGS:
-                        hits[(rel, tok.string)] += 1
+            paths += [os.path.join(d, f) for f in files if f.endswith(".py")]
+    hits = Counter()
+    for path in paths:
+        rel = os.path.relpath(path, _ROOT)
+        if rel == os.path.join("proj_spark", "stages.py"):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            src = fh.read()
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+            if tok.type == tokenize.NAME and tok.string in _CROSSINGS:
+                hits[(rel, tok.string)] += 1
     return hits
 
 
