@@ -1,6 +1,11 @@
-r"""Geodesic polygon perimeter + area — the reference's only aggregate
-(geod_polygon_addpoint/geod_polygon_compute, src/geodesic.h:124,
-src/geodesic.c:1104-1225).
+r"""Geodesy operators: polygon perimeter + area — the reference's only
+aggregate (geod_polygon_addpoint/geod_polygon_compute, src/geodesic.h:124,
+src/geodesic.c:1104-1225) — and Spark column operators over degree
+columns, each one Arrow-batched UDF (``stages.numpy_udf``) whose closure
+carries the ellipsoid: :func:`inverse_distance` (geod_inverse),
+:func:`direct_destination` (geod_direct) and :func:`ring_measures`
+(perimeter and signed area of fixed-arity rings given as 2k vertex
+columns). They return raw values; a query rounds as its oracle needs.
 
 Perimeter is the sum of Karney inverse distances. Area uses Green's theorem
 on the ellipsoid: the surface area swept between a path and the equator is
@@ -30,6 +35,7 @@ import numpy as np
 
 from .kernels.core import Ellipsoid, adjlon
 from .kernels import geodesic as geod
+from .stages import numpy_udf
 
 _GL_ORDER = 24
 _GL_PANELS = 16
@@ -217,3 +223,50 @@ def rings_perimeter_area(ell: Ellipsoid, lons, lats):
     area = _reduce_area(S12.reshape(nr, k).sum(axis=1), crossings,
                         ellipsoid_area(ell))
     return perimeter, area
+
+
+def ring_radians(lonlat):
+    """(lon1, lat1, ..., lonk, latk) degree arrays -> (n, k) ring lon and
+    lat arrays in radians."""
+    r = np.pi / 180.0
+    return (np.stack(lonlat[0::2], axis=1) * r,
+            np.stack(lonlat[1::2], axis=1) * r)
+
+
+# ---------------------------------------------------------------------------
+# Spark column operators (degree columns in, metres / degrees out)
+# ---------------------------------------------------------------------------
+
+
+def inverse_distance(ell: Ellipsoid, lon1, lat1, lon2, lat2):
+    """Geodesic distance (m) between two degree points, a double column."""
+    @numpy_udf("double")
+    def s12(lon1, lat1, lon2, lat2):
+        r = np.pi / 180.0
+        return geod.geod_inverse(ell, lon1 * r, lat1 * r, lon2 * r,
+                                 lat2 * r)[0]
+
+    return s12(lon1, lat1, lon2, lat2)
+
+
+def direct_destination(ell: Ellipsoid, lon1, lat1, azi, s):
+    """Destination struct(lon2, lat2), degrees, of the geodesic leaving
+    (lon1, lat1) at azimuth ``azi`` (degrees) for ``s`` metres."""
+    @numpy_udf("struct<lon2:double, lat2:double>")
+    def dest(lon1, lat1, azi, s):
+        r = np.pi / 180.0
+        lo2, la2, _ = geod.geod_direct(ell, lon1 * r, lat1 * r, azi * r, s)
+        return lo2 / r, la2 / r
+
+    return dest(lon1, lat1, azi, s)
+
+
+def ring_measures(ell: Ellipsoid, *lonlat):
+    """struct(perim_m, area_m2) of closed rings given as 2k degree vertex
+    columns (lon1, lat1, ..., lonk, latk): :func:`rings_perimeter_area`,
+    signed area CCW positive."""
+    @numpy_udf("struct<perim_m:double, area_m2:double>")
+    def ring_agg(*lonlat):
+        return rings_perimeter_area(ell, *ring_radians(lonlat))
+
+    return ring_agg(*lonlat)

@@ -31,7 +31,8 @@ Parses the three classic PROJ datum-shift raster formats with numpy
   ``dlon``/``dlat`` (degrees), ``width``/``height`` (nodes), ``bands``
   (column -> unit), ``lon_positive`` ("east") and ``row0`` ("south"). The
   driver queries export their file-backed grids in this form for the
-  DuckDB oracles (``write_node_parquet``); a node parquet with no header
+  DuckDB oracles (``export_node_parquet``), whose bilinear replay reads
+  only the header (``node_parquet_header``); a node parquet with no header
   is refused, never opened with a guessed one.
 
 All loaded grids expose the same ``interp(lon_deg, lat_deg) ->
@@ -43,7 +44,7 @@ Spark-side scale note: a parsed grid is a plain numpy array pytree —
 broadcast once per job (SparkContext.broadcast or UDF closure capture);
 the multi-GB continental grid sets the reference streams from a CDN are
 out of scope (no external data), and would factor into the cell-keyed
-join form instead (querylib.raster_join_shift).
+join form instead (``joins.raster_lookup``).
 """
 
 from __future__ import annotations
@@ -481,6 +482,46 @@ def write_node_parquet(g: FileGrid, path: str) -> None:
     pq.write_table(table, path)
 
 
+def export_node_parquet(g: FileGrid, path: str) -> None:
+    """Write ``g``'s node parquet unless ``path`` exists, atomically
+    (driver-side only — never at module import, so executor re-imports
+    stay side-effect free)."""
+    if os.path.exists(path):
+        return
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.tmp.{os.getpid()}"
+    write_node_parquet(g, tmp)
+    os.replace(tmp, path)
+
+
+def _node_header(metadata) -> dict:
+    """Checked grid header from a node parquet's key-value metadata:
+    lon0/lat0/dlon/dlat (float), width/height (int), bands (col -> unit)."""
+    raw = (metadata or {}).get(_NODE_HEADER_KEY)
+    if raw is None:
+        raise ValueError("node parquet has no grid header metadata")
+    try:
+        hdr = json.loads(raw)
+        out = {k: float(hdr[k]) for k in ("lon0", "lat0", "dlon", "dlat")}
+        out.update(width=int(hdr["width"]), height=int(hdr["height"]),
+                   bands=dict(hdr["bands"]))
+    except (KeyError, TypeError, ValueError) as e:
+        raise ValueError(f"bad node parquet grid header: {e}") from e
+    if hdr.get("lon_positive") != "east" or hdr.get("row0") != "south":
+        raise ValueError("node parquet must be east-positive, row 0 south")
+    for col, unit in out["bands"].items():
+        if _NODE_BANDS.get(col, (None, None))[1] != unit:
+            raise ValueError(f"unsupported node band {col!r} in {unit!r}")
+    return out
+
+
+def node_parquet_header(path: str) -> dict:
+    """A node parquet file's grid header, read from its footer alone (no
+    node is read): ``_node_header``'s dict."""
+    import pyarrow.parquet as pq
+    return _node_header(pq.read_metadata(path).metadata)
+
+
 def parse_node_parquet(data: bytes, name: str = "nodes") -> FileGrid:
     """Node parquet -> FileGrid; the header comes only from the file's
     metadata, and every node of the width x height raster must be present
@@ -488,21 +529,9 @@ def parse_node_parquet(data: bytes, name: str = "nodes") -> FileGrid:
     import pyarrow as pa
     import pyarrow.parquet as pq
     pf = pq.ParquetFile(pa.BufferReader(data))
-    raw = (pf.metadata.metadata or {}).get(_NODE_HEADER_KEY)
-    if raw is None:
-        raise ValueError("node parquet has no grid header metadata")
-    try:
-        hdr = json.loads(raw)
-        width, height = int(hdr["width"]), int(hdr["height"])
-        geo = [float(hdr[k]) for k in ("lon0", "lat0", "dlon", "dlat")]
-        bands = dict(hdr["bands"])
-    except (KeyError, TypeError, ValueError) as e:
-        raise ValueError(f"bad node parquet grid header: {e}") from e
-    if hdr.get("lon_positive") != "east" or hdr.get("row0") != "south":
-        raise ValueError("node parquet must be east-positive, row 0 south")
-    for col, unit in bands.items():
-        if _NODE_BANDS.get(col, (None, None))[1] != unit:
-            raise ValueError(f"unsupported node band {col!r} in {unit!r}")
+    hdr = _node_header(pf.metadata.metadata)
+    width, height, bands = hdr["width"], hdr["height"], hdr["bands"]
+    geo = [hdr[k] for k in ("lon0", "lat0", "dlon", "dlat")]
     t = pf.read(columns=["r", "c", *bands])
     r = t["r"].to_numpy()
     c = t["c"].to_numpy()

@@ -21,7 +21,10 @@ candidates only. This is the one range-join entry point.
 
 Raster lookup (``raster_lookup``): bilinear interpolation as a join —
 points explode to their 4 corner nodes, equi-join the grid table and pivot
-back in the SQL expression's operation order.
+back in the SQL expression's operation order. Its lookup form
+(``grid_shift``) ships the raster in a UDF closure instead: the
+degree-domain hgridshift / vgridshift / unified gridshift / tinshift of
+the registry queries.
 
 As-of (``asof_join``): union-tag plus a running last-non-null window per
 key; one exchange and one sort.
@@ -125,7 +128,8 @@ def within_radius(points: DataFrame, centers: DataFrame, radius_m: float,
     points side never shuffles) or ``"shuffle_hash"`` (both sides exchange
     once on the cell, for a cover too large to broadcast). Cover rows are
     distinct per (cid, cell) and each point has one cell, so a pair forms
-    once. The cover is sound while |clat| + radius < 89 deg."""
+    once. A cap that reaches within 1 deg of a pole (|clat| + radius >= 89
+    deg) takes every longitude cell once, so pairs across the pole form."""
     span = float(np.degrees(radius_m / SPHERE_R))
     if not span <= RADIUS_CELL_DEG:
         # the +-1 latitude-cell cover would miss pairs
@@ -141,11 +145,16 @@ def within_radius(points: DataFrame, centers: DataFrame, radius_m: float,
     def wrap(cx):
         return f"pmod({cx} + {half}, {_RADIUS_LON_CELLS}) - {half}"
 
-    nx = (f"CAST(ceil({span!r}D / ({RADIUS_CELL_DEG!r}D * cos(radians("
-          f"LEAST(ABS(clat) + {span!r}D, 89.0D))))) AS INT)")
-    cover = (centers.selectExpr(
+    # longitude half-span in cells; at the pole cap, the whole circle:
+    # dx runs -half .. half - 1, so no cell wraps onto another
+    nx = (f"CASE WHEN ABS(clat) + {span!r}D >= 89.0D THEN {half} ELSE"
+          f" CAST(ceil({span!r}D / ({RADIUS_CELL_DEG!r}D * cos(radians("
+          f"ABS(clat) + {span!r}D)))) AS INT) END")
+    cover = (centers.selectExpr("cid", "clon", "clat", f"{nx} AS nx")
+             .selectExpr(
                  "cid", "clon", "clat",
-                 f"explode(transform(sequence(-{nx}, {nx}),"
+                 f"explode(transform(sequence(-nx, LEAST(nx,"
+                 f" {_RADIUS_LON_CELLS - 1} - nx)),"
                  f" dx -> {wrap(cell('clon') + ' + dx')})) AS cell_x")
              .selectExpr(
                  "cid", "clon", "clat", "cell_x",
@@ -192,6 +201,35 @@ def raster_lookup(points: DataFrame, grid: DataFrame, bands: list,
     return cand.groupBy(*keys).agg(*[F.expr(" + ".join(
         f"max(CASE WHEN dx = {dx} AND dy = {dy} THEN {b} * fx * fy END)"
         for dx, dy in _CORNERS)).alias(b) for b in bands])
+
+
+def grid_shift(interp, lon: str, lat: str, per_degree: float):
+    """Degree-domain shift of the ``lon``/``lat`` degree columns, the
+    lookup form of :func:`raster_lookup` (the raster rides the UDF
+    closure). ``interp(lon, lat) -> (dlon, dlat, dz)`` gives horizontal
+    offsets in 1/``per_degree`` degrees (3600.0 for a grid's arcsec, 1.0
+    for a TIN's degrees) and dz in metres. Returns struct(lon_out,
+    lat_out, dz), lon_out = lon + dlon / per_degree: the SQL oracles'
+    fp-op order, so their bilinear replay agrees bit for bit. The caller
+    applies dz in the JVM (h - dz for vgridshift, reference
+    vgridshift.cpp:201; h + dz for the unified gridshift and tinshift),
+    the same IEEE operation. The radians-path operators are checked by
+    roundtrip queries instead: deg -> rad -> deg wobbles the 15th digit,
+    which can flip a ROUND at quantized-grid values."""
+    @numpy_udf("struct<lon_out:double, lat_out:double, dz:double>")
+    def grid_shift(lon, lat):
+        dlon, dlat, dz = interp(lon, lat)
+        return lon + dlon / per_degree, lat + dlat / per_degree, dz
+
+    return grid_shift(lon, lat)
+
+
+def s2_cell12(lon: str, lat: str):
+    """Level-12 S2 cell id of the ``lon``/``lat`` degree columns
+    (``kernels.s2cell.cell12``, ~2 km cells; NULL for a point with no
+    cell): the binning key of the geolocate job and ``s2_cell_counts``."""
+    from .kernels import s2cell
+    return numpy_udf("long")(s2cell.cell12)(lon, lat)
 
 
 def asof_join(events: DataFrame, states: DataFrame, key: str, ts: str,

@@ -395,9 +395,6 @@ class GeodSolver:
     def _I1(self, eps, sinx, cosx, sigma):
         return (1.0 + _A1m1(eps)) * (sigma + _sin_series(_C1(eps), sinx, cosx))
 
-    def _I2(self, eps, sinx, cosx, sigma):
-        return (1.0 + _A2m1(eps)) * (sigma + _sin_series(_C2(eps), sinx, cosx))
-
     def _I3(self, eps, sinx, cosx, sigma):
         return self._A3(eps) * (sigma + _sin_series(self._C3(eps), sinx, cosx))
 

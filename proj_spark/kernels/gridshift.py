@@ -12,11 +12,12 @@ exact same corner values inline — bilinear is pure arithmetic, so Spark
 and the oracle agree bit-for-bit).
 
 Spark-side scale note: grids used here are broadcast-sized (executors hold
-the numpy arrays via closure). For continent-scale grid sets at 100 TB the
-same operator factors into a cell-keyed equi-join (points keyed by grid
-cell -> join 4 corner rows -> weighted sum); querylib's
-``raster_join_shift`` query implements that join form with pure DataFrame
-ops so both physical strategies are exercised.
+the numpy arrays via closure: ``joins.grid_shift``, the degree-domain
+shift the registry's grid-shift queries run). For continent-scale grid
+sets at 100 TB the same operator factors into a cell-keyed equi-join
+(points keyed by grid cell -> join 4 corner rows -> weighted sum):
+``joins.raster_lookup``, which the ``raster_join_shift`` query runs, so
+both physical strategies are exercised.
 """
 
 from __future__ import annotations
@@ -44,17 +45,20 @@ class SyntheticGrid:
     @staticmethod
     def _val(row, col, band):
         """Deterministic integer-formula band values; mirrored verbatim in
-        the SQL oracle (querylib._grid_val_sql)."""
+        SQL by querylib._grid_val_sql (the oracles' bilinear and the grid
+        table of raster_join_shift)."""
         k = (row * 7919 + col * 104729 + band * 15485863) % 2000 - 1000
         return k / 100.0  # [-10, 10) arcsec / metres, 0.01 steps
 
     def interp(self, lon_deg, lat_deg):
-        """Bilinear-interpolated (dlon_as, dlat_as, dz_m); NaN outside."""
+        """Bilinear-interpolated (dlon_as, dlat_as, dz_m); NaN outside and
+        for a NaN input."""
         fx = (lon_deg - self.lon0) / self.dlon
         fy = (lat_deg - self.lat0) / self.dlat
         inside = (fx >= 0) & (fx <= self.width - 1) & (fy >= 0) & (fy <= self.height - 1)
-        c0 = np.clip(np.floor(fx), 0, self.width - 2).astype(np.int64)
-        r0 = np.clip(np.floor(fy), 0, self.height - 2).astype(np.int64)
+        # a NaN index would cast to INT64_MIN: zero it (`inside` is False)
+        c0 = np.clip(np.floor(np.nan_to_num(fx)), 0, self.width - 2).astype(np.int64)
+        r0 = np.clip(np.floor(np.nan_to_num(fy)), 0, self.height - 2).astype(np.int64)
         wx = fx - c0
         wy = fy - r0
         out = []

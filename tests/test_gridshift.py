@@ -31,6 +31,26 @@ def test_outside_grid_poisons():
     assert np.isnan(dlon[0]) and np.isfinite(dlon[1])
 
 
+def test_nan_input_poisons_without_raising():
+    """A NaN coordinate (e.g. an inverse guess that left the grid) gives
+    NaN shifts, not an out-of-range index from casting NaN to int64."""
+    g = get_grid("synthetic_world")
+    out = g.interp(np.array([np.nan, 10.0, 12.3]), np.array([0.0, np.nan, 48.9]))
+    for band in out:
+        assert np.isnan(band[:2]).all() and np.isfinite(band[2])
+
+
+def test_unified_inverse_of_point_leaving_grid_is_nan():
+    """Forward-shifting lon 179.99906 lands east of the synthetic world
+    grid's 180 deg edge; the inverse there is NaN, not an exception."""
+    op = proj_spark.create("+proj=gridshift +grids=synthetic_world")
+    lam, phi = np.radians([179.99906]), np.radians([-26.85298])
+    x, y, z, t = op.fwd(lam, phi, np.zeros(1), np.full(1, np.nan))
+    assert np.degrees(x[0]) > 180.0
+    xi, yi, _, _ = op.inv(x, y, z, t)
+    assert np.isnan(xi[0]) and np.isnan(yi[0])
+
+
 def test_hgridshift_roundtrip_below_mm():
     op = proj_spark.create("+proj=hgridshift +grids=synthetic_fine")
     rng = np.random.default_rng(2)

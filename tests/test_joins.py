@@ -109,6 +109,24 @@ def test_within_radius_rejects_radius_wider_than_cell():
         joins.within_radius(None, None, too_wide, "broadcast")
 
 
+def _within_bruteforce(lon, lat, ctr, radius):
+    """Exact great-circle pairs (cid, point index) of ``ctr``'s centers,
+    and the knife-edge pairs within 1 mm of the radius, where libm may
+    differ by an ulp."""
+    from proj_spark import joins
+    want, edge = set(), set()
+    rl, rp = np.radians(lon), np.radians(lat)
+    for c in ctr.itertuples():
+        cl, cp = np.radians(c.clon), np.radians(c.clat)
+        d = joins.SPHERE_R * np.arccos(np.clip(
+            np.sin(cp) * np.sin(rp)
+            + np.cos(cp) * np.cos(rp) * np.cos(rl - cl), -1.0, 1.0))
+        want |= {(c.cid, int(i)) for i in np.flatnonzero(d <= radius)}
+        edge |= {(c.cid, int(i))
+                 for i in np.flatnonzero(np.abs(d - radius) < 1e-3)}
+    return want, edge
+
+
 @pytest.mark.spark
 class TestSparkJoins:
     @pytest.fixture(scope="class")
@@ -209,16 +227,38 @@ class TestSparkJoins:
             spark.createDataFrame(pts), spark.createDataFrame(ctr),
             radius, "broadcast").collect()}
 
-        want, edge = set(), set()
-        rl, rp = np.radians(lon), np.radians(lat)
-        for c in ctr.itertuples():
-            cl, cp = np.radians(c.clon), np.radians(c.clat)
-            d = joins.SPHERE_R * np.arccos(np.clip(
-                np.sin(cp) * np.sin(rp)
-                + np.cos(cp) * np.cos(rp) * np.cos(rl - cl), -1.0, 1.0))
-            want |= {(c.cid, int(i)) for i in np.flatnonzero(d <= radius)}
-            # libm may differ by an ulp: leave knife-edge pairs out
-            edge |= {(c.cid, int(i))
-                     for i in np.flatnonzero(np.abs(d - radius) < 1e-3)}
+        want, edge = _within_bruteforce(lon, lat, ctr, radius)
         assert {lon[i] > 0 for c, i in want if c == 0} == {True, False}
+        assert got - edge == want - edge
+
+    def test_within_radius_across_pole_matches_bruteforce(self, spark):
+        """A cap that reaches within 1 deg of a pole covers every
+        longitude cell: points across the pole pair (center (0, 88.5) and
+        point (179, 89.9) are 177.9 km apart), and no cell is covered
+        twice, so no pair repeats."""
+        import pandas as pd
+        from proj_spark import joins
+
+        lon, lat = np.meshgrid(np.arange(-180.0, 180.0, 1.0),
+                               np.r_[np.arange(-89.9, -84.0, 0.2),
+                                     np.arange(84.1, 90.0, 0.2)])
+        lon, lat = lon.ravel(), lat.ravel()
+        pts = pd.DataFrame({"pid": np.arange(len(lon)), "lon": lon, "lat": lat})
+        clat = [87.0, 88.0, 88.5, 89.0, 89.5]
+        ctr = pd.DataFrame({"cid": np.arange(10),
+                            "clon": [0.0, 45.0, -120.0, 179.5, -3.0] * 2,
+                            "clat": clat + [-c for c in clat]})
+        radius = 300_000.0
+        rows = [(r.cid, r.pid) for r in joins.within_radius(
+            spark.createDataFrame(pts), spark.createDataFrame(ctr),
+            radius, "broadcast").collect()]
+        got = set(rows)
+        assert len(rows) == len(got)
+
+        want, edge = _within_bruteforce(lon, lat, ctr, radius)
+        # within 2 deg of a pole, a center pairs across it
+        for c in ctr[ctr.clat.abs() >= 88.0].itertuples():
+            far = {abs((lon[i] - c.clon + 180.0) % 360.0 - 180.0) > 90.0
+                   for cid, i in want if cid == c.cid}
+            assert far == {True, False}
         assert got - edge == want - edge

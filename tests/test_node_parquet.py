@@ -9,7 +9,8 @@ import pyarrow.parquet as pq
 import pytest
 
 from proj_spark.errors import INVALID_OP_FILE_NOT_FOUND_OR_INVALID, ProjError
-from proj_spark.gridfiles import (FileGrid, load_grid_file, parse_ntv2,
+from proj_spark.gridfiles import (FileGrid, load_grid_file,
+                                  node_parquet_header, parse_ntv2,
                                   write_node_parquet)
 
 TESTGRIDS = os.path.join(os.path.dirname(os.path.dirname(
@@ -84,3 +85,61 @@ def test_grid_loader_resolves_like_data_file_resolver(tmp_path, monkeypatch):
                         str(tmp_path / "missing" / "fallback.gsb"))
     assert resolve_data_file("fallback.gsb") == str(tmp_path / "fallback.gsb")
     _same_grid(load_grid_file("fallback.gsb"), g)
+
+
+def test_header_alone_equals_parsed_grid(tmp_path):
+    g = FileGrid("t", -7.3, 41.1, 1 / 6, 0.1, 4, 3, dz_m=np.ones((3, 4)))
+    path = str(tmp_path / "g.parquet")
+    write_node_parquet(g, path)
+    hdr = node_parquet_header(path)
+    assert [hdr[k] for k in ("lon0", "lat0", "dlon", "dlat", "width",
+                             "height", "bands")] == \
+        [g.lon0, g.lat0, g.dlon, g.dlat, g.width, g.height, {"dz": "m"}]
+
+
+@pytest.mark.spark
+def test_node_bilinear_oracle_equals_grid_shift(tmp_path):
+    """The oracles' DuckDB bilinear replay from a node parquet
+    (``querylib._node_bilinear_sql``) equals the engine's degree-domain
+    shift (``joins.grid_shift``) bit for bit at interior points, on a grid
+    with non-dyadic spacing, both horizontal bands and dz."""
+    import duckdb
+    import pandas as pd
+    from proj_spark import joins, querylib
+    from proj_spark.session import get_spark
+
+    rng = np.random.default_rng(11)
+    shape = (17, 23)
+    g = FileGrid("t", -7.3, 41.1, 1 / 6, 0.1, shape[1], shape[0],
+                 dlon_as=rng.normal(size=shape) * 3.0,
+                 dlat_as=rng.normal(size=shape) * 3.0,
+                 dz_m=rng.normal(size=shape) * 30.0)
+    path = str(tmp_path / "g.parquet")
+    write_node_parquet(g, path)
+    n = 3000
+    pts = pd.DataFrame({
+        "pid": np.arange(n),
+        "lon": g.lon0 + rng.uniform(0.001, 0.999, n) * g.dlon * (g.width - 1),
+        "lat": g.lat0 + rng.uniform(0.001, 0.999, n) * g.dlat * (g.height - 1),
+        "h": rng.uniform(-100.0, 3000.0, n)})
+    cols = ["pid", "lon_out", "lat_out", "z_down", "z_up"]
+
+    con = duckdb.connect()
+    con.register("pts", pts)
+    want = con.sql(querylib._node_bilinear_sql(
+        node_parquet_header(path), path, "pts", "pid",
+        *querylib._HSHIFT_COLS, "h - {dz} AS z_down",
+        "h + {dz} AS z_up")).df()
+    con.close()
+
+    spark = get_spark("test_node_parquet", cpus=2)
+    got = (spark.createDataFrame(pts)
+           .withColumn("_s", joins.grid_shift(g.interp, "lon", "lat", 3600.0))
+           .selectExpr("pid", "_s.lon_out", "_s.lat_out",
+                       "h - _s.dz AS z_down", "h + _s.dz AS z_up")
+           .toPandas())
+    want, got = (d[cols].sort_values("pid").reset_index(drop=True)
+                 for d in (want, got))
+    assert len(want) == n
+    for c in cols[1:]:
+        assert np.array_equal(got[c].to_numpy(), want[c].to_numpy()), c

@@ -9,6 +9,7 @@ empty Arrow batch yields an empty result.
 
 from __future__ import annotations
 
+import ast
 import io
 import math
 import os
@@ -186,3 +187,46 @@ def _crossings():
 
 def test_only_stages_crosses_into_python():
     assert dict(_crossings()) == ALLOWED
+
+
+# --- guard: no operator UDF is defined in the query registry ---------------
+
+# registry query -> the reason its numpy_udf stays in querylib.py rather
+# than in an operator module (also commented at the call site)
+QUERYLIB_UDFS = {
+    "compound_geoid_height": "the compound CRS->CRS plan at t = 0; it "
+                             "cannot run without the egm96 file",
+    "nad27_dispatch_retry": "returns the dispatcher's candidate code",
+    "factors_merc": "factors() returns a dict, not a column operator",
+    "geod_polygon_area_wgs84": "the oracle's certification (the ok bound)",
+}
+
+
+def _querylib_udfs():
+    """Registry query -> count of ``numpy_udf(...)`` calls (a decorator
+    or a call; the import does not count) in its ``q_`` function, from
+    querylib.py's syntax tree; one outside every query counts under
+    None."""
+    with open(os.path.join(_ROOT, "proj_spark", "querylib.py"),
+              encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    hits = Counter()
+
+    def visit(node, query):
+        if isinstance(node, ast.FunctionDef) and node.name.startswith("q_"):
+            query = node.name[2:]
+        if isinstance(node, ast.Call) and "numpy_udf" in (
+                getattr(node.func, "id", None),
+                getattr(node.func, "attr", None)):
+            hits[query] += 1
+        for child in ast.iter_child_nodes(node):
+            visit(child, query)
+
+    visit(tree, None)
+    return hits
+
+
+def test_querylib_defines_no_operator_udf():
+    """Operator UDFs live in operator modules (joins, geodesy, ann, ...);
+    querylib.py keeps only the allowlisted ones."""
+    assert dict(_querylib_udfs()) == dict.fromkeys(QUERYLIB_UDFS, 1)
