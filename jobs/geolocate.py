@@ -78,8 +78,10 @@ def main(argv=None) -> int:
       WHERE lat IS NOT NULL AND ABS(lat) <= 85.06D AND ABS(lon) <= 180.0D""")
 
     def add_s2(df):
-        from proj_spark.joins import s2_cell12
-        return df.withColumn("s2_cell", s2_cell12("lon", "lat"))
+        from proj_spark.kernels import s2cell
+        from proj_spark.stages import numpy_udf
+        return df.withColumn("s2_cell",
+                             numpy_udf("long")(s2cell.cell12)("lon", "lat"))
 
     job = CheckpointedJob("geolocate", args.out, args.buckets, key_col="url",
                           job_desc=f"extract+webmerc z{z}+s2 L12")

@@ -224,14 +224,6 @@ def grid_shift(interp, lon: str, lat: str, per_degree: float):
     return grid_shift(lon, lat)
 
 
-def s2_cell12(lon: str, lat: str):
-    """Level-12 S2 cell id of the ``lon``/``lat`` degree columns
-    (``kernels.s2cell.cell12``, ~2 km cells; NULL for a point with no
-    cell): the binning key of the geolocate job and ``s2_cell_counts``."""
-    from .kernels import s2cell
-    return numpy_udf("long")(s2cell.cell12)(lon, lat)
-
-
 def asof_join(events: DataFrame, states: DataFrame, key: str, ts: str,
               value: str) -> DataFrame:
     """Left as-of join: each ``events`` row gains ``value`` from the latest

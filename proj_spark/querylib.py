@@ -567,9 +567,13 @@ GROUP BY 1
 @q("s2_cell_counts", _s2_oracle())
 def q_s2_cell_counts(spark, sf_dir):
     from pyspark.sql import functions as F
+    from .kernels import s2cell
 
     df = _sql_points(spark, POINTS_CTE, "points")
-    return (df.withColumn("cell", joins.s2_cell12("lon", "lat"))
+    # the S2 kernel applied as is: a cell id needs no operator module
+    # (jobs/geolocate.py makes the same one-line column)
+    cell12 = numpy_udf("long")(s2cell.cell12)
+    return (df.withColumn("cell", cell12("lon", "lat"))
               .groupBy("cell").agg(F.count("*").alias("n_docs"))
               .orderBy(F.desc("n_docs"), "cell"))
 
@@ -1153,15 +1157,14 @@ def q_raster_join_shift(spark, sf_dir):
 
 import os  # noqa: E402
 
-from .gridfiles import (export_node_parquet, node_parquet_header,  # noqa: E402
-                        parse_ctable2, parse_gtx, parse_node_parquet,
+from .gridfiles import (export_node_parquet, load_grid_file,  # noqa: E402
+                        node_parquet_header, parse_ctable2, parse_gtx,
                         parse_ntv2, register_grid_file)
 
 _REF_TESTS = "/root/reference/data/tests"
 _TESTGRID_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "testgrids")
 
-_BETA_GSB = os.path.join(_REF_TESTS, "BETA2007.gsb")
 _EGM96_GTX = os.path.join(_REF_TESTS, "egm96_15_downsampled.gtx")
 _CONUS_CT2 = os.path.join(_REF_TESTS, "conus")
 _ALASKA_CT2 = os.path.join(_REF_TESTS, "alaska")
@@ -1246,16 +1249,9 @@ WITH {DE_POINTS_CTE}
                     "pid", *_HSHIFT_COLS)}""")
 def q_hgridshift_ntv2_fwd(spark, sf_dir):
     """hgridshift over the real BETA2007 NTv2 grid (DHDN->ETRS89;
-    reference NTv2Grid grids.cpp:2112-2165), read from the reference
-    ``.gsb`` when it is present, else from its node parquet (same nodes
-    and header). Degree-domain mirror of the operator's shift
-    (``joins.grid_shift``)."""
-    if os.path.isfile(_BETA_GSB):
-        with open(_BETA_GSB, "rb") as f:
-            g = parse_ntv2(f.read(), "BETA2007.gsb").grids[0]
-    else:
-        with open(_BETA_NODES, "rb") as f:
-            g = parse_node_parquet(f.read(), "BETA2007.gsb")
+    reference NTv2Grid grids.cpp:2112-2165), read from its node parquet.
+    Degree-domain mirror of the operator's shift (``joins.grid_shift``)."""
+    g = load_grid_file(_BETA_NODES)
     df = _sql_points(spark, DE_POINTS_CTE, "depoints")
     return _grid_shift(df, g).select("pid", "_s.lon_out", "_s.lat_out")
 

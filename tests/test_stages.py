@@ -199,6 +199,8 @@ QUERYLIB_UDFS = {
     "nad27_dispatch_retry": "returns the dispatcher's candidate code",
     "factors_merc": "factors() returns a dict, not a column operator",
     "geod_polygon_area_wgs84": "the oracle's certification (the ok bound)",
+    "s2_cell_counts": "the S2 kernel applied as is; a cell id needs no "
+                      "operator module",
 }
 
 
