@@ -39,8 +39,13 @@ bit-for-bit.
 
 Scale notes (100 TB): the points side never shuffles for PIP (broadcast
 join + mapPartitions-style UDF); skew from huge polygons ("ocean") only
-fans out candidate *rows*, which AQE splits; for kNN the big side shuffles
-once on cell, hot cells are handled by AQE skew-join; escalation volume is
+fans out candidate *rows*, which AQE splits. For kNN the ring cells
+((2R+1)^2 rows per query) are the broadcast side, so the points do not
+shuffle for the cell join; each round cuts its candidates to k per query
+map-side (a partial row_number limit) and exchanges them once on qid for
+the ranking window. Round 1, read by every later step, is materialized
+once per call (eager localCheckpoint); nothing is cached, so the
+intermediates live as long as the call's plan. Escalation volume is
 bounded by the cell size chosen vs data density.
 """
 
@@ -50,7 +55,6 @@ from functools import lru_cache
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 from . import geo_fixtures
 from .kernels import pip as pipk
@@ -243,28 +247,6 @@ def asof_join(events: DataFrame, states: DataFrame, key: str, ts: str,
                   .drop("_state"))
 
 
-# persisted intermediates of recent knn_join calls. Each call caches two
-# output-sized DataFrames that its returned lazy plan consumes several
-# times; they must stay cached while that plan is alive, so the function
-# cannot unpersist them itself. Keeping the most recent handles also lets
-# the cache manager's sameResult match serve REPEATED identical calls
-# (bench sweeps) from cache; older entries are evicted FIFO so storage
-# memory stays bounded across many distinct calls instead of leaking.
-_knn_persisted: list = []
-_KNN_CACHE_KEEP = 8  # 4 calls x 2 cached intermediates
-
-
-def release_knn_cache(keep: int = 0) -> None:
-    """Unpersist intermediates cached by earlier knn_join calls, keeping
-    the ``keep`` most recent handles."""
-    while len(_knn_persisted) > keep:
-        df = _knn_persisted.pop(0)
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # its SparkSession is already stopped; nothing to free
-
-
 def knn_join(spark, queries: DataFrame, points: DataFrame, k: int = 5,
              cell_i: int = KNN_CELL_I) -> DataFrame:
     """Exact planar kNN on int64 scaled coords.
@@ -273,94 +255,70 @@ def knn_join(spark, queries: DataFrame, points: DataFrame, k: int = 5,
     Returns (qid, rank, pid, dist_sq) with deterministic (dist_sq, pid)
     tie-break — identical to the brute-force oracle.
     """
-    release_knn_cache(keep=_KNN_CACHE_KEEP - 2)
+    def cell(c):
+        return f"CAST(floor({c} / {float(cell_i)!r}D) AS BIGINT)"
 
-    cell = float(cell_i)
-    pts = (points
-           .withColumn("cell_x", F.floor(F.col("px") / cell).cast("long"))
-           .withColumn("cell_y", F.floor(F.col("py") / cell).cast("long")))
-    dist = ((F.col("px") - F.col("qx")) * (F.col("px") - F.col("qx"))
-            + (F.col("py") - F.col("qy")) * (F.col("py") - F.col("qy")))
-    w = Window.partitionBy("qid").orderBy("dist_sq", "pid")
+    pts = points.selectExpr("pid", "px", "py", f"{cell('px')} AS cell_x",
+                            f"{cell('py')} AS cell_y")
+    dist = "(px - qx) * (px - qx) + (py - qy) * (py - qy) AS dist_sq"
+    top_k = "row_number() OVER (PARTITION BY qid ORDER BY dist_sq, pid) AS rank"
+    # distance from the query to the nearest edge of its block, scaled units
+    gap = (f"least(qx - (qcx - R) * {cell_i}, (qcx + R + 1) * {cell_i} - qx,"
+           f" qy - (qcy - R) * {cell_i}, (qcy + R + 1) * {cell_i} - qy) AS g")
 
-    def ring_round(qs: DataFrame, R):
+    def ring_round(qs: DataFrame, R: str) -> DataFrame:
         """Each query of ``qs`` probes the (2R+1)x(2R+1) cell block around
-        its own cell (``R`` a Column over ``qs``). Returns the persisted
-        top-k candidates and their certification stats
-        (qid, kth, n, g, certified)."""
-        q = (qs.select("qid", "qx", "qy", R.cast("long").alias("R"))
-               .withColumn("qcx", F.floor(F.col("qx") / cell).cast("long"))
-               .withColumn("qcy", F.floor(F.col("qy") / cell).cast("long"))
-               .withColumn("ox", F.explode(F.sequence(-F.col("R"), F.col("R"))))
-               .withColumn("oy", F.explode(F.sequence(-F.col("R"), F.col("R"))))
-               .select("qid", "qx", "qy", "qcx", "qcy", "R",
-                       (F.col("qcx") + F.col("ox")).alias("cell_x"),
-                       (F.col("qcy") + F.col("oy")).alias("cell_y")))
-        # persisted: <= k rows per query (output-sized), and the subtree
-        # above it — the big cell join + per-query window — feeds several
-        # consumers (stats, the certified rows, the next round's and the
-        # residue's anti-joins); without the persist Spark recomputes that
-        # join once per consumer.
-        cand = (pts.join(F.broadcast(q), on=["cell_x", "cell_y"])
-                   .select("qid", "qx", "qy", "qcx", "qcy", "R", "pid",
-                           dist.alias("dist_sq"))
-                   .withColumn("rank", F.row_number().over(w))
-                   .filter(F.col("rank") <= k)
-                   .persist())
-        _knn_persisted.append(cand)
-        # certification: the k-th distance must not exceed the squared
-        # distance from the query to the block boundary, beyond which
-        # unseen points could exist. gx/gy = distance to the nearest block
-        # edge in scaled units.
-        r = F.col("R")
-        gx = F.least(F.col("qx") - (F.col("qcx") - r) * F.lit(cell_i),
-                     (F.col("qcx") + r + 1) * F.lit(cell_i) - F.col("qx"))
-        gy = F.least(F.col("qy") - (F.col("qcy") - r) * F.lit(cell_i),
-                     (F.col("qcy") + r + 1) * F.lit(cell_i) - F.col("qy"))
-        stats = (cand.groupBy("qid")
-                     .agg(F.max("dist_sq").alias("kth"),
-                          F.count("*").alias("n"),
-                          F.first(F.least(gx, gy)).alias("g"))
-                     .withColumn("certified",
-                                 (F.col("n") >= k)
-                                 & (F.col("kth") <= F.col("g") * F.col("g"))))
-        return cand, stats
+        its own cell (``R`` SQL over ``qs``). Returns its top-k candidates
+        (qid, rank, pid, dist_sq, kth, n, certified): a query is certified
+        when it has k candidates and the k-th distance does not exceed the
+        squared distance to the block edge, beyond which unseen points
+        could exist."""
+        q = (qs.selectExpr("qid", "qx", "qy", f"CAST({R} AS BIGINT) AS R",
+                           f"{cell('qx')} AS qcx", f"{cell('qy')} AS qcy")
+               .selectExpr("*", "inline(flatten(transform(sequence(-R, R),"
+                           " ox -> transform(sequence(-R, R), oy -> struct("
+                           "qcx + ox AS cell_x, qcy + oy AS cell_y)))))"))
+        return (pts.join(F.broadcast(q), on=["cell_x", "cell_y"])
+                   .selectExpr("qid", "pid", dist, gap)
+                   .selectExpr("*", top_k)
+                   .filter(f"rank <= {k}")
+                   .selectExpr("qid", "rank", "pid", "dist_sq",
+                               "max(dist_sq) OVER (PARTITION BY qid) AS kth",
+                               "count(*) OVER (PARTITION BY qid) AS n", "g")
+                   .selectExpr("qid", "rank", "pid", "dist_sq", "kth", "n",
+                               f"n >= {k} AND kth <= g * g AS certified"))
 
-    # round 1: every query probes its 3x3 block
-    cand1, stats1 = ring_round(queries, F.lit(1))
+    # round 1: every query probes its 3x3 block. Its rows feed the
+    # certified output, round 2 and the residue, and Spark does not reuse
+    # the round's subtree across those consumers (at sf1 the plan without
+    # this materialization recomputed the cell join per consumer, +50%
+    # wall), so it is checkpointed once per call; the blocks go with it.
+    cand1 = ring_round(queries, "1").localCheckpoint(eager=True)
 
     # round 2: ADAPTIVE RING EXPANSION for the uncertified, bounded by the
-    # measured k-th distance instead of |points| (r2 VERDICT: the old direct
-    # brute-force tail was unbounded if certification failed en masse).
-    # A query that found k candidates needs exactly radius sqrt(kth); one
-    # that found fewer widens to a fixed 9x9 super-block first. The ring
-    # size is data-driven and per-query, so worst-case work is
+    # measured k-th distance instead of |points|. A query that found k
+    # candidates needs exactly radius sqrt(kth); one that found fewer
+    # widens to a fixed 9x9 super-block first. The ring size is
+    # data-driven and per-query, so worst-case work is
     # O(escalations * (2R+1)^2 cell lookups), never O(|points|).
-    esc = (queries.join(stats1, on="qid", how="left")
-                  .filter(~F.coalesce(F.col("certified"), F.lit(False)))
-                  # escalation volume surfaced as a named observed metric
-                  # (QueryExecutionListener / observedMetrics sees
-                  # {"count": n} after the run, no second action)
-                  .observe("knn_escalations", F.count(F.lit(1)).alias("count")))
-    cand2, stats2 = ring_round(esc, F.greatest(
-        F.lit(2),
-        F.when(F.coalesce(F.col("n"), F.lit(0)) >= k,
-               F.ceil(F.sqrt(F.col("kth")) / F.lit(cell_i)) + 1)
-         .otherwise(F.lit(4))))
+    # Escalation volume is a named observed metric ({"count": n} after
+    # the run, no second action).
+    esc = (queries.join(cand1.filter("rank = 1").select("qid", "kth", "n",
+                                                        "certified"),
+                        on="qid", how="left")
+                  .filter("NOT coalesce(certified, false)")
+                  .observe("knn_escalations", F.expr("count(1) AS count")))
+    cand2 = ring_round(esc, f"greatest(2, CASE WHEN coalesce(n, 0) >= {k}"
+                            f" THEN ceil(sqrt(kth) / {cell_i}) + 1 ELSE 4 END)")
 
     # residue: only queries whose ring STILL can't certify (near-empty
     # regions) fall back to exact brute force — observed separately
-    certified = [s.filter("certified").select("qid") for s in (stats1, stats2)]
-    bad_q = (queries.join(certified[0].unionByName(certified[1]), on="qid",
-                          how="left_anti")
-                    .observe("knn_brute_force",
-                             F.count(F.lit(1)).alias("count")))
+    certified = (cand1.unionByName(cand2).filter("certified")
+                      .select("qid", "rank", "pid", "dist_sq"))
+    bad_q = (queries.join(certified, on="qid", how="left_anti")
+                    .observe("knn_brute_force", F.expr("count(1) AS count")))
     brute = (points.crossJoin(F.broadcast(bad_q))
-                   .select("qid", "pid", dist.alias("dist_sq"))
-                   .withColumn("rank", F.row_number().over(w))
-                   .filter(F.col("rank") <= k))
-
-    cols = ["qid", "rank", "pid", "dist_sq"]
-    ok1, ok2 = (c.join(ids, on="qid").select(*cols)
-                for c, ids in zip((cand1, cand2), certified))
-    return ok1.unionByName(ok2).unionByName(brute.select(*cols))
+                   .selectExpr("qid", "pid", dist)
+                   .selectExpr("*", top_k)
+                   .filter(f"rank <= {k}"))
+    return certified.unionByName(brute.select("qid", "rank", "pid", "dist_sq"))

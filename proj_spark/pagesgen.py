@@ -19,6 +19,8 @@ A deterministic mix of coordinate embeddings:
 
 from __future__ import annotations
 
+from .session import cached_view
+
 # integer fixed-point coordinate strings: sign || whole || '.' || lpad(frac)
 # (never float-to-string formatting — engine-dependent)
 _LAT_I = "(CAST((doc_id * 2654435761 + 40503) % 17000000 AS BIGINT) - 8500000)"
@@ -165,9 +167,6 @@ extracted AS (
 """
 
 EXTRACT_CTE = PAGES_CTE + "," + EXTRACT_BODY
-# inline-synthesis extraction for Spark plan tests (production Spark paths
-# go through ensure_pages_view instead — see its docstring)
-SPARK_EXTRACT_CTE = _pages_cte("spark") + "," + EXTRACT_BODY
 
 
 def extract_from_table_cte(pages_table: str) -> str:
@@ -192,15 +191,10 @@ def ensure_pages_view(spark, sf_dir: str) -> str:
     InMemoryRelation boundary keeps both sides small enough to compile,
     exactly like the parquet boundary a production pages table has. The
     DuckDB oracles keep the inline-synthesis SQL: same rows, one engine
-    plan closer to production."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _pages_cached:
-        _pages_cached[key] = build_pages(spark, sf_dir, flat=True).cache()
-    _pages_cached[key].createOrReplaceTempView(PAGES_VIEW)
+    plan closer to production. Cached per sf_dir (session.cached_view)."""
+    cached_view(spark, PAGES_VIEW, sf_dir,
+                lambda: build_pages(spark, sf_dir, flat=True))
     return PAGES_FROM_VIEW_CTE
-
-
-_pages_cached: dict = {}
 
 
 def materialize_pages(spark, sf_dir: str, out_dir: str, scale: int = 1,

@@ -1341,7 +1341,7 @@ def q_lang_id(spark, sf_dir):
     return spark.sql(textops.lang_id_sql())
 
 
-@q("ngram_jaccard_pairs", textops.ngram_jaccard_sql("duck"))
+@q("ngram_jaccard_pairs", textops.ngram_jaccard_sql())
 def q_ngram_jaccard_pairs(spark, sf_dir):
     textops.ensure_sh_sets_view(spark, sf_dir)
     return textops.ngram_jaccard_df(spark)

@@ -6,7 +6,7 @@ SURVEY.md §1.2-1.3), AQE + skew-join handling on (north rule: explicit skew
 handling), UTC session timezone for DuckDB oracle parity.
 
 ``local_df`` is the one way the engine turns small driver-built rows into
-a DataFrame.
+a DataFrame, and ``cached_view`` the one place it caches a relation.
 """
 
 from __future__ import annotations
@@ -57,3 +57,28 @@ def local_df(spark: SparkSession, rows, ddl: str) -> DataFrame:
     cols = list(zip(*rows)) or [()] * len(schema)
     return spark.createDataFrame(pa.Table.from_arrays(
         [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema))
+
+
+# view name -> (application id, key, cached DataFrame)
+_cached_views: dict = {}
+
+
+def cached_view(spark: SparkSession, name: str, key, build) -> None:
+    """Register ``build()`` as temp view ``name`` behind a cache barrier,
+    built once per (application, ``key``). A hit only re-registers the
+    view and runs no Spark job. A new ``key`` unpersists the relation
+    cached under ``name`` before, so one relation per view stays cached;
+    so does a relation Spark uncached itself (replacing a view it reads,
+    e.g. ``documents`` at another scale, uncaches it). Session fixtures
+    use it; operators cache nothing (their intermediates live as long as
+    their plan)."""
+    app = spark.sparkContext.applicationId
+    entry = _cached_views.get(name)
+    if entry is not None and entry[0] == app:
+        if entry[1] == key and entry[2].storageLevel.useMemory:
+            entry[2].createOrReplaceTempView(name)
+            return
+        entry[2].unpersist()
+    df = build().cache()
+    _cached_views[name] = (app, key, df)
+    df.createOrReplaceTempView(name)

@@ -166,36 +166,28 @@ def sessionize(events: DataFrame, gap_minutes: int = 30,
 def minhash_band_keys(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
     """Per-document MinHash LSH band keys as pure JVM expressions —
-    identical values to textops' batch banding (same md5-derived shingle
-    hash mod P, same 16 Carter-Wegman permutations, same 4x4 '|'-joined
-    keys; tests assert the equality) but computed WITHIN each row
+    identical values to textops' batch banding (rendered from textops'
+    shingle, hash, permutation and band-key SQL; tests assert the
+    equality) but computed WITHIN each row
     (shingle array -> transform -> array_min) instead of explode +
     groupBy. Zero shuffles and no streaming-aggregation state, so the
     same function runs on a static DataFrame and on an unbounded stream.
     Documents under 3 words have no shingles and produce no keys, like
     the batch path. Output: (id_col[, ts], band, bkey)."""
-    from .textops import MINHASH_AB, MINHASH_P
+    from .textops import band_keys, minhash_perm, shingle_hash, shingles_of
 
     # bind the word split ONCE as a column: Spark does not CSE inside
     # higher-order-function lambdas, so inlining split() in the per-shingle
     # lambda body would re-split the full text 3x per shingle (O(words^2))
-    docs = docs.withColumn("_ws", F.split(F.col(text_col), " "))
-    sh = ("CASE WHEN size(_ws) >= 3 "
-          "THEN transform(sequence(0, size(_ws) - 3), "
-          "i -> concat_ws(' ', _ws[i], _ws[i + 1], _ws[i + 2])) "
-          "ELSE array() END")
-    vs = (f"transform({sh}, s -> "
-          f"CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT) "
-          f"% {MINHASH_P})")
-    docs = docs.withColumn("_vs", F.expr(vs)).filter(F.size("_vs") >= 1)
-    mh = [f"array_min(transform(_vs, v -> "
-          f"(CAST({a} AS BIGINT) * v + CAST({b} AS BIGINT)) % {MINHASH_P}))"
-          for a, b in MINHASH_AB]
-    bkeys = [F.expr(f"concat_ws('|', {', '.join(f'CAST({mh[4 * b + r]} AS STRING)' for r in range(4))})")
-             for b in range(4)]
+    docs = (docs.withColumn("_ws", F.split(F.col(text_col), " "))
+                .selectExpr("*", f"transform({shingles_of('_ws')},"
+                                 f" s -> {shingle_hash('s')}) AS _vs")
+                .filter("size(_vs) >= 1"))
+    keys = band_keys(lambda p: f"array_min(transform(_vs,"
+                               f" v -> {minhash_perm(p, 'v')}))")
     carry = [id_col] + (["ts"] if "ts" in docs.columns else [])
-    return docs.select(*carry,
-                       F.posexplode(F.array(*bkeys)).alias("band", "bkey"))
+    return docs.selectExpr(*carry, f"posexplode(array({', '.join(keys)}))"
+                                   " AS (band, bkey)")
 
 
 def streaming_minhash_pairs(docs: DataFrame, id_col: str = "doc_id",

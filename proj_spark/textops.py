@@ -30,6 +30,8 @@ only candidate pairs, not the full cross product.
 
 from __future__ import annotations
 
+from .session import cached_view
+
 
 # dup_docs: originals + exact copies (%7) + near-dup variants (%5, tail
 # appended => high-but-<1 Jaccard)
@@ -76,22 +78,26 @@ sh_sets AS (SELECT DISTINCT doc_id, sh FROM shingles)
 # exploded words three times. The DuckDB oracle keeps the join form: same
 # rows, deliberately different plan. At 100 TB this is the difference
 # between a narrow scan->project stage and 3 exchanges of 50x-exploded rows.
-SHINGLES_SPARK = """
+def shingles_of(ws: str) -> str:
+    """Spark SQL: the word-3-gram shingle array of the word array ``ws``
+    (empty under 3 words)."""
+    return (f"CASE WHEN size({ws}) >= 3"
+            f" THEN transform(sequence(0, size({ws}) - 3),"
+            f" i -> concat_ws(' ', {ws}[i], {ws}[i + 1], {ws}[i + 2]))"
+            " ELSE array() END")
+
+
+SHINGLES_SPARK = f"""
 shingles AS (
   SELECT doc_id, sh
   FROM (SELECT doc_id, split(text, ' ') AS ws FROM dup_docs)
-  LATERAL VIEW explode(
-    CASE WHEN size(ws) >= 3
-         THEN transform(sequence(0, size(ws) - 3),
-                        i -> concat_ws(' ', ws[i], ws[i + 1], ws[i + 2]))
-         ELSE array() END) t AS sh
+  LATERAL VIEW explode({shingles_of("ws")}) t AS sh
 ),
 sh_sets AS (SELECT DISTINCT doc_id, sh FROM shingles)
 """
 
 
 SH_SETS_VIEW = "sh_sets_cached"
-_sh_sets_cached: dict = {}
 
 
 def ensure_sh_sets_view(spark, sf_dir: str | None = None) -> None:
@@ -102,22 +108,11 @@ def ensure_sh_sets_view(spark, sf_dir: str | None = None) -> None:
     The cached InMemoryRelation computes it once per session — the same
     role a materialized shingle table plays in a production pipeline.
 
-    Keyed on (application, sf_dir): the cached relation snapshots the
+    Cached per sf_dir (session.cached_view): the relation snapshots the
     `documents` view at build time, so a session that switches sf_dir
-    must not be served the previous scale's shingles (stale-cache bug —
-    the old per-application key did exactly that). The previous scale's
-    entry is unpersisted to bound storage memory."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _sh_sets_cached:
-        for k in [k for k in _sh_sets_cached if k[0] == key[0]]:
-            try:
-                _sh_sets_cached.pop(k).unpersist()
-            except Exception:
-                pass
-        _sh_sets_cached[key] = spark.sql(
-            f"WITH {DUP_DOCS_CTE}, {SHINGLES_SPARK} "
-            "SELECT doc_id, sh FROM sh_sets").cache()
-    _sh_sets_cached[key].createOrReplaceTempView(SH_SETS_VIEW)
+    must not be served the previous scale's shingles."""
+    cached_view(spark, SH_SETS_VIEW, sf_dir, lambda: spark.sql(
+        f"WITH {DUP_DOCS_CTE}, {SHINGLES_SPARK} SELECT doc_id, sh FROM sh_sets"))
 
 
 # 16 Carter-Wegman permutations (a*x + b) mod P over the 60-bit shingle
@@ -139,18 +134,33 @@ MINHASH_AB = (
 )
 
 
-# SQL text shared by minhash_pairs_df and minhash_lsh_sql, so the DataFrame
-# and SQL spellings cannot drift apart: the 16 permutation minimums, the 4
-# band keys (4 consecutive minimums each) and the 60-bit base hash (first
-# 15 md5 hex chars as BIGINT, the parse spelling the only dialect
-# difference) reduced mod P once.
-_MINHASH_MINS = [f"MIN(({a} * v + {b}) % {MINHASH_P}) AS mh{p}"
-                 for p, (a, b) in enumerate(MINHASH_AB)]
-_BAND_KEYS = ["concat_ws('|', " + ", ".join(f"mh{4 * b + r}" for r in range(4))
-              + ")" for b in range(4)]
-_HASHED_V = {
-    "spark": f"CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT) % {MINHASH_P} AS v",
-    "duck": f"CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % {MINHASH_P} AS v"}
+# SQL text shared by minhash_pairs_df, minhash_lsh_sql and the streaming
+# band keys, so no two spellings can drift apart: the 60-bit base hash of
+# a shingle (first 15 md5 hex chars as BIGINT, the parse spelling the only
+# dialect difference) reduced mod P once, the 16 permutations, and the 4
+# band keys (4 consecutive minimums each).
+def shingle_hash(sh: str, dialect: str = "spark") -> str:
+    hex15 = f"substr(md5({sh}), 1, 15)"
+    parse = (f"conv({hex15}, 16, 10)" if dialect == "spark"
+             else f"'0x' || {hex15}")
+    return f"CAST({parse} AS BIGINT) % {MINHASH_P}"
+
+
+def minhash_perm(p: int, v: str) -> str:
+    a, b = MINHASH_AB[p]
+    return f"({a} * {v} + {b}) % {MINHASH_P}"
+
+
+def band_keys(mh) -> list:
+    """The 4 band keys; ``mh(p)`` is the SQL of permutation p's minimum."""
+    return ["concat_ws('|', " + ", ".join(mh(4 * b + r) for r in range(4))
+            + ")" for b in range(4)]
+
+
+_MINHASH_MINS = [f"MIN({minhash_perm(p, 'v')}) AS mh{p}"
+                 for p in range(len(MINHASH_AB))]
+_BAND_KEYS = band_keys(lambda p: f"mh{p}")
+_HASHED_V = {d: f"{shingle_hash('sh', d)} AS v" for d in ("spark", "duck")}
 
 
 def minhash_pairs_df(spark):
@@ -191,7 +201,7 @@ def minhash_pairs_df(spark):
                 .selectExpr("id1", "id2", f"ROUND({jac}, 6) AS jaccard"))
 
 
-def minhash_lsh_sql(dialect: str, cached_view: str | None = None) -> str:
+def minhash_lsh_sql(dialect: str) -> str:
     """Full MinHash->LSH->verify pipeline; dialect in {spark, duck}.
 
     All 16 permutation minimums are computed in ONE pass over the raw
@@ -206,24 +216,10 @@ def minhash_lsh_sql(dialect: str, cached_view: str | None = None) -> str:
     full sort of every shingle row by doc_id, measured 8x the wall of the
     HashAggregate the fixed-width BIGINT buffers allow (and 1 md5 per row
     instead of 16). Band keys are then pure projections; Spark emits the
-    4 band rows map-side via posexplode, the DuckDB oracle via UNION ALL.
-    ``cached_view`` (engine side): read shingles from a pre-materialized
-    view (ensure_sh_sets_view) instead of re-deriving them per reference."""
-    if cached_view:
-        # reference the cached view DIRECTLY as the table name: wrapping
-        # it in a CTE alias (shingles AS (SELECT * FROM view)) defeats
-        # Spark's CacheManager sameResult match — measured 0
-        # InMemoryTableScan through the CTE vs a hit on the bare
-        # reference, i.e. the whole shingle pipeline re-ran per reference
-        shingle_with = None
-        sh_tbl = set_tbl = cached_view
-    elif dialect == "spark":
-        shingle_with = f"{DUP_DOCS_CTE}, {SHINGLES_SPARK}"
-        sh_tbl, set_tbl = "shingles", "sh_sets"
-    else:
-        shingle_with = f"{DUP_DOCS_CTE}, {WORDS_DUCK}, {SHINGLES_CTE}"
-        sh_tbl, set_tbl = "shingles", "sh_sets"
-    hashed = f"hashed AS (SELECT doc_id, {_HASHED_V[dialect]} FROM {sh_tbl})"
+    4 band rows map-side via posexplode, the DuckDB oracle via UNION ALL."""
+    shingle_with = (f"{DUP_DOCS_CTE}, {SHINGLES_SPARK}" if dialect == "spark"
+                    else f"{DUP_DOCS_CTE}, {WORDS_DUCK}, {SHINGLES_CTE}")
+    hashed = f"hashed AS (SELECT doc_id, {_HASHED_V[dialect]} FROM shingles)"
     if dialect == "spark":
         bands = f"""
 bands AS (
@@ -235,9 +231,9 @@ bands AS (
         bands = "bands AS (" + "\n  UNION ALL ".join(
             f"SELECT doc_id, {b} AS band, {k} AS bkey FROM minhash"
             for b, k in enumerate(_BAND_KEYS)) + ")"
-    with_head = f"WITH {shingle_with},\n" if shingle_with else "WITH "
     return f"""
-{with_head}{hashed},
+WITH {shingle_with},
+{hashed},
 minhash AS (
   SELECT doc_id, {", ".join(_MINHASH_MINS)}
   FROM hashed
@@ -249,12 +245,12 @@ cand AS (
   FROM bands a
   JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
 ),
-sizes AS (SELECT doc_id, COUNT(*) AS n FROM {set_tbl} GROUP BY doc_id),
+sizes AS (SELECT doc_id, COUNT(*) AS n FROM sh_sets GROUP BY doc_id),
 inter AS (
   SELECT c.id1, c.id2, COUNT(*) AS ni
   FROM cand c
-  JOIN {set_tbl} s1 ON s1.doc_id = c.id1
-  JOIN {set_tbl} s2 ON s2.doc_id = c.id2 AND s2.sh = s1.sh
+  JOIN sh_sets s1 ON s1.doc_id = c.id1
+  JOIN sh_sets s2 ON s2.doc_id = c.id2 AND s2.sh = s1.sh
   GROUP BY c.id1, c.id2
 )
 SELECT i.id1, i.id2,
@@ -394,10 +390,10 @@ FROM scored
 def ngram_jaccard_df(spark, df_cap: int = 64):
     """ENGINE-side exact n-gram Jaccard over the cached shingle view
     (ensure_sh_sets_view first) — same capped-candidate rule and output
-    as ngram_jaccard_sql('spark', df_cap). The SQL spelling references
+    as its oracle ngram_jaccard_sql(df_cap). A SQL spelling references
     the shingle relation SIX times, and CTE references defeat the cache
-    (see minhash_pairs_df), so the explode+distinct pipeline re-ran ~6x
-    from parquet; the DataFrame chain reads the one InMemoryRelation.
+    (see minhash_pairs_df), so the explode+distinct pipeline would re-run
+    ~6x from parquet; the DataFrame chain reads the one InMemoryRelation.
 
     Scale shape (VERDICT r4 #6): candidates sharing >= 1 cold (df <=
     df_cap) shingle numbered 20.6 M at sf1 for ~23 k true pairs, and
@@ -441,9 +437,10 @@ def ngram_jaccard_df(spark, df_cap: int = 64):
                  .select("id1", "id2", F.round(jac, 6).alias("jaccard")))
 
 
-def ngram_jaccard_sql(dialect: str, df_cap: int | None = 64) -> str:
-    """EXACT word-3-gram Jaccard >= 0.6 pairs — the deterministic baseline
-    the MinHash-LSH path approximates.
+def ngram_jaccard_sql(df_cap: int | None = 64) -> str:
+    """EXACT word-3-gram Jaccard >= 0.6 pairs, the DuckDB oracle of
+    :func:`ngram_jaccard_df` — the deterministic baseline the MinHash-LSH
+    path approximates.
 
     Candidate generation is an inverted-index equi-join on the shingle
     (one shuffle keyed by shingle). Uncapped, its cost is sum over
@@ -461,8 +458,7 @@ def ngram_jaccard_sql(dialect: str, df_cap: int | None = 64) -> str:
     Jaccard >= 0.6 pairs, and verified exact at test scale in
     tests/test_textops_cap.py). ``df_cap=None`` keeps the uncapped
     semantics."""
-    shingle_with = (f"{DUP_DOCS_CTE}, {SHINGLES_SPARK}" if dialect == "spark"
-                    else f"{DUP_DOCS_CTE}, {WORDS_DUCK}, {SHINGLES_CTE}")
+    shingle_with = f"{DUP_DOCS_CTE}, {WORDS_DUCK}, {SHINGLES_CTE}"
     if df_cap is None:
         return f"""
 WITH {shingle_with},

@@ -210,6 +210,26 @@ class TestSparkJoins:
                 .sort_values(["qid", "rank"]).reset_index(drop=True))
         pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
+    def test_knn_observes_escalations_and_residue(self, spark):
+        """Three points in cell (0, 0): query 0 beside them certifies in
+        round 1; query 1 (cell (5, 5)) sees none within R = 4 and falls to
+        the brute force; query 2 (cell (2, 2)) certifies in round 2."""
+        from proj_spark import joins
+        pts = spark.createDataFrame(
+            [(i, 100 * i, 100 * i) for i in (1, 2, 3)], "pid long, px long, py long")
+        qs = spark.createDataFrame(
+            [(0, 150, 150), (1, 5_500_000, 5_500_000), (2, 2_500_000, 2_500_000)],
+            "qid long, qx long, qy long")
+        out = joins.knn_join(spark, qs, pts, k=3)
+        # query 0 ties pids 1 and 2 on distance (pid breaks it); the far
+        # queries see the points in reverse order
+        assert sorted((r.qid, r.rank, r.pid) for r in out.collect()) == [
+            (0, 1, 1), (0, 2, 2), (0, 3, 3), (1, 1, 3), (1, 2, 2), (1, 3, 1),
+            (2, 1, 3), (2, 2, 2), (2, 3, 1)]
+        metrics = out._jdf.queryExecution().observedMetrics()
+        assert [metrics.get(name).get().getLong(0)
+                for name in ("knn_escalations", "knn_brute_force")] == [2, 1]
+
     def test_within_radius_antimeridian_matches_bruteforce(self, spark):
         """A center within 1 deg of the antimeridian pairs with points on
         both sides of it: the wrapped cover equals the brute force."""

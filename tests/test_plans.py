@@ -122,12 +122,28 @@ def test_knn_probe_side_broadcast(spark):
     assert "BroadcastHashJoin" in p
 
 
+def test_knn_plan_exchanges_only_on_qid(spark):
+    """The joins.py scale note: the ring cells are the broadcast side, so
+    the points never exchange on a cell, and each ranking window cuts its
+    input to k per query map-side before the one exchange on qid."""
+    from proj_spark import joins
+    q = spark.sql("SELECT doc_id AS qid, (doc_id * 11 % 1000000) AS qx, "
+                  "(doc_id * 17 % 1000000) AS qy FROM documents")
+    pts = spark.sql("SELECT doc_id AS pid, (doc_id * 7 % 1000000) AS px, "
+                    "(doc_id * 13 % 1000000) AS py FROM documents")
+    p = plan_of(joins.knn_join(spark, q, pts, k=3), "simple")
+    exchanges = [ln for ln in p.splitlines() if "Exchange " in ln
+                 and "BroadcastExchange" not in ln]
+    assert exchanges
+    assert all("hashpartitioning(qid#" in ln for ln in exchanges), exchanges
+    assert "WindowGroupLimit" in p
+
+
 def test_extraction_is_jvm_side(spark):
     """The regex coordinate extraction must stay in whole-stage codegen —
-    no Python evaluation node in the scan stage."""
-    from proj_spark.pagesgen import SPARK_EXTRACT_CTE
-    df = spark.sql(f"WITH {SPARK_EXTRACT_CTE} SELECT url, lat, lon FROM extracted "
-                   "WHERE lat IS NOT NULL")
+    no Python evaluation node in the scan stage. Checked on the engine's
+    path: extraction over the cached pages view."""
+    df = querylib.QUERIES["extract_coords"](spark, SF)
     p = plan_of(df)
     assert "BatchEvalPython" not in p
     assert "ArrowEvalPython" not in p
