@@ -9,6 +9,17 @@ planner is the driver-side replacement for proj_create_crs_to_crs
 ported — SURVEY.md §7.4), and build a pipeline
 ``inv(src) -> [datum shift via cart/helmert] -> fwd(dst)`` the way the
 reference's cs2cs emulation rewrites +towgs84 (src/4D_api.cpp:845-992).
+
+Per-coordinate dispatch: ED50 -> WGS84 has ~30 regional EPSG Helmerts
+with different areas of use, ranked by accuracy/area
+(``transform_candidates``, coordinateoperationfactory.cpp:853-950); EACH
+COORDINATE takes the first candidate whose extent contains it
+(pj_get_suggested_operation, 4D_api.cpp:217-346). ``_registry_helmert``
+turns a registry row into the operator of both forms: the numpy
+``CrsToCrsDispatcher`` and the Spark ``dispatch_geocentric``, where the
+candidate table is DATA (broadcast bbox join, min(rnk) per point, JVM
+SQL math). The Spark form stops at geocentric XYZ, so its DuckDB oracle
+stays closed-form (no iterative cart inverse).
 """
 
 from __future__ import annotations
@@ -555,7 +566,7 @@ def _xform_index() -> dict:
         except OSError:
             # degrade like _epsg_generated: registry queries return no
             # candidates instead of the whole module failing to import
-            # (querylib builds its ED50 candidate table at import time)
+            # (querylib's oracle text reads the registry at import time)
             rows = []
         for rec in rows:
             idx.setdefault((rec["src"], rec["dst"]), []).append(rec)
@@ -673,16 +684,12 @@ def _geodetic_ell_params(code: int) -> dict:
             if k in p}
 
 
-def _registry_leg_steps(rec: dict, inverted: bool,
-                        src_ell: dict, dst_ell: dict) -> list[tuple]:
-    """One registry row -> pipeline steps geodetic(src) -> geodetic(dst)."""
-    from .kernels.cartgeo import Cart
+def _registry_helmert(rec: dict) -> Operator:
+    """A registry Helmert row -> its kernel operator: a Helmert (3/7
+    parameters, kinematic rates) or, for a row with a pivot point, a
+    Molodensky-Badekas. The one place a registry row becomes a datum
+    operator."""
     from .kernels.datum import Helmert
-    if rec["kind"] == "grid":
-        name = _EPSG_GRID_FILES.get(rec["grid"], rec["grid"])
-        op = create_operator({"proj": "hgridshift", "grids": name,
-                              "_no_datum_shift": True})
-        return [(op, "inverse" if inverted else "forward")]
     hp = {"proj": "helmert", "x": rec["x"], "y": rec["y"], "z": rec["z"]}
     if rec.get("convention"):
         for k in ("rx", "ry", "rz", "s"):
@@ -693,13 +700,24 @@ def _registry_leg_steps(rec: dict, inverted: bool,
             hp[k] = rec[k]
     if "px" in rec:
         hp["px"], hp["py"], hp["pz"] = rec["px"], rec["py"], rec["pz"]
-        op = create_operator({**hp, "proj": "molobadekas"})
-    else:
-        op = Helmert(hp)
+        return create_operator({**hp, "proj": "molobadekas"})
+    return Helmert(hp)
+
+
+def _registry_leg_steps(rec: dict, inverted: bool,
+                        src_ell: dict, dst_ell: dict) -> list[tuple]:
+    """One registry row -> pipeline steps geodetic(src) -> geodetic(dst)."""
+    from .kernels.cartgeo import Cart
+    direction = "inverse" if inverted else "forward"
+    if rec["kind"] == "grid":
+        name = _EPSG_GRID_FILES.get(rec["grid"], rec["grid"])
+        op = create_operator({"proj": "hgridshift", "grids": name,
+                              "_no_datum_shift": True})
+        return [(op, direction)]
     return [
         (Cart({"proj": "cart", "_no_datum_shift": True, **src_ell}),
          "forward"),
-        (op, "inverse" if inverted else "forward"),
+        (_registry_helmert(rec), direction),
         (Cart({"proj": "cart", "_no_datum_shift": True, **dst_ell}),
          "inverse"),
     ]
@@ -855,3 +873,87 @@ class CrsToCrsDispatcher:
                       ox, oy, oz, code)
         # poison passthrough: NaN in -> NaN out, code -1, no exception
         return ox, oy, oz, t, code
+
+
+GEOCENTRIC_DDL = ("rnk INT, code INT, w DOUBLE, s DOUBLE, e DOUBLE, n DOUBLE, "
+                  + "".join(f"a{i}{j} DOUBLE, " for i in "123" for j in "123")
+                  + "tx DOUBLE, ty DOUBLE, tz DOUBLE")
+
+
+def geocentric_candidates(src_code: int, dst_code: int) -> list[tuple]:
+    """The pair's single-leg, non-kinematic Helmert candidates (of the 40
+    best) in rank order as affine geocentric maps X' = A.X + t, rows in
+    ``GEOCENTRIC_DDL`` order. A = (1 + s 1e-6) R forward; reversed,
+    A = R^T / scale and t' = -A.t (the kernel's inverse R^T((X - t)/scale),
+    helmert.cpp: a transpose, not a matrix inverse); 3-param rows, A = I."""
+    import numpy as np
+
+    from .kernels.datum import _rot_matrix
+
+    rows = []
+    for cand in transform_candidates(src_code, dst_code, limit=40):
+        if len(cand["legs"]) != 1:
+            continue
+        rec, inv = cand["legs"][0]
+        if rec["kind"] != "helmert" or "dx" in rec or "px" in rec:
+            continue
+        op = _registry_helmert(rec)
+        r = (np.eye(3) if op.no_rotation else
+             _rot_matrix(op.rx, op.ry, op.rz, op.exact, op.position_vector))
+        scale = 1.0 + op.s * 1e-6
+        t = np.array([op.x, op.y, op.z])
+        if inv:
+            a = r.T / scale
+            t = -a @ t
+        else:
+            a = scale * r
+        w, s, e, n = rec["bbox"] if rec["bbox"] else (-180, -90, 180, 90)
+        rows.append((len(rows), rec["code"], float(w), float(s), float(e),
+                     float(n), *[float(v) for v in a.reshape(-1)],
+                     *[float(v) for v in t]))
+    return rows
+
+
+def geocentric_a_es(code: int) -> tuple[float, float]:
+    """(a, es = 2f - f^2 with f = 1/rf) of a geodetic EPSG CRS, as the
+    oracles write it; the Cart kernel goes through b = a(1 - f) and
+    differs in the last bits (International 1924: ...322 vs ...209)."""
+    from .kernels.core import _ELLPS_TABLE, DATUM_TABLE
+    p = _geodetic_ell_params(code)
+    if "rf" in p:
+        a, rf = float(p["a"]), float(p["rf"])
+    else:
+        a, rf = _ELLPS_TABLE[p.get("ellps") or DATUM_TABLE[p["datum"]][0]]
+    f = 1.0 / rf
+    return a, 2.0 * f - f * f
+
+
+def dispatch_geocentric(points, src_code: int, dst_code: int):
+    """Spark per-coordinate dispatch: points (pid, lon, lat degrees) ->
+    (pid, code, gx, gy, gz) geocentric metres. Each point takes the lowest
+    rank of ``geocentric_candidates`` whose bbox contains it, else rank 0.
+    The candidates are a broadcast ``session.local_df``; all expressions
+    are SQL text, so no row crosses into Python."""
+    from pyspark.sql import functions as F
+
+    from .session import local_df
+
+    cand = F.broadcast(local_df(points.sparkSession,
+                                geocentric_candidates(src_code, dst_code),
+                                GEOCENTRIC_DDL))
+    a, es = geocentric_a_es(src_code)
+    nn = (f"{a!r}D / sqrt(1.0D - {es!r}D * sin(radians(lat))"
+          " * sin(radians(lat)))")
+    routed = (points.select("pid", "lon", "lat")
+                    .join(cand, F.expr("lon >= w AND lon <= e"
+                                       " AND lat >= s AND lat <= n"), "left")
+                    .groupBy("pid", "lon", "lat")
+                    .agg(F.expr("coalesce(min(rnk), 0) AS rnk"))
+                    .join(cand, "rnk"))
+    return (routed.selectExpr(
+                "*", f"{nn} * cos(radians(lat)) * cos(radians(lon)) AS xx",
+                f"{nn} * cos(radians(lat)) * sin(radians(lon)) AS yy",
+                f"{nn} * {1.0 - es!r}D * sin(radians(lat)) AS zz")
+            .selectExpr("pid", "code", *[
+                f"a{i}1 * xx + a{i}2 * yy + a{i}3 * zz + t{c} AS g{c}"
+                for i, c in zip("123", "xyz")]))

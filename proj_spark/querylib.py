@@ -31,6 +31,26 @@ def C(v) -> str:
     return f"CAST({float(v)!r} AS DOUBLE)"
 
 
+def _geocentric_sql(a: float, es: float, src: str,
+                    xyz=("gx", "gy", "gz"), h: str | None = None) -> str:
+    """Oracle SQL: every column of ``src`` plus its lat/lon degrees [and
+    ellipsoidal height ``h``] as geocentric XYZ named ``xyz``, the cart
+    kernel's closed form in one operation order:
+    N = a / sqrt(1 - es sin^2 phi), X = (N [+ h]) cos phi cos lam,
+    Y = (N [+ h]) cos phi sin lam, Z = (N (1 - es) [+ h]) sin phi."""
+    nh = f"(nn + {h})" if h else "nn"
+    nz = f"(nn * {C(1.0 - es)} + {h})" if h else f"nn * {C(1.0 - es)}"
+    x, y, z = xyz
+    return f"""SELECT *, {nh} * cos(phi) * cos(lam) AS {x},
+         {nh} * cos(phi) * sin(lam) AS {y},
+         {nz} * sin(phi) AS {z}
+  FROM (
+    SELECT *, radians(lat) AS phi, radians(lon) AS lam,
+           {C(a)} / sqrt(1.0 - {C(es)} * sin(radians(lat)) * sin(radians(lat))) AS nn
+    FROM {src}
+  ) geo"""
+
+
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -320,15 +340,8 @@ def _cart_oracle() -> str:
     ell = _CART.ell
     return f"""
 WITH {POINTS_CTE}
-SELECT pid,
-       ROUND((n + h) * cos(phi) * cos(lam), 0) AS gx,
-       ROUND((n + h) * cos(phi) * sin(lam), 0) AS gy,
-       ROUND((n * {C(ell.one_es)} + h) * sin(phi), 0) AS gz
-FROM (
-  SELECT pid, h, radians(lat) AS phi, radians(lon) AS lam,
-         {C(ell.a)} / sqrt(1.0 - {C(ell.es)} * sin(radians(lat)) * sin(radians(lat))) AS n
-  FROM points
-) t1
+SELECT pid, ROUND(gx, 0) AS gx, ROUND(gy, 0) AS gy, ROUND(gz, 0) AS gz
+FROM ({_geocentric_sql(ell.a, ell.es, "points", h="h")}) t1
 """
 
 
@@ -2147,14 +2160,7 @@ def _cart_over_gcells_cte() -> str:
     ell = _CART_GRS.ell
     return f"""
 cg AS (
-  SELECT *, (nn + h) * cos(phi) * cos(lam) AS gx,
-         (nn + h) * cos(phi) * sin(lam) AS gy,
-         (nn * {C(ell.one_es)} + h) * sin(phi) AS gz
-  FROM (
-    SELECT *, radians(lat) AS phi, radians(lon) AS lam,
-           {C(ell.a)} / sqrt(1.0 - {C(ell.es)} * sin(radians(lat)) * sin(radians(lat))) AS nn
-    FROM gcells
-  ) t0
+  {_geocentric_sql(ell.a, ell.es, "gcells", h="h")}
 )"""
 
 
@@ -2376,79 +2382,11 @@ UNION ALL
 # ===========================================================================
 # EPSG registry-driven per-coordinate operation dispatch (r2 VERDICT item 4)
 # ===========================================================================
-# The ED50 -> WGS84 pair has ~30 regional EPSG transformations with
-# different Helmert parameters and areas of use. The engine ranks them by
-# accuracy/area (crs.transform_candidates, mirroring
-# coordinateoperationfactory.cpp:853-950) and routes EACH COORDINATE
-# through the first candidate whose extent contains it
-# (pj_get_suggested_operation, 4D_api.cpp:217-346). Spark-first: the
-# candidate table is DATA — a broadcast join + min(rnk) per point picks
-# the operation, the geodetic->geocentric + translation math is pure JVM
-# SQL. Output stops at shifted geocentric XYZ so the DuckDB oracle is
-# closed-form (no iterative cart inverse).
+# The engine's operator is crs.dispatch_geocentric; the oracle replays its
+# routing (bbox join, min(rnk), rank 0 outside every extent) over the same
+# candidate table as a VALUES list.
 
-def _ed50_candidate_rows():
-    """Every single-leg non-kinematic Helmert candidate encoded as an
-    affine geocentric map X' = A.X + t (A = scale*R for forward rows,
-    R^T/scale with t' = -A.t for reversed rows — helmert.cpp small-angle
-    matrix). 3-param rows have A = I, so one SQL shape covers all."""
-    import numpy as np
-
-    from .crs import transform_candidates
-    from .kernels.datum import ARCSEC_TO_RAD, _rot_matrix
-
-    rows = []
-    rnk = 0
-    for cand in transform_candidates(4230, 4326, limit=40):
-        if len(cand["legs"]) != 1:
-            continue
-        rec, inv = cand["legs"][0]
-        if rec["kind"] != "helmert" or "dx" in rec or "px" in rec:
-            continue
-        t = np.array([rec["x"], rec["y"], rec["z"]])
-        conv = rec.get("convention")
-        scale = 1.0 + rec.get("s", 0.0) * 1e-6
-        if conv:
-            r = _rot_matrix(rec["rx"] * ARCSEC_TO_RAD,
-                            rec["ry"] * ARCSEC_TO_RAD,
-                            rec["rz"] * ARCSEC_TO_RAD,
-                            exact=False,
-                            position_vector=conv == "position_vector")
-        else:
-            r = np.eye(3)
-        if inv:
-            # the Helmert kernel's inverse is R^T((X - t)/scale)
-            # (helmert.cpp reverse: transpose, not matrix inverse)
-            a = r.T / scale
-            t = -a @ t
-        else:
-            a = scale * r
-        w, s, e, n = rec["bbox"] if rec["bbox"] else (-180, -90, 180, 90)
-        rows.append((rnk, rec["code"], float(w), float(s), float(e),
-                     float(n), *[float(v) for v in a.reshape(-1)],
-                     float(t[0]), float(t[1]), float(t[2])))
-        rnk += 1
-    return rows
-
-
-_ED50_CANDS = _ed50_candidate_rows()
-# ED50 geodetic base: International 1924 (epsg_to_proj(4230) +datum=ED50)
-_ED50_A = 6378388.0
-_ED50_ES = 2.0 / 297.0 - (1.0 / 297.0) ** 2
-
-
-def _ed50_dispatch_sql() -> str:
-    vals = ",\n    ".join(
-        "(" + ", ".join([str(r[0]), str(r[1])]
-                        + [C(v) for v in r[2:]]) + ")"
-        for r in _ED50_CANDS)
-    fb = _ED50_CANDS[0]
-    return f"""
-WITH cand(rnk, code, w, s, e, n,
-          a11, a12, a13, a21, a22, a23, a31, a32, a33,
-          tx, ty, tz) AS (VALUES
-    {vals}
-),
+_ED50_PTS = """
 pts AS (
   SELECT p_partkey AS pid,
          -10.0 + CAST((p_partkey * 2654435761) % 4000 AS DOUBLE) / 100.0
@@ -2456,7 +2394,25 @@ pts AS (
          36.0 + CAST((p_partkey * 2246822519) % 3400 AS DOUBLE) / 100.0
            AS lat
   FROM part
-),
+)"""
+
+
+def _ed50_dispatch_sql() -> str:
+    from .crs import geocentric_a_es, geocentric_candidates
+    cands = geocentric_candidates(4230, 4326)
+    vals = ",\n    ".join(
+        "(" + ", ".join([str(r[0]), str(r[1])]
+                        + [C(v) for v in r[2:]]) + ")"
+        for r in cands)
+    a, es = geocentric_a_es(4230)
+    routed = ("(SELECT r.pid, r.lon, r.lat, c.* FROM routed r"
+              " JOIN cand c ON c.rnk = r.rnk) rc")
+    return f"""
+WITH cand(rnk, code, w, s, e, n,
+          a11, a12, a13, a21, a22, a23, a31, a32, a33,
+          tx, ty, tz) AS (VALUES
+    {vals}
+),{_ED50_PTS},
 sel AS (
   SELECT p.pid, p.lon, p.lat, MIN(c.rnk) AS rnk
   FROM pts p JOIN cand c
@@ -2465,21 +2421,11 @@ sel AS (
 ),
 routed AS (
   SELECT p.pid, p.lon, p.lat,
-         COALESCE(s.rnk, {fb[0]}) AS rnk
+         COALESCE(s.rnk, {cands[0][0]}) AS rnk
   FROM pts p LEFT JOIN sel s ON s.pid = p.pid
 ),
 geoc AS (
-  SELECT r.pid, c.*,
-         {C(_ED50_A)} / sqrt(1.0 - {C(_ED50_ES)}
-             * sin(radians(r.lat)) * sin(radians(r.lat)))
-           * cos(radians(r.lat)) * cos(radians(r.lon)) AS xx,
-         {C(_ED50_A)} / sqrt(1.0 - {C(_ED50_ES)}
-             * sin(radians(r.lat)) * sin(radians(r.lat)))
-           * cos(radians(r.lat)) * sin(radians(r.lon)) AS yy,
-         {C(_ED50_A)} / sqrt(1.0 - {C(_ED50_ES)}
-             * sin(radians(r.lat)) * sin(radians(r.lat)))
-           * (1.0 - {C(_ED50_ES)}) * sin(radians(r.lat)) AS zz
-  FROM routed r JOIN cand c ON c.rnk = r.rnk
+  {_geocentric_sql(a, es, routed, ("xx", "yy", "zz"))}
 )
 SELECT pid, code,
        ROUND(a11 * xx + a12 * yy + a13 * zz + tx, 4) AS gx,
@@ -2494,51 +2440,15 @@ def q_ed50_regional_dispatch(spark, sf_dir):
     """ED50 -> WGS84 with PER-COORDINATE operation dispatch over the EPSG
     transformation registry: different regions of one DataFrame route
     through DIFFERENT Helmert operations (not just different grids —
-    r2 VERDICT item 4). Candidates are a broadcast JVM-local relation
-    (LocalTableScan); selection is min(rnk) over a bbox join; the
-    transform is JVM-only column math.
-    tests/test_crs_dispatch.py asserts this declarative plan agrees with
-    the numpy CrsToCrsDispatcher (pj_get_suggested_operation analogue)."""
+    r2 VERDICT item 4). crs.dispatch_geocentric: JVM-only, broadcast
+    candidates; tests/test_crs_dispatch.py asserts it routes every point
+    as the numpy CrsToCrsDispatcher does."""
     from pyspark.sql import functions as F
 
-    from .session import local_df
-
-    cand = local_df(
-        spark, _ED50_CANDS, "rnk INT, code INT, w DOUBLE, s DOUBLE, e DOUBLE, "
-                            "n DOUBLE, a11 DOUBLE, a12 DOUBLE, a13 DOUBLE, "
-                            "a21 DOUBLE, a22 DOUBLE, a23 DOUBLE, a31 DOUBLE, "
-                            "a32 DOUBLE, a33 DOUBLE, "
-                            "tx DOUBLE, ty DOUBLE, tz DOUBLE")
-    pts = spark.table("part").select(
-        F.col("p_partkey").alias("pid"),
-        (F.lit(-10.0) + (F.col("p_partkey") * 2654435761) % 4000 / 100.0
-         ).alias("lon"),
-        (F.lit(36.0) + (F.col("p_partkey") * 2246822519) % 3400 / 100.0
-         ).alias("lat"))
-    sel = (pts.join(F.broadcast(cand),
-                    (F.col("lon") >= F.col("w")) & (F.col("lon") <= F.col("e"))
-                    & (F.col("lat") >= F.col("s"))
-                    & (F.col("lat") <= F.col("n")))
-              .groupBy("pid").agg(F.min("rnk").alias("rnk")))
-    routed = (pts.join(sel, on="pid", how="left")
-                 .fillna({"rnk": _ED50_CANDS[0][0]})
-                 .join(F.broadcast(cand), on="rnk"))
-    lat_r = F.radians("lat")
-    lon_r = F.radians("lon")
-    nn = F.lit(_ED50_A) / F.sqrt(
-        1.0 - F.lit(_ED50_ES) * F.sin(lat_r) * F.sin(lat_r))
-    xx = nn * F.cos(lat_r) * F.cos(lon_r)
-    yy = nn * F.cos(lat_r) * F.sin(lon_r)
-    zz = nn * (1.0 - F.lit(_ED50_ES)) * F.sin(lat_r)
-    c = F.col
-    return routed.select(
-        "pid", "code",
-        F.round(c("a11") * xx + c("a12") * yy + c("a13") * zz + c("tx"), 4)
-        .alias("gx"),
-        F.round(c("a21") * xx + c("a22") * yy + c("a23") * zz + c("ty"), 4)
-        .alias("gy"),
-        F.round(c("a31") * xx + c("a32") * yy + c("a33") * zz + c("tz"), 4)
-        .alias("gz"))
+    from .crs import dispatch_geocentric
+    pts = spark.sql(f"WITH {_ED50_PTS} SELECT * FROM pts")
+    return dispatch_geocentric(pts, 4230, 4326).select(
+        "pid", "code", *[F.round(c, 4).alias(c) for c in ("gx", "gy", "gz")])
 
 
 # ===========================================================================
@@ -3026,15 +2936,7 @@ good AS (
   WHERE lat IS NOT NULL AND ABS(lat) <= 90.0 AND ABS(lon) <= 180.0
 ),
 cart AS (
-  SELECT url, t,
-         n * cos(phi) * cos(lam) AS x,
-         n * cos(phi) * sin(lam) AS y,
-         n * {C(ell.one_es)} * sin(phi) AS z
-  FROM (
-    SELECT url, t, radians(lat) AS phi, radians(lon) AS lam,
-           {C(ell.a)} / sqrt(1.0 - {C(ell.es)} * sin(radians(lat)) * sin(radians(lat))) AS n
-    FROM good
-  ) g
+  {_geocentric_sql(ell.a, ell.es, "good", ("x", "y", "z"))}
 ),
 shifted AS (
   SELECT url, t,
@@ -3530,15 +3432,7 @@ def _ch1903_oracle() -> str:
     return f"""
 WITH {_CH_PTS},
 cart AS (
-  SELECT pid,
-         n * cos(phi) * cos(lam) AS x,
-         n * cos(phi) * sin(lam) AS y,
-         n * {C(ell.one_es)} * sin(phi) AS z
-  FROM (
-    SELECT pid, radians(lat) AS phi, radians(lon) AS lam,
-           {C(ell.a)} / sqrt(1.0 - {C(ell.es)} * sin(radians(lat)) * sin(radians(lat))) AS n
-    FROM ch_points
-  ) g
+  {_geocentric_sql(ell.a, ell.es, "ch_points", ("x", "y", "z"))}
 )
 SELECT pid,
        ROUND({C(s)} * ({C(r[0,0])}*x + {C(r[0,1])}*y + {C(r[0,2])}*z) + {C(rec['x'])}, 2) AS wx,
@@ -3557,17 +3451,18 @@ def q_ch1903_registry_shift(spark, sf_dir):
     the same row independently. Output stops at shifted geocentric XYZ so
     the oracle stays closed-form."""
     from pyspark.sql import functions as F
+
+    from .crs import registry_datum_pipeline
     rec = _CH_REC
     assert rec and rec.get("code") == 1753, (
         "EPSG registry no longer ranks transformation 1753 first for "
         "4149->4326 (or epsg_xforms.json.gz is missing/mutated)")
-    helm = create(
-        f"+proj=helmert +x={rec['x']} +y={rec['y']} +z={rec['z']} "
-        f"+rx={rec['rx']} +ry={rec['ry']} +rz={rec['rz']} +s={rec['s']} "
-        f"+convention={rec['convention']}")
+    # the registry pipeline's cart -> helmert legs (its cart^-1 onto
+    # WGS84 is left off: the output is geocentric)
+    legs = registry_datum_pipeline(4149, 4326, {"legs": [(rec, False)]})
     df = spark.sql(f"WITH {_CH_PTS} SELECT * FROM ch_points")
-    pipe = Pipeline([(_CH_CART, "forward"), (helm, "forward")])
-    df = apply_transform(df, pipe, "lon", "lat", out_cols=("wx", "wy", "wz"))
+    df = apply_transform(df, Pipeline(legs.steps[:2]), "lon", "lat",
+                         out_cols=("wx", "wy", "wz"))
     return df.select("pid", F.round("wx", 2).alias("wx"),
                      F.round("wy", 2).alias("wy"),
                      F.round("wz", 2).alias("wz"))

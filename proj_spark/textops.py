@@ -166,7 +166,8 @@ _HASHED_V = {d: f"{shingle_hash('sh', d)} AS v" for d in ("spark", "duck")}
 def minhash_pairs_df(spark):
     """ENGINE-side MinHash->LSH->verify as a DataFrame chain over the
     cached shingle view (ensure_sh_sets_view first). Same logical
-    pipeline as minhash_lsh_sql('spark', ...), same output columns.
+    pipeline and output columns as its DuckDB oracle
+    ``minhash_lsh_sql("duck")``.
 
     Why not SQL text: Spark's CacheManager substitution does not descend
     into WITH-CTE definition bodies, so ANY reference to the cached view
@@ -202,35 +203,22 @@ def minhash_pairs_df(spark):
 
 
 def minhash_lsh_sql(dialect: str) -> str:
-    """Full MinHash->LSH->verify pipeline; dialect in {spark, duck}.
+    """Full MinHash->LSH->verify pipeline as DuckDB SQL, the oracle of
+    the engine's ``minhash_pairs_df``; ``dialect`` must be ``"duck"``.
 
     All 16 permutation minimums are computed in ONE pass over the raw
     shingles (MIN ignores duplicates, so no DISTINCT is needed first):
-    one hash aggregation on doc_id with map-side combine, one row per doc
-    out — where the cross-join-with-permutations form pushed 16x the
-    shingle volume through TWO aggregations ((doc_id, p), then banding).
-
-    The minimums are over BIGINT permutation values (one md5 per shingle
-    -> 60-bit int -> 16 Carter-Wegman (a*x+b) mod P mixes), NOT over 16
-    md5 strings: string agg buffers force Spark into SortAggregate — a
-    full sort of every shingle row by doc_id, measured 8x the wall of the
-    HashAggregate the fixed-width BIGINT buffers allow (and 1 md5 per row
-    instead of 16). Band keys are then pure projections; Spark emits the
-    4 band rows map-side via posexplode, the DuckDB oracle via UNION ALL."""
-    shingle_with = (f"{DUP_DOCS_CTE}, {SHINGLES_SPARK}" if dialect == "spark"
-                    else f"{DUP_DOCS_CTE}, {WORDS_DUCK}, {SHINGLES_CTE}")
-    hashed = f"hashed AS (SELECT doc_id, {_HASHED_V[dialect]} FROM shingles)"
-    if dialect == "spark":
-        bands = f"""
-bands AS (
-  SELECT doc_id, b.band, b.bkey
-  FROM minhash
-  LATERAL VIEW posexplode(array({", ".join(_BAND_KEYS)})) b AS band, bkey
-)"""
-    else:
-        bands = "bands AS (" + "\n  UNION ALL ".join(
-            f"SELECT doc_id, {b} AS band, {k} AS bkey FROM minhash"
-            for b, k in enumerate(_BAND_KEYS)) + ")"
+    one hash aggregation on doc_id, one row per doc out. The minimums are
+    over BIGINT permutation values (one md5 per shingle -> 60-bit int ->
+    16 Carter-Wegman (a*x+b) mod P mixes), NOT over 16 md5 strings. Band
+    keys are projections, one UNION ALL branch per band."""
+    if dialect != "duck":
+        raise ValueError(f"minhash_lsh_sql: no {dialect!r} dialect")
+    shingle_with = f"{DUP_DOCS_CTE}, {WORDS_DUCK}, {SHINGLES_CTE}"
+    hashed = f"hashed AS (SELECT doc_id, {_HASHED_V['duck']} FROM shingles)"
+    bands = "bands AS (" + "\n  UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, {k} AS bkey FROM minhash"
+        for b, k in enumerate(_BAND_KEYS)) + ")"
     return f"""
 WITH {shingle_with},
 {hashed},

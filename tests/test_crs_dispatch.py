@@ -100,32 +100,40 @@ def test_antimeridian_split_extent():
     assert got.tolist() == [True, True, False, False]
 
 
+@pytest.mark.spark
 def test_spark_query_matches_numpy_dispatcher():
-    """The declarative broadcast-join plan in querylib's
-    ed50_regional_dispatch picks the same operation per point as the
-    numpy dispatcher restricted to the same (3-param) candidate table."""
-    from proj_spark.querylib import _ED50_CANDS
+    """crs.dispatch_geocentric, the Spark routing behind
+    ed50_regional_dispatch, over the query's own point generator at sf0.1
+    (20,000 pids): every point takes the operation the numpy
+    CrsToCrsDispatcher selects, points outside every extent included, and
+    its geocentric XYZ are that candidate's cart -> helmert legs."""
+    from proj_spark import querylib
+    from proj_spark.crs import dispatch_geocentric
+    from proj_spark.ops import Pipeline
+    from proj_spark.session import get_spark
 
-    # replicate the query's point generator for a sample of pids
-    pids = np.arange(1, 400)
-    lon = -10.0 + (pids * 2654435761) % 4000 / 100.0
-    lat = 36.0 + (pids * 2246822519) % 3400 / 100.0
-    # query-side selection: min rnk whose bbox contains, else rank 0
-    want = np.full(len(pids), _ED50_CANDS[0][1])
-    chosen = np.full(len(pids), np.inf)
-    for rnk, code, w, s, e, n, *_ in _ED50_CANDS:
-        m = (lon >= w) & (lon <= e) & (lat >= s) & (lat <= n) & (rnk < chosen)
-        chosen[m] = rnk
-        want[m] = code
+    spark = get_spark("crs_dispatch", cpus=2, shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    try:
+        querylib.register_views(spark, "/root/testdata/sf0.1")
+        pts = spark.sql(f"WITH {querylib._ED50_PTS} SELECT * FROM pts")
+        got = dispatch_geocentric(pts, 4230, 4326).join(pts, "pid").toPandas()
+    finally:
+        spark.stop()
+    assert len(got) == 20_000
+    lon, lat = got["lon"].to_numpy(), got["lat"].to_numpy()
     d = CrsToCrsDispatcher("EPSG:4230", "EPSG:4326")
-    query_codes = {r[1] for r in _ED50_CANDS}
+    assert (d._select(lon, lat) < 0).any()  # the fallback is exercised
     sel = d.select(lon, lat)
-    got = np.array([d.candidates[i]["codes"][0] for i in sel])
-    # wherever the dispatcher picked a candidate the query table carries
-    # (all single-leg non-kinematic Helmerts), they must agree exactly
-    m = np.isin(got, list(query_codes))
-    assert m.mean() > 0.95
-    assert (got[m] == want[m]).all()
+    want = np.array([d.candidates[i]["codes"][0] for i in sel])
+    assert (got["code"].to_numpy() == want).all()
+    for i in np.unique(sel):
+        m = sel == i
+        legs = Pipeline(d.candidates[i]["pipe"].steps[:2])
+        zero = np.zeros(m.sum())
+        xyz = legs.apply("forward", lon[m] * D, lat[m] * D, zero, zero)[:3]
+        for c, v in zip(("gx", "gy", "gz"), xyz):
+            assert np.abs(got[c].to_numpy()[m] - v).max() < 1e-6
 
 
 def test_dispatch_retry_on_grid_miss():

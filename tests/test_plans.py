@@ -83,8 +83,15 @@ def test_pip_join_is_broadcast(spark):
 
 
 def test_ed50_candidates_are_local_relation(spark):
-    _assert_local_build_side(
-        querylib.QUERIES["ed50_regional_dispatch"](spark, SF))
+    """ed50_regional_dispatch is JVM-only with broadcast candidates: the
+    rank join is a broadcast hash join, nothing sort-merges and no row
+    crosses into Python."""
+    df = querylib.QUERIES["ed50_regional_dispatch"](spark, SF)
+    _assert_local_build_side(df)
+    p = plan_of(df)
+    assert "BroadcastHashJoin" in p
+    assert "SortMergeJoin" not in p
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
 
 
 def test_repeated_calls_leave_no_temp_files(spark):
